@@ -71,10 +71,17 @@ def test_pagerank_releases_graph_pins(spark):
     assert _cache_manager_empty(spark), "dirty cache manager at entry"
     pr = pagerank(edges, iters=3)
     rows = pr.collect()
-    assert len(rows) == 40
-    assert abs(sum(r["pagerank"] for r in rows)) > 0
+    # src s always links to (7s + 3) % 40 (280 ≡ 0 mod 40), a permutation
+    # of the 40 nodes: every node has in- and out-degree 1, so each round
+    # maps 1/40 to 0.15/40 + 0.85 * 1/40 = 1/40 — the ranks stay uniform
+    assert {r["node"] for r in rows} == set(range(40))
+    assert all(r["pagerank"] == pytest.approx(0.025, abs=1e-10)
+               for r in rows)
     assert _cache_manager_empty(spark), \
         "pagerank leaked a static-graph pin"
+    with pytest.raises(ValueError, match="iters"):
+        pagerank(edges, iters=0)
+    assert _cache_manager_empty(spark), "iters=0 left a pin behind"
 
 
 def test_pagerank_values_stable_under_pin_scoping(spark):

@@ -2,14 +2,15 @@
 re-run-from-failed-task semantics, dags/walmart_etl_pipeline_dag.py:254-264,
 implemented in-repo — walmart_project_etl_spark/orchestrate.py)."""
 
+import os
+
 import pytest
 
 from walmart_project_etl_spark.orchestrate import (Stage, StageFailure,
                                                    pipeline_stages,
                                                    run_pipeline_resumable,
                                                    run_stages)
-
-CSV = "/root/reference/data/walmart_data.csv"
+from walmart_project_etl_spark.queries.pipeline import REFERENCE_CSV as CSV
 
 
 def test_retry_recovers_transient_failure():
@@ -68,6 +69,8 @@ def test_pipeline_resumes_from_failed_stage(spark, tmp_path):
     first two DAG stages, then invoke the resumable entry point and check
     it skips them and completes the remaining layers to the golden row
     count."""
+    if not os.path.exists(CSV):
+        pytest.skip(f"{CSV} absent")
     root = str(tmp_path / "wh")
     stages = pipeline_stages(spark, CSV, root, "2026-01-05", "B1")
     assert [s.name for s in stages] == [

@@ -7,15 +7,19 @@ sum(Sales)=14,915,600.82; sum(Profit)=1,521,767.96; sum(Qty)=214,777.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-CSV = "/root/reference/data/walmart_data.csv"
+from walmart_project_etl_spark.queries.pipeline import REFERENCE_CSV as CSV
 
 
 @pytest.fixture(scope="module")
 def warehouse(spark, tmp_path_factory):
     from walmart_project_etl_spark.pipeline import run_pipeline
+    if not os.path.exists(CSV):
+        pytest.skip(f"{CSV} absent")
     root = str(tmp_path_factory.mktemp("wpe_golden"))
     tgt = run_pipeline(spark, CSV, root, run_date="2025-01-01", batch_id="T1")
     return root, tgt

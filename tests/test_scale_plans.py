@@ -59,8 +59,11 @@ def test_fact_keys_have_no_global_window(spark):
     row_number window (the dims may — they are dimension-sized)."""
     from walmart_project_etl_spark.plans.ods import build_ods
     from walmart_project_etl_spark.plans.staging import build_stg_sales, build_staging
+    from walmart_project_etl_spark.queries.pipeline import REFERENCE_CSV
     from walmart_project_etl_spark.sources.ingest import read_source_csv
-    src = read_source_csv(spark, "/root/reference/data/walmart_data.csv")
+    if not os.path.exists(REFERENCE_CSV):
+        pytest.skip(f"{REFERENCE_CSV} absent")
+    src = read_source_csv(spark, REFERENCE_CSV)
     ods = build_ods(spark, src, run_date="2025-01-01")
     stg = build_staging(ods, "B", "2025-01-01")
     # the fact's own surrogate is a hash expression: selecting just key

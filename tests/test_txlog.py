@@ -165,6 +165,59 @@ def test_checkpoint_compaction(spark, orders, tmp_path):
     assert t.snapshot(2).count() == sum(b.count() for b in batches[:3])
 
 
+def _tear_checkpoint(log_dir: str, v: int) -> None:
+    """Cut checkpoint ``v`` in half mid-JSON (a crash mid-write)."""
+    path = os.path.join(log_dir, f"{v:08d}.checkpoint.json")
+    with open(path) as fh:
+        text = fh.read()
+    with open(path, "w") as fh:
+        fh.write(text[:len(text) // 2])
+
+
+def test_torn_checkpoint_falls_back_to_replay(spark, orders, tmp_path):
+    """A checkpoint that does not parse is skipped: state, the txn map
+    and the copy_into ledger come from the older checkpoint plus replay
+    and equal the answer before the tear (commits are never deleted)."""
+    land = tmp_path / "landing"
+    orders.where("o_orderkey % 4 = 1").coalesce(1).write.parquet(str(land))
+    t = TxTable(spark, str(tmp_path / "t"), checkpoint_interval=2)
+    t.create(orders.where("o_orderkey % 4 = 0"), "o_orderkey", n_files=2)
+    t.copy_into(str(land))                                       # v1
+    t.merge_upsert(orders.where("o_orderkey % 8 = 0")
+                   .withColumn("o_totalprice", F.lit(1.0)),
+                   txn=("app", 1))                               # v2 ck
+    t.append(orders.where("o_orderkey % 4 = 2"))                 # v3
+    t.merge_upsert(orders.where("o_orderkey % 4 = 3"),
+                   txn=("app", 2))                               # v4 ck
+    assert t._checkpoint_versions() == [2, 4]
+    cols = ["o_orderkey", "o_totalprice"]
+    before = (_rows(t.snapshot(), cols), t.last_txn("app"),
+              t.copied_files())
+    assert before[1] == 2 and len(before[2]) == 1
+    fresh = TxTable(spark, t.root)
+    for v in (4, 2):              # then no usable checkpoint: full replay
+        _tear_checkpoint(t.log_dir, v)
+        assert (_rows(fresh.snapshot(), cols), fresh.last_txn("app"),
+                fresh.copied_files()) == before
+    assert fresh.last_txn("app", version=3) == 1
+
+
+def test_checkpoint_is_fsynced_like_commits(spark, orders, tmp_path,
+                                            monkeypatch):
+    """Every log object is fsynced before it is published: a commit
+    that also writes a checkpoint makes exactly two fsync calls."""
+    t = TxTable(spark, str(tmp_path / "t"), checkpoint_interval=2)
+    t.create(orders.limit(5), "o_orderkey", n_files=1)
+    t.append(orders.limit(0))
+    calls: list[int] = []
+    real = os.fsync
+    monkeypatch.setattr(os, "fsync",
+                        lambda fd: (calls.append(fd), real(fd))[1])
+    t.append(orders.limit(0))                    # v2 + its checkpoint
+    assert t._checkpoint_versions() == [2]
+    assert len(calls) == 2, calls
+
+
 def test_scd1_merge_tx_matches_full_rewrite(spark, tmp_path):
     """SCD1 MERGE through the tx table (only touched rows computed and
     committed, file-pruned) must produce the same dimension as the
@@ -383,21 +436,21 @@ def test_scd2_merge_tx_matches_full_rewrite_and_preserves_files(
 
 
 def test_stats_col_date_band_skips_files(spark, tmp_path):
-    """Second-column data skipping: a table declaring stats_col (the BI
-    date) and ingested in date-clustered batches must answer a date-band
-    query by scanning ONLY the matching batches' files — and the stats
-    must survive rewrites (merge threads stats_col through)."""
+    """Second-column data skipping: a table declaring a stats column
+    (the BI date) and ingested in date-clustered batches must answer a
+    date-band query by scanning ONLY the matching batches' files — and
+    the stats must survive rewrites (merge threads stats_cols through)."""
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet") \
              .select("o_orderkey", "o_custkey", "o_totalprice",
                      "o_orderdate")
     t = TxTable(spark, str(tmp_path / "t"))
     t.create(o.where("o_orderdate <  TIMESTAMP '1996-01-01'"),
-             "o_orderkey", n_files=2, stats_col="o_orderdate")
+             "o_orderkey", n_files=2, stats_cols=["o_orderdate"])
     t.append(o.where("o_orderdate >= TIMESTAMP '1996-01-01' AND "
                      "o_orderdate < TIMESTAMP '1997-01-01'"))
     t.append(o.where("o_orderdate >= TIMESTAMP '1997-01-01'"))
     _, live = t._state()
-    assert all("smin" in a for a in live.values())
+    assert all("o_orderdate" in a["cstats"] for a in live.values())
     band = t.read_stats_range("1996-01-01 00:00:00", "1996-12-31 23:59:59")
     assert 0 < len(band.inputFiles()) < len(live)
     cols = ["o_orderkey", "o_totalprice"]
@@ -408,7 +461,7 @@ def test_stats_col_date_band_skips_files(spark, tmp_path):
     upd = o.limit(5).withColumn("o_totalprice", F.lit(2.5))
     t.merge_upsert(upd)
     _, live2 = t._state()
-    assert all("smin" in a for a in live2.values())
+    assert all("o_orderdate" in a["cstats"] for a in live2.values())
     # unbounded side + empty band
     assert t.read_stats_range(lo="1997-01-01 00:00:00").count() == \
         o.where("o_orderdate >= TIMESTAMP '1997-01-01'").count()
@@ -716,9 +769,12 @@ def test_catalog_checkpoint_bounds_listing_replay(spark, orders, tmp_path):
     from walmart_project_etl_spark.sources.txlog import TxCatalog
     small = orders.limit(3)
     cat = TxCatalog(spark, str(tmp_path / "cat"), checkpoint_interval=4)
-    # 13 catalog commits: create t0..t7, drop/purge t1 t3 t5, create t8
+    # 13 catalog commits: create t0..t7, publish a txn write to t0,
+    # drop/purge t1 t3 t5, create t8 — checkpoints at 4, 8 and 12
     for i in range(8):
         cat.create_table(f"t{i}", small, "o_orderkey", n_files=1)
+    with cat.begin() as txn:
+        txn.table("t0").append(small)
     for i in (1, 3, 5):
         cat.drop_table(f"t{i}", purge=True)
     cat.create_table("t8", small, "o_orderkey", n_files=1)
@@ -747,6 +803,13 @@ def test_catalog_checkpoint_bounds_listing_replay(spark, orders, tmp_path):
     # a re-written checkpoint for the same version is harmless
     fresh._maybe_checkpoint(max(fresh._ck_versions()))
     assert fresh.list_tables() == expect
+    # a torn newest checkpoint is skipped: the older one (which holds
+    # the published pin) plus replay gives the same listing and pins
+    assert fresh._pins() == ({"t0": 1}, {txn.id})
+    _tear_checkpoint(fresh.log_dir, max(fresh._ck_versions()))
+    torn = TxCatalog(spark, str(tmp_path / "cat"), checkpoint_interval=4)
+    assert torn.list_tables() == expect
+    assert torn._pins() == ({"t0": 1}, {txn.id})
 
 
 def test_over_cap_keyset_prunes_in_plan(spark, tmp_path, monkeypatch):
@@ -813,8 +876,7 @@ def test_stats_cols_list_prunes_on_second_column(spark, tmp_path):
     """Multi-column data skipping (VERDICT r8 task 5): a table declaring
     stats_cols=[date, custkey-band] prunes read_stats_range on EITHER
     column — file-count asserted — and merges thread the full column
-    list through to rewritten files. Legacy smin/smax still carries the
-    first column for v2-era readers."""
+    list through to rewritten files."""
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet") \
              .select("o_orderkey", "o_custkey", "o_totalprice",
                      "o_orderdate")
@@ -829,7 +891,8 @@ def test_stats_cols_list_prunes_on_second_column(spark, tmp_path):
                      "AND o_custkey < 75"))
     t.append(o.where("o_custkey >= 75"))
     _, live = t._state()
-    assert all("cstats" in a and "smin" in a for a in live.values())
+    assert all(set(a["cstats"]) == {"o_orderdate", "o_custkey"}
+               for a in live.values())
 
     # prune on the SECOND declared (non-key, non-first) column
     hi = t.read_stats_range(lo=75, col="o_custkey")

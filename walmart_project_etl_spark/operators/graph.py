@@ -200,6 +200,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Returns (node, pagerank double round-10).
     """
+    if iters < 1:
+        # zero rounds would return the unrounded 1/N seed as a lazy
+        # frame over pins the ``finally`` below has already released
+        raise ValueError(f"pagerank needs iters >= 1, got {iters}")
     # The edge table, node set and out-degree-weighted edges are read
     # EVERY round (plus the final left join): pin them once so the
     # rounds join cached blocks instead of replaying the distinct /

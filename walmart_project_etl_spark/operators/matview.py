@@ -315,12 +315,11 @@ def _pruned_group_rows(source, src_version, group_cols,
     values collect driver-side — metadata-plane: bounded by the number
     of groups whose extreme was deleted in one refresh window, the
     same order as the merge's own bloom-probe collect."""
-    from walmart_project_etl_spark.sources.txlog import (_meta_parts,
-                                                         _meta_stats_cols)
+    from walmart_project_etl_spark.sources.txlog import _meta_parts
 
     meta = source._state(src_version)[0]
     pcols = _meta_parts(meta) or []
-    scols = _meta_stats_cols(meta) or []
+    scols = meta.get("stats_cols") or []
     if list(group_cols) == pcols:
         vals = [tuple(r[c] for c in group_cols)
                 for r in rec_groups.collect()]

@@ -2073,10 +2073,10 @@ def txn_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o_orderdate < TIMESTAMP '1997-01-01'""")
 def txn_date_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-column data skipping on the log table: the table declares
-    ``stats_col=o_orderdate`` beside the merge key, ingest arrives in
-    date-clustered batches (the natural daily-append shape), and a BI
+    ``stats_cols=["o_orderdate"]`` beside the merge key, ingest arrives
+    in date-clustered batches (the natural daily-append shape), and a BI
     date-band read (``read_stats_range``) scans ONLY the files whose
-    [smin, smax] intersect the band — merge prunes on the key, reads
+    date [min, max] intersects the band — merge prunes on the key, reads
     prune on the date (tests/test_txlog.py asserts the file counts)."""
     import shutil
 
@@ -2088,7 +2088,7 @@ def txn_date_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     tt = TxTable(spark, root)
     tt.create(o.where("o_orderdate < TIMESTAMP '1996-01-01'"),
-              "o_orderkey", n_files=4, stats_col="o_orderdate")
+              "o_orderkey", n_files=4, stats_cols=["o_orderdate"])
     tt.append(o.where("o_orderdate >= TIMESTAMP '1996-01-01' AND "
                       "o_orderdate < TIMESTAMP '1997-01-01'"))
     tt.append(o.where("o_orderdate >= TIMESTAMP '1997-01-01'"))

@@ -1,7 +1,7 @@
 """End-to-end ETL pipeline queries on the reference CSV.
 
 These run the REAL plans (``sources.ingest`` → ``plans.ods`` →
-``plans.staging``) on ``/root/reference/data/walmart_data.csv`` and oracle
+``plans.staging``) on the reference CSV (``REFERENCE_CSV``) and oracle
 them against DuckDB reading the same CSV — the strongest correctness gate:
 every hash-key, mode-pick, rule derivation, and join in the lineage must
 match SQL recomputed from the raw file.
@@ -25,7 +25,11 @@ from walmart_project_etl_spark.functions import rules
 
 from .util import pinned
 
-REFERENCE_CSV = "/root/reference/data/walmart_data.csv"
+#: where the reference CSVs live — a deployment setting, overridden by
+#: ``$REFERENCE_DATA_DIR``
+REFERENCE_DATA_DIR = os.environ.get("REFERENCE_DATA_DIR",
+                                    "/root/reference/data")
+REFERENCE_CSV = os.path.join(REFERENCE_DATA_DIR, "walmart_data.csv")
 RUN_DATE = "2025-01-01"
 BATCH_ID = "BATCH_1"
 
@@ -656,8 +660,8 @@ def pipe_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(bool(vol["min_product_count"])).alias("product_volume_ok"))
 
 
-_SCD_V1 = "/root/reference/data/scd_test_corrected.csv"
-_SCD_V2 = "/root/reference/data/scd_test_2.csv"
+_SCD_V1 = os.path.join(REFERENCE_DATA_DIR, "scd_test_corrected.csv")
+_SCD_V2 = os.path.join(REFERENCE_DATA_DIR, "scd_test_2.csv")
 
 
 def _scd_fixture(spark: SparkSession) -> str:

@@ -29,8 +29,7 @@ methods).
 
 from __future__ import annotations
 
-from walmart_project_etl_spark.sources.txlog import (TxTable,
-                                                     _meta_stats_cols)
+from walmart_project_etl_spark.sources.txlog import TxTable, _cbounds
 
 
 def _range_overlap_fraction(bounds: list[tuple]) -> float:
@@ -73,23 +72,13 @@ def maintenance_plan(t: TxTable, target_rows: int = 1_000_000,
         plan.append({"action": "compact", "target_rows": target_rows,
                      "reason": f"{len(small)} files under "
                                f"{target_rows // 2} rows"})
-    cols = _meta_stats_cols(meta)
+    cols = meta.get("stats_cols")
     if cols:
-        # cstats are keyed by PHYSICAL names (stable across renames) —
-        # look them up through the mapping like every read path does,
-        # or a renamed stats column would silently stop advising
-        mp = meta.get("column_mapping") or {}
         worst, worst_frac = None, 0.0
-        for i, c in enumerate(cols):
-            pc = mp.get(c, c)
-            bounds = []
-            for a in live.values():
-                cs = a.get("cstats") or {}
-                if pc in cs:
-                    bounds.append(tuple(cs[pc]))
-                elif i == 0:
-                    bounds.append((a.get("smin"), a.get("smax")))
-            frac = _range_overlap_fraction(bounds)
+        for c in cols:
+            frac = _range_overlap_fraction(
+                [b for a in live.values()
+                 if (b := _cbounds(a, meta, c)) is not None])
             if frac > worst_frac:
                 worst, worst_frac = c, frac
         if worst is not None and worst_frac >= overlap_threshold:

@@ -48,16 +48,15 @@ Log listing is kept O(recent) by CHECKPOINT COMPACTION: every
 ``checkpoint_interval`` commits the writer also materializes the full
 live state into ``_txlog/<version>.checkpoint.json``; readers start from
 the newest checkpoint at-or-before their version and replay only the
-commits after it.
+commits after it; a checkpoint that does not parse is skipped in favour
+of an older one (commits are never deleted, so the fold is the same).
 
 Besides the merge key, a table may declare extra data-skipping COLUMNS
 (``create(..., stats_cols=[...])``, typically the BI date plus a region
 or category id): each ``add`` action then records every declared
 column's per-file [min, max] (``cstats``), and ``read_stats_range``
 prunes on any of them — the per-column min/max discipline of
-Delta/Iceberg. The first declared column doubles as the legacy
-``smin``/``smax`` fields (format v2, readable by v1-era readers since
-unknown fields are ignored and absent fields scan conservatively).
+Delta/Iceberg. Files without a column's stats scan conservatively.
 
 EXPLICIT additive schema evolution (``add_columns``) lands as a
 metadata-only commit: later reads surface pre-evolution files' missing
@@ -176,13 +175,14 @@ def _bloom_positions(key_col: str, bits: int = _BLOOM_BITS):
 _COL_BLOOM_BITS = 32768
 
 
-def _meta_stats_cols(meta: dict) -> list[str] | None:
-    """Declared data-skipping columns from the table meta — the
-    ``stats_cols`` list, or the legacy single ``stats_col`` field for
-    tables created before the list form existed."""
-    cols = meta.get("stats_cols") or \
-        ([meta["stats_col"]] if meta.get("stats_col") else [])
-    return cols or None
+def _cbounds(a: dict, meta: dict, col: str) -> tuple | None:
+    """Add-action ``a``'s recorded ``(min, max)`` of declared stats
+    column ``col``; None for a file written before ``col`` was declared.
+    ``cstats`` is keyed by PHYSICAL name (stable across renames), so
+    files written before a stats column's rename keep pruning."""
+    pcol = (meta.get("column_mapping") or {}).get(col, col)
+    b = (a.get("cstats") or {}).get(pcol)
+    return None if b is None else tuple(b)
 
 
 def _meta_parts(meta: dict) -> list[str] | None:
@@ -372,6 +372,59 @@ class UnsupportedTableFeatureError(RuntimeError):
         self.features = features
 
 
+def _put_if_absent(dst: str, text: str) -> bool:
+    """Publish ``text`` as ``dst`` unless ``dst`` already exists — the
+    one way every log object (commit, checkpoint, decision) lands. The
+    bytes are written and fsynced under a dot-prefixed ``.tmp-`` name in
+    the same directory (every log listing skips those), then
+    ``os.link``ed into place: the link is an atomic create that fails
+    when ``dst`` exists, so readers see the whole object or nothing and
+    exactly one racing writer wins. False when another writer won."""
+    d, name = os.path.split(dst)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, dst)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def _list_commits(log_dir: str) -> list[int]:
+    # strict NNNNNNNN.json match: in-flight temp files and checkpoints
+    # must never parse as commits
+    return sorted(int(f[:8]) for f in os.listdir(log_dir)
+                  if len(f) == 13 and f.endswith(".json")
+                  and f[:8].isdigit())
+
+
+def _list_checkpoints(log_dir: str) -> list[int]:
+    return sorted(int(f[:8]) for f in os.listdir(log_dir)
+                  if f.endswith(".checkpoint.json") and f[:8].isdigit())
+
+
+def _newest_checkpoint(log_dir: str, upto: int | None) -> tuple[int, dict]:
+    """``(version, payload)`` of the newest checkpoint at-or-before
+    ``upto`` that parses; ``(-1, {})`` when none does. A torn checkpoint
+    is skipped, never trusted: commit files are never deleted, so an
+    older checkpoint (or a full replay) folds to the same state."""
+    for v in reversed(_list_checkpoints(log_dir)):
+        if upto is not None and v > upto:
+            continue
+        try:
+            with open(os.path.join(log_dir,
+                                   f"{v:08d}.checkpoint.json")) as fh:
+                return v, json.load(fh)
+        except ValueError:
+            continue
+    return -1, {}
+
+
 def _read_decision(path: str) -> str | None:
     """Status of a transaction decision file — ``"committed"``,
     ``"aborted"``, or None while undecided. Decisions are immutable
@@ -387,20 +440,12 @@ def _read_decision(path: str) -> str | None:
 def _decide(path: str, status: str, extra: dict | None = None) -> str:
     """Atomically create the decision file with ``status``; if another
     actor already decided, return THEIR status (first create wins —
-    this single ``os.link`` is the 2PC commit point)."""
+    this single put-if-absent is the 2PC commit point)."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"status": status, "ts": time.time(), **(extra or {})}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, path)
+    if _put_if_absent(path, json.dumps(
+            {"status": status, "ts": time.time(), **(extra or {})})):
         return status
-    except FileExistsError:
-        return _read_decision(path)
-    finally:
-        os.unlink(tmp)
+    return _read_decision(path)
 
 
 class TxTable:
@@ -436,16 +481,10 @@ class TxTable:
     # ------------------------------------------------------------ log I/O
 
     def versions(self) -> list[int]:
-        # strict NNNNNNNN.json match: in-flight temp files (.tmp-*/.ck-*)
-        # and checkpoints must never parse as commits
-        return sorted(int(f[:8]) for f in os.listdir(self.log_dir)
-                      if len(f) == 13 and f.endswith(".json")
-                      and f[:8].isdigit())
+        return _list_commits(self.log_dir)
 
     def _checkpoint_versions(self) -> list[int]:
-        return sorted(int(f[:8]) for f in os.listdir(self.log_dir)
-                      if f.endswith(".checkpoint.json")
-                      and f[:8].isdigit())
+        return _list_checkpoints(self.log_dir)
 
     def _read_commit(self, v: int) -> list[dict]:
         with open(os.path.join(self.log_dir, f"{v:08d}.json")) as fh:
@@ -487,21 +526,16 @@ class TxTable:
             status = _decide(p["decision"], "aborted")
         return acts[1:] if status == "committed" else []
 
-    def _state(self, upto: int | None = None, mode: str = "strict"):
-        """(meta, {path: add-action}) at a version — starts from the
-        newest checkpoint at-or-before it (O(recent-commits) replay, not
+    def _replay(self, upto: int | None = None, mode: str = "strict"):
+        """``(meta, {path: add-action}, {app: batch}, copied)`` at a
+        version in ONE pass: the newest usable checkpoint at-or-before
+        it plus the commits after it (O(recent-commits), not
         O(history))."""
-        meta, live = None, {}
-        start = -1
-        cks = [v for v in self._checkpoint_versions()
-               if upto is None or v <= upto]
-        if cks:
-            with open(os.path.join(self.log_dir,
-                                   f"{cks[-1]:08d}.checkpoint.json")) as fh:
-                snap = json.load(fh)
-            meta = snap["meta"]
-            live = {a["path"]: a for a in snap["live"]}
-            start = cks[-1]
+        start, snap = _newest_checkpoint(self.log_dir, upto)
+        meta = snap.get("meta")
+        live = {a["path"]: a for a in snap.get("live", [])}
+        txns: dict[str, int] = dict(snap.get("txns", {}))
+        copied: set[str] = set(snap.get("copied", []))
         for v in self.versions():
             if v <= start or (upto is not None and v > upto):
                 continue
@@ -519,6 +553,18 @@ class TxTable:
                     tgt = live.get(a["dv"]["path"])
                     if tgt is not None:
                         tgt.setdefault("_dvs", []).append(a["dv"]["keys"])
+                elif "txn" in a:
+                    app, bt = a["txn"]["app"], a["txn"]["batch"]
+                    txns[app] = max(txns.get(app, -1), bt)
+                elif a.get("op") == "copy_into":
+                    copied.update(a["files"])
+        return meta, live, txns, copied
+
+    def _state(self, upto: int | None = None, mode: str = "strict"):
+        """(meta, {path: add-action}) at a version (see :meth:`_replay`);
+        fails loudly on a table needing reader features this build
+        lacks."""
+        meta, live, _, _ = self._replay(upto, mode)
         if meta is not None:
             unknown = set(meta.get("reader_features") or ()) \
                 - SUPPORTED_READER_FEATURES
@@ -527,26 +573,9 @@ class TxTable:
         return meta, live
 
     def _txns(self, upto: int | None = None, mode: str = "strict") -> dict:
-        """{app: highest committed batch id} at a version (checkpoint-
-        aware, like :meth:`_state`) — the exactly-once bookkeeping for
-        streaming sinks."""
-        txns: dict[str, int] = {}
-        start = -1
-        cks = [v for v in self._checkpoint_versions()
-               if upto is None or v <= upto]
-        if cks:
-            with open(os.path.join(self.log_dir,
-                                   f"{cks[-1]:08d}.checkpoint.json")) as fh:
-                txns = dict(json.load(fh).get("txns", {}))
-            start = cks[-1]
-        for v in self.versions():
-            if v <= start or (upto is not None and v > upto):
-                continue
-            for a in self._commit_actions(v, mode):
-                if "txn" in a:
-                    app, b = a["txn"]["app"], a["txn"]["batch"]
-                    txns[app] = max(txns.get(app, -1), b)
-        return txns
+        """{app: highest committed batch id} at a version — the
+        exactly-once bookkeeping for streaming sinks."""
+        return self._replay(upto, mode)[2]
 
     def last_txn(self, app: str, version: int | None = None) -> int:
         """Highest batch id committed under ``app`` (-1 if none).
@@ -566,24 +595,15 @@ class TxTable:
             #             staged writes — never checkpoint those; later
             #             writers checkpoint the post-decision state
         try:
-            meta, live = self._state(v)
-            txns = self._txns(v)           # resolve BEFORE the temp exists
-            copied = sorted(self.copied_files(v))
+            meta, live, txns, copied = self._replay(v)
         except TxnInDoubtError:
             return      # undecided pending ≤ v: checkpoints only ever
             #             capture decided prefixes — defer to a later one
-        tmp = os.path.join(self.log_dir, f".ck-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "meta": meta,
-                       "live": list(live.values()), "txns": txns,
-                       "copied": copied}, fh)
-        dst = os.path.join(self.log_dir, f"{v:08d}.checkpoint.json")
-        try:
-            os.link(tmp, dst)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        _put_if_absent(
+            os.path.join(self.log_dir, f"{v:08d}.checkpoint.json"),
+            json.dumps({"version": v, "meta": meta,
+                        "live": list(live.values()), "txns": txns,
+                        "copied": sorted(copied)}))
 
     def _commit(self, actions: list[dict], expected_version: int) -> bool:
         """Publish ``actions`` as ``expected_version``; False if another
@@ -619,21 +639,12 @@ class TxTable:
         actions = [{**a, "ts": now}
                    if "op" in a and "ts" not in a else a
                    for a in actions]
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
-        dst = os.path.join(self.log_dir, f"{expected_version:08d}.json")
-        try:
-            os.link(tmp, dst)         # atomic create — fails if dst exists
-            self._last_commit_version = expected_version
-            return True
-        except FileExistsError:
+        if not _put_if_absent(
+                os.path.join(self.log_dir, f"{expected_version:08d}.json"),
+                "".join(json.dumps(a) + "\n" for a in actions)):
             return False
-        finally:
-            os.unlink(tmp)
+        self._last_commit_version = expected_version
+        return True
 
     # ----------------------------------------------------------- data I/O
 
@@ -652,9 +663,7 @@ class TxTable:
         ``stats_cols`` (from the table meta) additionally records each
         declared column's per-file [min, max] — the BI-read data-skipping
         columns (date/timestamp values serialize as ISO strings, whose
-        lexical order matches their temporal order). The first declared
-        column's bounds also land as legacy ``smin``/``smax`` so
-        format-v2 readers keep pruning on it.
+        lexical order matches their temporal order).
 
         ``partition_by`` (from the table meta; a column name or a LIST
         of them) makes every data file PARTITION-PURE: the write goes
@@ -764,8 +773,8 @@ class TxTable:
             if dict(df.dtypes)[scol] not in (
                     "tinyint", "smallint", "int", "bigint", "string"):
                 sc = sc.cast("string")       # ISO serialization for JSON
-            extra += [F.min(sc).alias(f"__smin{i}"),
-                      F.max(sc).alias(f"__smax{i}"),
+            extra += [F.min(sc).alias(f"__cmin{i}"),
+                      F.max(sc).alias(f"__cmax{i}"),
                       # per-file NULL count (Delta's nullCount stats):
                       # lets IS NOT NULL reads skip all-null files
                       F.sum(F.col(scol).isNull().cast("long"))
@@ -892,10 +901,7 @@ class TxTable:
                 a["cblooms"] = {c: cblooms_by_file[c].get(p, "0")
                                 for c in bloom_cols}
             if stats_cols:
-                # legacy single-column fields (format-v2 readers prune
-                # on the first declared column) + the per-column map
-                a["smin"], a["smax"] = r["__smin0"], r["__smax0"]
-                a["cstats"] = {c: [r[f"__smin{i}"], r[f"__smax{i}"]]
+                a["cstats"] = {c: [r[f"__cmin{i}"], r[f"__cmax{i}"]]
                                for i, c in enumerate(stats_cols)}
                 a["cnulls"] = {c: r[f"__snull{i}"]
                                for i, c in enumerate(stats_cols)}
@@ -1081,34 +1087,21 @@ class TxTable:
         meta, live = self._state(version, self._read_mode(version))
         if meta is None:
             raise FileNotFoundError(f"no table at {self.root}")
-        declared = meta.get("stats_cols") or \
-            ([meta["stats_col"]] if meta.get("stats_col") else [])
+        declared = meta.get("stats_cols") or []
         if not declared:
-            raise ValueError(f"table at {self.root} declares no stats_col")
+            raise ValueError(f"table at {self.root} declares no stats_cols")
         if col is None:
             col = declared[0]
         if col not in declared:
             raise ValueError(
                 f"column '{col}' carries no stats (declared: {declared})")
 
-        # cstats are keyed by PHYSICAL name (stable across renames), so
-        # files written before a stats column's rename keep pruning
-        pcol = (meta.get("column_mapping") or {}).get(col, col)
-
-        def bounds(a: dict):
-            cs = a.get("cstats")
-            if cs is not None and pcol in cs:
-                return cs[pcol]
-            if col == declared[0]:               # legacy v2 fields
-                return a.get("smin"), a.get("smax")
-            return None, None                    # pre-declaration file
-
         def may_match(a: dict) -> bool:
-            smin, smax = bounds(a)
-            if smin is None:
+            b = _cbounds(a, meta, col)
+            if b is None or b[0] is None:
                 return True                      # no stats — scan
-            return not ((hi is not None and smin > hi)
-                        or (lo is not None and smax < lo))
+            return not ((hi is not None and b[0] > hi)
+                        or (lo is not None and b[1] < lo))
 
         files = [a for a in live.values() if may_match(a)]
         df = self._read_files(meta, files)
@@ -1266,8 +1259,7 @@ class TxTable:
             raise ValueError(
                 f"table at {self.root} is not partitioned — create it "
                 f"with partition_by=")
-        declared = meta.get("stats_cols") or \
-            ([meta["stats_col"]] if meta.get("stats_col") else [])
+        declared = meta.get("stats_cols") or []
         stats = stats or {}
         not_null = not_null or []
         unknown = [c for c in (*stats, *not_null) if c not in declared]
@@ -1279,15 +1271,6 @@ class TxTable:
 
         mp = meta.get("column_mapping") or {}
 
-        def cbounds(a: dict, col: str):
-            cs = a.get("cstats")
-            pcol = mp.get(col, col)    # cstats keyed by physical name
-            if cs is not None and pcol in cs:
-                return cs[pcol]
-            if declared and col == declared[0]:
-                return a.get("smin"), a.get("smax")
-            return None, None
-
         def survives(a: dict) -> bool:
             if pvals is not None and _layout_matches(a, meta) \
                     and _pval_tuple(a) not in pvals:
@@ -1296,11 +1279,11 @@ class TxTable:
                     (key_lo is not None and a["kmax"] < key_lo):
                 return False
             for col, (lo, hi) in stats.items():
-                smin, smax = cbounds(a, col)
-                if smin is None:
+                b = _cbounds(a, meta, col)
+                if b is None or b[0] is None:
                     continue                     # pre-declaration file
-                if (hi is not None and smin > hi) or \
-                        (lo is not None and smax < lo):
+                if (hi is not None and b[0] > hi) or \
+                        (lo is not None and b[1] < lo):
                     return False
             for col in not_null:
                 nulls = (a.get("cnulls") or {}).get(mp.get(col, col))
@@ -1455,7 +1438,6 @@ class TxTable:
 
     def create(self, df: DataFrame, key_col: str,
                n_files: int | None = None,
-               stats_col: str | None = None,
                stats_cols: list[str] | None = None,
                change_feed: bool = False,
                partition_by=None,
@@ -1464,17 +1446,14 @@ class TxTable:
                bloom_cols: list[str] | None = None,
                bloom_bits: int = _COL_BLOOM_BITS) -> None:
         """``stats_cols`` declares extra data-skipping COLUMNS beyond the
-        merge key (``stats_col`` remains as the single-column spelling):
-        every data file records each declared column's [min, max] in the
-        log, and :meth:`read_stats_range` prunes on ANY of them — the
-        read-side answer for BI filters (a date band, a region id) that
-        are not the merge key, matching how Delta/Iceberg keep per-column
-        min/max. Effective when ingest is naturally clustered on the
-        column (e.g. daily appends); the stats are always correct, just
-        not selective on unclustered data. Format v2 with the first
-        declared column doubling as the legacy ``smin``/``smax`` fields,
-        so v2-era readers keep pruning; v1 logs (no field) read
-        unchanged, their files simply never prune on stats.
+        merge key: every data file records each declared column's
+        [min, max] in the log, and :meth:`read_stats_range` prunes on
+        ANY of them — the read-side answer for BI filters (a date band,
+        a region id) that are not the merge key, matching how
+        Delta/Iceberg keep per-column min/max. Effective when ingest is
+        naturally clustered on the column (e.g. daily appends); the
+        stats are always correct, just not selective on unclustered
+        data. Files without stats simply never prune on them.
 
         ``change_feed=True`` enables Delta-CDF-style row-level change
         capture: every MERGE/DELETE commit also writes ``cdf`` change
@@ -1550,10 +1529,7 @@ class TxTable:
                                  "and identity")
             df = df.withColumn(identity_col,
                                F.monotonically_increasing_id())
-        if stats_col is not None and stats_cols is not None:
-            raise ValueError("pass stats_col OR stats_cols, not both")
-        cols = list(stats_cols) if stats_cols is not None else \
-            ([stats_col] if stats_col is not None else [])
+        cols = list(stats_cols or [])
         # stats ride in the JSON log and prune by <=/>= — integer and
         # string keys serialize and order identically in JSON and Spark;
         # float/decimal/date keys would need careful bound encoding
@@ -1573,7 +1549,6 @@ class TxTable:
             unknown = [c for c in cols if c not in df.columns]
             if unknown:
                 raise ValueError(f"unknown stats_cols {unknown}")
-            meta["stats_col"] = cols[0]          # legacy v2 field
             meta["stats_cols"] = cols
         if bloom_cols:
             unknown = [c for c in bloom_cols if c not in df.columns]
@@ -1784,11 +1759,10 @@ class TxTable:
             new_meta["column_mapping"] = mp
             if meta["key_col"] == old:
                 new_meta["key_col"] = new
-            scols = _meta_stats_cols(meta)
+            scols = meta.get("stats_cols")
             if scols and old in scols:
-                scols = [new if c == old else c for c in scols]
-                new_meta["stats_cols"] = scols
-                new_meta["stats_col"] = scols[0]
+                new_meta["stats_cols"] = [new if c == old else c
+                                          for c in scols]
             bcols = meta.get("bloom_cols")
             if bcols and old in bcols:
                 new_meta["bloom_cols"] = [new if c == old else c
@@ -1864,15 +1838,13 @@ class TxTable:
             ident = meta.get("identity")
             if ident and ident["col"] == name:
                 new_meta.pop("identity", None)   # the feature drops too
-            scols = _meta_stats_cols(meta)
+            scols = meta.get("stats_cols")
             if scols and name in scols:
                 scols = [c for c in scols if c != name]
                 if scols:
                     new_meta["stats_cols"] = scols
-                    new_meta["stats_col"] = scols[0]
                 else:
                     new_meta.pop("stats_cols", None)
-                    new_meta.pop("stats_col", None)
             bcols = meta.get("bloom_cols")
             if bcols and name in bcols:
                 bcols = [c for c in bcols if c != name]
@@ -2180,7 +2152,6 @@ class TxTable:
                 unknown = [c for c in stats_cols if c not in df.columns]
                 if unknown:
                     raise ValueError(f"unknown stats_cols {unknown}")
-                meta["stats_col"] = stats_cols[0]
                 meta["stats_cols"] = list(stats_cols)
             if partition_by is not None:
                 pcols = [partition_by] if isinstance(partition_by, str) \
@@ -2485,7 +2456,7 @@ class TxTable:
         if not merge_schema and not ident:
             df = self._check_schema(df, meta)
             adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             while True:
@@ -2513,7 +2484,7 @@ class TxTable:
                 meta2 = meta
             dfx = self._check_schema(dfx, meta2)
             adds = self._write_files(dfx, meta2["key_col"],
-                                     stats_cols=_meta_stats_cols(meta2),
+                                     stats_cols=meta2.get("stats_cols"),
                                      partition_by=meta2.get(
                                          "partition_by"), meta=meta2)
             if ident:
@@ -2535,36 +2506,12 @@ class TxTable:
     def copied_files(self, version: int | None = None) -> set[str]:
         """The file identities (``path|size|mtime_ms``) every
         ``copy_into`` commit at-or-before ``version`` has loaded — the
-        idempotence ledger. Checkpoint-aware like :meth:`_state`
-        (O(recent-commits) replay, not O(history)); checkpoints written
-        before the ledger existed fall back to a full replay. Note the
-        ledger is HISTORY, not state: a RESTORE does not erase it (the
-        same gotcha Delta documents for COPY INTO after RESTORE — pass
-        ``force=True`` to reload)."""
-        out: set[str] = set()
-        start = -1
-        cks = [v for v in self._checkpoint_versions()
-               if version is None or v <= version]
-        if cks:
-            with open(os.path.join(
-                    self.log_dir,
-                    f"{cks[-1]:08d}.checkpoint.json")) as fh:
-                snap = json.load(fh)
-            if "copied" in snap:         # pre-ledger checkpoints: replay
-                out = set(snap["copied"])
-                start = cks[-1]
-        for v in self.versions():
-            if v <= start or (version is not None and v > version):
-                continue
-            # decision-aware like every writer read: an ABORTED staged
-            # copy_into must not poison the ledger (its files were
-            # never visibly loaded), and an undecided one blocks like
-            # any strict read
-            acts = self._commit_actions(v, "strict")
-            op = next((a for a in acts if "op" in a), None)
-            if op and op["op"] == "copy_into":
-                out.update(op["files"])
-        return out
+        idempotence ledger, folded by :meth:`_replay` (decision-aware
+        like every writer read: an ABORTED staged copy_into never
+        poisons it). Note the ledger is HISTORY, not state: a RESTORE
+        does not erase it (the same gotcha Delta documents for COPY
+        INTO after RESTORE — pass ``force=True`` to reload)."""
+        return self._replay(version)[3]
 
     def copy_into(self, paths: list[str] | str, fmt: str = "parquet",
                   options: dict | None = None,
@@ -2629,7 +2576,7 @@ class TxTable:
                 reader = reader.schema(schema)
             df = self._check_schema(reader.load(todo), meta)
             adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             actions: list[dict] = [
@@ -2790,7 +2737,7 @@ class TxTable:
             else:
                 new_rows = updates
             adds = self._write_files(new_rows, key,
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             cdf = []
@@ -2932,7 +2879,7 @@ class TxTable:
                         | (F.col("tgt").isNull() & ins)).select("src.*"),
                 meta)
             adds = self._write_files(new_rows, key,
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             cdf: list[dict] = []
@@ -3028,7 +2975,7 @@ class TxTable:
             else:
                 new_rows = ups
             adds = self._write_files(new_rows, key,
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             cdf: list[dict] = []
@@ -3087,7 +3034,7 @@ class TxTable:
                     old = self._read_files(meta, touched)
                     adds = self._write_files(
                         old.join(keys, key, "left_anti"), key,
-                        stats_cols=_meta_stats_cols(meta),
+                        stats_cols=meta.get("stats_cols"),
                         partition_by=meta.get("partition_by"), meta=meta)
                     if meta.get("change_feed"):
                         cdf = self._write_cdf(
@@ -3320,7 +3267,7 @@ class TxTable:
         else:
             new_rows = kept
         adds = self._write_files(new_rows, key,
-                                 stats_cols=_meta_stats_cols(meta),
+                                 stats_cols=meta.get("stats_cols"),
                                  partition_by=meta.get("partition_by"),
                                  meta=meta)
         cdf: list[dict] = []
@@ -3363,7 +3310,7 @@ class TxTable:
                 return {"files_in": 0, "files_out": 0}
             df = self._read_files(meta, dirty)
             adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             v = base + 1
@@ -3446,7 +3393,7 @@ class TxTable:
         tval = next(iter(_norm_pvals([value], len(pcols))))
         df = self._check_schema(df, meta)
         adds = self._write_files(df, meta["key_col"],
-                                 stats_cols=_meta_stats_cols(meta),
+                                 stats_cols=meta.get("stats_cols"),
                                  partition_by=pcols, meta=meta)
         stray = sorted({_pval_tuple(a["add"]) for a in adds
                         if _pval_tuple(a["add"]) != tval})
@@ -3542,7 +3489,7 @@ class TxTable:
             n_out = max(1, -(-total // target_rows))
             df = self._read_files(meta, small)
             adds = self._write_files(df, meta["key_col"], n_files=n_out,
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
             v = base + 1
@@ -3584,7 +3531,7 @@ class TxTable:
         while True:
             base = self.versions()[-1]          # pinned read (see merge)
             meta, live = self._state(base)
-            declared = [meta["key_col"], *(_meta_stats_cols(meta) or [])]
+            declared = [meta["key_col"], *(meta.get("stats_cols") or [])]
             bad = [c for c in cols if c not in declared]
             if bad:
                 raise ValueError(
@@ -3627,7 +3574,7 @@ class TxTable:
             total = sum(a["rows"] for a in live.values())
             n_out = n_files or max(1, -(-total // target_rows))
             adds = self._write_files(df, meta["key_col"], n_files=n_out,
-                                     stats_cols=_meta_stats_cols(meta),
+                                     stats_cols=meta.get("stats_cols"),
                                      order_expr=z,
                                      partition_by=meta.get("partition_by"),
                                      meta=meta)
@@ -3806,7 +3753,7 @@ class TxTable:
 
         mcol = None                          # metadata accessor for col
         if col is not None:
-            scols = _meta_stats_cols(meta) or []
+            scols = meta.get("stats_cols") or []
             dtype = col_dtype(col)
             if dtype not in self._PUSHDOWN_TYPES:
                 raise ValueError(
@@ -3816,19 +3763,8 @@ class TxTable:
                 def mcol(a):
                     return a["kmin"], a["kmax"]
             elif col in scols:
-                # cstats are keyed by PHYSICAL name (stable across
-                # renames); legacy v2 files carry only smin/smax for
-                # the first declared column
-                pcol = (meta.get("column_mapping") or {}).get(col, col)
-                first = scols[0]
-
                 def mcol(a):
-                    cs = a.get("cstats")
-                    if cs is not None and pcol in cs:
-                        return tuple(cs[pcol])
-                    if col == first and "smin" in a:
-                        return a.get("smin"), a.get("smax")
-                    return None              # no bounds → read the file
+                    return _cbounds(a, meta, col)  # None → read the file
             else:
                 raise ValueError(
                     f"agg_pushdown: '{col}' is neither the key nor a "
@@ -4031,43 +3967,28 @@ class TxCatalog:
         os.makedirs(self.txn_dir, exist_ok=True)
 
     def _versions(self) -> list[int]:
-        return sorted(int(f[:8]) for f in os.listdir(self.log_dir)
-                      if len(f) == 13 and f.endswith(".json")
-                      and f[:8].isdigit())
-
-    def _commit(self, action: dict, v: int) -> bool:
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(action) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
-        dst = os.path.join(self.log_dir, f"{v:08d}.json")
-        try:
-            os.link(tmp, dst)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return _list_commits(self.log_dir)
 
     def _ck_versions(self) -> list[int]:
-        return sorted(int(f[:8]) for f in os.listdir(self.log_dir)
-                      if f.endswith(".checkpoint.json")
-                      and f[:8].isdigit())
+        return _list_checkpoints(self.log_dir)
 
-    def _replay(self, upto: int | None = None) -> dict[str, dict]:
-        """{name: create-action} of the LIVE tables at a version — newest
-        checkpoint at-or-before it + replay of only the commits after
-        (O(recent), mirroring ``TxTable._state``)."""
-        live: dict[str, dict] = {}
-        start = -1
-        cks = [v for v in self._ck_versions()
-               if upto is None or v <= upto]
-        if cks:
-            with open(os.path.join(self.log_dir,
-                                   f"{cks[-1]:08d}.checkpoint.json")) as fh:
-                live = {a["name"]: a for a in json.load(fh)["live"]}
-            start = cks[-1]
+    def _commit(self, action: dict, v: int) -> bool:
+        return _put_if_absent(os.path.join(self.log_dir, f"{v:08d}.json"),
+                              json.dumps(action) + "\n")
+
+    def _replay(self, upto: int | None = None) \
+            -> tuple[dict[str, dict], dict[str, int], set[str]]:
+        """``({name: create-action} of the LIVE tables, {table: pinned
+        version}, {published txn ids})`` at a catalog version in ONE
+        pass: the newest usable checkpoint at-or-before it plus the
+        commits after it (O(recent), mirroring ``TxTable._replay``).
+        The pins are the consistent-cut watermark maintained by
+        committed cross-table transactions' ``publish`` entries;
+        dropping a table clears its pin."""
+        start, snap = _newest_checkpoint(self.log_dir, upto)
+        live = {a["name"]: a for a in snap.get("live", [])}
+        pins: dict[str, int] = dict(snap.get("pins", {}))
+        published: set[str] = set(snap.get("published", []))
         for v in self._versions():
             if v <= start or (upto is not None and v > upto):
                 continue
@@ -4080,52 +4001,26 @@ class TxCatalog:
                         live[a["name"]] = a
                     elif a["op"] == "drop_table":
                         live.pop(a["name"], None)
+                        pins.pop(a["name"], None)
                     elif a["op"] == "rename_table":
                         ent = live.pop(a["from"], None)
                         if ent is not None:
                             live[a["to"]] = {**ent, "name": a["to"],
                                              "dir": ent.get("dir",
                                                             a["from"])}
-        return live
+                        if a["from"] in pins:
+                            pins[a["to"]] = pins.pop(a["from"])
+                    elif a["op"] == "publish":
+                        published.add(a["txn"])
+                        pins.update(a["tables"])
+        return live, pins, published
 
-    def _entries(self) -> dict[str, dict]:
-        return self._replay()
+    def _entries(self, upto: int | None = None) -> dict[str, dict]:
+        return self._replay(upto)[0]
 
     def _pins(self, upto: int | None = None) \
             -> tuple[dict[str, int], set[str]]:
-        """({table: pinned version}, {published txn ids}) at a catalog
-        version — the consistent-cut watermark maintained by committed
-        cross-table transactions' ``publish`` entries. Checkpoint-aware
-        like :meth:`_replay`; dropping a table clears its pin."""
-        pins: dict[str, int] = {}
-        published: set[str] = set()
-        start = -1
-        cks = [v for v in self._ck_versions()
-               if upto is None or v <= upto]
-        if cks:
-            with open(os.path.join(self.log_dir,
-                                   f"{cks[-1]:08d}.checkpoint.json")) as fh:
-                snap = json.load(fh)
-            pins = dict(snap.get("pins", {}))
-            published = set(snap.get("published", []))
-            start = cks[-1]
-        for v in self._versions():
-            if v <= start or (upto is not None and v > upto):
-                continue
-            with open(os.path.join(self.log_dir, f"{v:08d}.json")) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    a = json.loads(line)
-                    if a["op"] == "publish":
-                        published.add(a["txn"])
-                        pins.update(a["tables"])
-                    elif a["op"] == "drop_table":
-                        pins.pop(a["name"], None)
-                    elif a["op"] == "rename_table":
-                        if a["from"] in pins:
-                            pins[a["to"]] = pins.pop(a["from"])
-        return pins, published
+        return self._replay(upto)[1:]
 
     def _maybe_checkpoint(self, v: int) -> None:
         """Materialize the live table map (and transaction pins) beside
@@ -4134,26 +4029,17 @@ class TxCatalog:
         double-write is harmless)."""
         if v == 0 or v % self.checkpoint_interval != 0:
             return
-        live = self._replay(v)
-        pins, published = self._pins(v)
-        tmp = os.path.join(self.log_dir, f".ck-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "live": list(live.values()),
-                       "pins": pins, "published": sorted(published)}, fh)
-        dst = os.path.join(self.log_dir, f"{v:08d}.checkpoint.json")
-        try:
-            os.link(tmp, dst)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        live, pins, published = self._replay(v)
+        _put_if_absent(
+            os.path.join(self.log_dir, f"{v:08d}.checkpoint.json"),
+            json.dumps({"version": v, "live": list(live.values()),
+                        "pins": pins, "published": sorted(published)}))
 
     def list_tables(self) -> list[str]:
         return sorted(self._entries())
 
     def create_table(self, name: str, df: DataFrame, key_col: str,
                      n_files: int | None = None,
-                     stats_col: str | None = None,
                      change_feed: bool = False) -> TxTable:
         if not self._NAME_OK.match(name):
             raise ValueError(f"bad table name {name!r}")
@@ -4177,7 +4063,7 @@ class TxCatalog:
             dirname = f"{name}-{uuid.uuid4().hex[:8]}"
             path = os.path.join(self.tables_dir, dirname)
         t = TxTable(self.spark, path)
-        t.create(df, key_col, n_files, stats_col,
+        t.create(df, key_col, n_files,
                  change_feed=change_feed)           # settles name races
         while True:
             v = (self._versions() or [-1])[-1] + 1
@@ -4206,7 +4092,7 @@ class TxCatalog:
             raise ValueError(f"bad table name {new!r}")
         while True:
             v = self._versions()[-1] + 1
-            entries = self._replay(v - 1)
+            entries = self._entries(v - 1)
             if old not in entries:
                 raise KeyError(f"no such table {old!r}")
             if new in entries:
