@@ -73,27 +73,85 @@ def test_volume_gates(warehouse, spark):
     assert vols["min_store_count"] and vols["min_returns_months"]
 
 
+def _mini_ods(spark, **rows):
+    """FK-only ODS frames that pass every FK check; ``rows`` replaces a
+    table's rows to break one check."""
+    data = {
+        "ods_sales": [("S1", "P1", "ST1", "C1", "2012-01-02")],
+        "ods_product": [("P1", "SUP1")],
+        "ods_store": [("ST1",)],
+        "ods_customer": [("C1",)],
+        "ods_date": [(20120102,)],
+        "ods_supplier": [("SUP1",)],
+        "ods_return_reason": [("R1",)],
+        "ods_returns": [("S1", "R1", "P1", "ST1")],
+        "ods_inventory": [("P1", "ST1")],
+    } | rows
+    schemas = {
+        "ods_sales": "sale_id string, product_id string, store_id string, "
+                     "customer_id string, d string",
+        "ods_product": "product_id string, supplier_id string",
+        "ods_store": "store_id string",
+        "ods_customer": "customer_id string",
+        "ods_date": "date_id int",
+        "ods_supplier": "supplier_id string",
+        "ods_return_reason": "reason_code string",
+        "ods_returns": "original_sale_id string, reason_code string, "
+                       "product_id string, store_id string",
+        "ods_inventory": "product_id string, store_id string",
+    }
+    ods = {n: spark.createDataFrame(data[n], schemas[n]) for n in data}
+    ods["ods_sales"] = ods["ods_sales"].select(
+        "*", F.col("d").cast("date").alias("transaction_date")).drop("d")
+    return ods
+
+
 def test_quality_catches_violation(spark):
     from walmart_project_etl_spark.quality import fk_checks
-    ods = {
-        "ods_sales": spark.createDataFrame(
-            [("S1", "P1", "ST1", "C1", "2012-01-02")],
-            "sale_id string, product_id string, store_id string, "
-            "customer_id string, d string")
-        .select("*", F.col("d").cast("date").alias("transaction_date")).drop("d"),
-        "ods_product": spark.createDataFrame(
-            [("P_OTHER", "SUP1")], "product_id string, supplier_id string"),
-        "ods_store": spark.createDataFrame([("ST1",)], "store_id string"),
-        "ods_customer": spark.createDataFrame([("C1",)], "customer_id string"),
-        "ods_date": spark.createDataFrame([(20120102,)], "date_id int"),
-        "ods_supplier": spark.createDataFrame([("SUP1",)], "supplier_id string"),
-        "ods_return_reason": spark.createDataFrame([("R1",)], "reason_code string"),
-        "ods_returns": spark.createDataFrame(
-            [("S1", "R1", "P_OTHER", "ST1")],
-            "original_sale_id string, reason_code string, product_id string, store_id string"),
-        "ods_inventory": spark.createDataFrame(
-            [("P_OTHER", "ST1")], "product_id string, store_id string"),
+    # each case breaks exactly one FK check; NULL keys count as violations
+    cases = {
+        None: {},
+        "sales_product_fk": {"ods_sales": [("S1", "P2", "ST1", "C1", "2012-01-02")]},
+        "sales_store_fk": {"ods_sales": [("S1", "P1", None, "C1", "2012-01-02")]},
+        "sales_customer_fk": {"ods_sales": [("S1", "P1", "ST1", "C2", "2012-01-02")]},
+        "sales_date_fk": {"ods_sales": [("S1", "P1", "ST1", "C1", "2012-01-03")]},
+        "product_supplier_fk": {"ods_product": [("P1", "SUP2")]},
+        "returns_sale_fk": {"ods_returns": [("S2", "R1", "P1", "ST1")]},
+        "returns_reason_fk": {"ods_returns": [("S1", None, "P1", "ST1")]},
+        "inventory_product_store_fk": {"ods_inventory": [("P1", "ST1"),
+                                                         ("P2", "ST2")]},
     }
-    results = {r["check"]: r["passed"] for r in fk_checks(spark, ods).collect()}
-    assert results["sales_product_fk"] is False   # P1 not in dim
-    assert results["sales_store_fk"] is True
+    for broken, rows in cases.items():
+        results = {r["check"]: (r["value"], r["passed"])
+                   for r in fk_checks(spark, _mini_ods(spark, **rows)).collect()}
+        assert len(results) == 8
+        expected = {name: (0, True) for name in results}
+        if broken is not None:
+            expected[broken] = (2 if broken.startswith("inventory") else 1,
+                                False)
+        assert results == expected, broken
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution. Ids are sequential; the store's
+    execution count is not a counter, it stops at the retained maximum."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(max(store.executionsCount() - 1, 0), 1)
+    return last.apply(0).executionId() if last.size() else -1
+
+
+def test_assert_quality_is_one_query_naming_failed_volume_checks(spark):
+    from walmart_project_etl_spark.quality import assert_quality
+    ods = _mini_ods(spark)
+    ods["ods_returns"] = ods["ods_returns"].withColumn(
+        "return_date", F.lit("2012-01-02").cast("date"))
+    ods["ods_inventory"] = ods["ods_inventory"].withColumn(
+        "inventory_date", F.lit("2012-01-02").cast("date"))
+    before = _last_execution_id(spark)
+    with pytest.raises(AssertionError) as err:
+        assert_quality(spark, ods)
+    assert _last_execution_id(spark) - before == 1
+    assert str(err.value) == (
+        "quality checks failed: ['min_sales_volume', 'min_product_count', "
+        "'min_store_count', 'min_returns_months']")

@@ -74,8 +74,14 @@ def fiscal_quarter(col: Column | str) -> Column:
 
 def safe_int_cast(col: Column | str) -> Column:
     """F7: string → int with null-on-failure (reference
-    ``etl_staging_loader.py:270-278`` try/except → None)."""
-    return _c(col).cast("string").try_cast("double").cast("int")
+    ``etl_staging_loader.py:270-278`` try/except → None).
+
+    Spark's cast trims every character ≤ 0x20 while Python's ``float()``
+    strips only whitespace, so a string holding any other control
+    character is a failed parse: NULL."""
+    s = _c(col).cast("string")
+    return F.when(~s.rlike(r"[\x00-\x08\x0e-\x1f]"),
+                  s.try_cast("double").cast("int"))
 
 
 def age_group(age: Column | str) -> Column:

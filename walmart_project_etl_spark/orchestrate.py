@@ -117,9 +117,8 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
                     clear_staging: bool = False) -> list[Stage]:
     """Decompose the daily run into the reference DAG's task boundaries.
 
-    Unlike :func:`pipeline.run_pipeline` (one in-memory pass), every stage
-    here RELOADS its inputs from the warehouse, so any stage can run in a
-    fresh process — the property resume needs.
+    Every stage RELOADS its inputs from the warehouse, so any stage can
+    run in a fresh process — the property resume needs.
     """
     from walmart_project_etl_spark.pipeline import (TARGET_TABLES,
                                                     _parallel_writes)
@@ -160,12 +159,21 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
         # duration here so a live run's in-flight staging survives.
         wh.vacuum_staged("tgt")
         stg = {n: wh.read("stg", n) for n in STG_TABLES}
+        # incremental: prior target state feeds the SCD1 merges and SCD2
+        # version history
         prior = ({n: wh.read("tgt", n) for n in TARGET_TABLES}
                  if all(wh.exists("tgt", n) for n in TARGET_TABLES) else None)
         tgt = build_target(stg, prior, run_date=run_date, batch_id=batch_id)
+        # Two-phase commit via the Warehouse seam: every target plan reads
+        # the PRIOR dim/fact files (SCD merges, fact interval joins), so
+        # stage all new tables first, then swap — replacing any table in
+        # place would delete files a later plan still needs.
 
         def write_new(name: str, df: DataFrame) -> None:
             if name.startswith("tgt_fact_") and prior is not None:
+                # D3 fact append, made idempotent: drop this batch's prior
+                # rows first (overwrite-by-batch beats the reference's
+                # duplicate-on-rerun, etl_target_loader.py:1023-1030)
                 existing = wh.read("tgt", name) \
                              .where(f"etl_batch_id <> '{batch_id}'")
                 df = existing.unionByName(df)

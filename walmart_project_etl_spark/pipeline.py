@@ -15,12 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from walmart_project_etl_spark.plans.ods import build_ods
-from walmart_project_etl_spark.plans.staging import build_staging
-from walmart_project_etl_spark.plans.target import build_target
-from walmart_project_etl_spark.quality import assert_quality
+from walmart_project_etl_spark.orchestrate import pipeline_stages, run_stages
 from walmart_project_etl_spark.sources.catalog import Warehouse
-from walmart_project_etl_spark.sources.ingest import read_source_csv
 
 TARGET_TABLES = ("tgt_dim_date", "tgt_dim_customer", "tgt_dim_supplier",
                  "tgt_dim_return_reason", "tgt_dim_product", "tgt_dim_store",
@@ -46,51 +42,14 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse_root: str,
                  run_date: str, batch_id: str, seed: int = 42,
                  enforce_quality: bool = True,
                  clear_staging: bool = False) -> dict[str, DataFrame]:
-    """One full daily run. Returns the target-layer DataFrames (read back
-    from the warehouse, so callers see exactly what was persisted)."""
+    """One full daily run: the stages of
+    :func:`orchestrate.pipeline_stages`, without retries or resume markers
+    (a failing stage raises :class:`orchestrate.StageFailure`). Returns the
+    target-layer DataFrames (read back from the warehouse, so callers see
+    exactly what was persisted)."""
+    run_stages(pipeline_stages(spark, csv_path, warehouse_root, run_date,
+                               batch_id, seed=seed,
+                               enforce_quality=enforce_quality,
+                               clear_staging=clear_staging), retries=0)
     wh = Warehouse(spark, warehouse_root)
-
-    # CSV → ODS (reference etl_ods_loader.main)
-    src = read_source_csv(spark, csv_path)
-    ods = build_ods(spark, src, run_date=run_date, seed=seed)
-    _parallel_writes(
-        (lambda n=n, d=d: wh.write("ods", n, d)) for n, d in ods.items())
-    ods = {name: wh.read("ods", name) for name in ods}
-
-    if enforce_quality:
-        assert_quality(spark, ods)  # 8 FK anti-joins + volume gates
-
-    # ODS → Staging (reference load_staging_layer)
-    stg = build_staging(ods, batch_id=batch_id, run_date=run_date)
-    _parallel_writes(
-        (lambda n=n, d=d: wh.write("stg", n, d)) for n, d in stg.items())
-    stg = {name: wh.read("stg", name) for name in stg}
-
-    # Staging → Target (reference etl_target_loader.main); incremental:
-    # prior target state feeds the SCD1 merges and SCD2 version history
-    prior = ({name: wh.read("tgt", name) for name in TARGET_TABLES}
-             if all(wh.exists("tgt", name) for name in TARGET_TABLES) else None)
-    tgt = build_target(stg, prior, run_date=run_date, batch_id=batch_id)
-    # Two-phase commit via the Warehouse seam: every target plan reads the
-    # PRIOR dim/fact files (SCD merges, fact interval joins), so stage all
-    # new tables first, then swap — replacing any table in place would
-    # delete files a later plan still needs.
-
-    def write_new(name: str, df: DataFrame) -> None:
-        if name.startswith("tgt_fact_") and prior is not None:
-            # D3 fact append, made idempotent: drop this batch's prior rows
-            # first (overwrite-by-batch beats the reference's acknowledged
-            # duplicate-on-rerun, etl_target_loader.py:1023-1030)
-            existing = wh.read("tgt", name).where(f"etl_batch_id <> '{batch_id}'")
-            df = existing.unionByName(df)
-        wh.stage_new("tgt", name, df)
-
-    _parallel_writes(
-        (lambda n=n, d=d: write_new(n, d)) for n, d in tgt.items())
-    wh.commit_staged("tgt", tgt.keys())
-    tgt = {name: wh.read("tgt", name) for name in TARGET_TABLES}
-
-    if clear_staging:  # S7 post-load truncate (reference DAG :153-178)
-        for name in stg:
-            wh.truncate("stg", name)
-    return tgt
+    return {name: wh.read("tgt", name) for name in TARGET_TABLES}

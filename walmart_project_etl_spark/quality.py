@@ -1,4 +1,4 @@
-"""Data-quality gates: referential-integrity anti-joins, volume thresholds,
+"""Data-quality gates: referential-integrity checks, volume thresholds,
 and distribution ratio checks.
 
 The reference prints these (``verify_data_loading``,
@@ -6,100 +6,137 @@ The reference prints these (``verify_data_loading``,
 ``etl_staging_loader.py:1315-1383``) — here they are hard, assertable
 checks returning one row per check so a pipeline can gate on them.
 
-Every check is a single anti-join count or aggregate — shuffle-free where a
-broadcast covers the dim side; at 100 TB each FK check is one scan of the
-fact with a broadcast hash probe.
+The FK and volume checks run as ONE query: each source table is left-joined
+to a flagged distinct key set of every dim it references and aggregated
+once (a NULL flag is a violation), and the single-row aggregates are
+cross-joined and collected in one action. The gate thus costs one scan
+per source table with broadcast hash probes — not one eager job per
+check — and the check rows are built on the driver from that one row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from walmart_project_etl_spark.functions.keys import date_id_from_parts
 
 
-def _check(spark: SparkSession, name: str, value, threshold, passed) -> DataFrame:
-    return spark.createDataFrame(
-        [(name, int(value), float(threshold), bool(passed))],
-        "check string, value long, threshold double, passed boolean")
+# (check, fact table, fact key, dim table, dim key, broadcast the dim side).
+# Broadcast only genuinely dimension-sized key sets: returns→sales is
+# fact-to-fact, so AQE picks its join strategy — force-broadcasting a
+# fact-sized key set would OOM the driver at scale.
+_FK = (
+    ("sales_product_fk", "ods_sales", "product_id", "ods_product", "product_id", True),
+    ("sales_store_fk", "ods_sales", "store_id", "ods_store", "store_id", True),
+    ("sales_customer_fk", "ods_sales", "customer_id", "ods_customer", "customer_id", True),
+    # date check via reconstructed YYYYMMDD id (reference :928-936, F29)
+    ("sales_date_fk", "ods_sales", "date_id", "ods_date", "date_id", True),
+    ("product_supplier_fk", "ods_product", "supplier_id", "ods_supplier", "supplier_id", True),
+    ("returns_sale_fk", "ods_returns", "original_sale_id", "ods_sales", "sale_id", False),
+    ("returns_reason_fk", "ods_returns", "reason_code", "ods_return_reason", "reason_code", True),
+    ("inventory_product_fk", "ods_inventory", "product_id", "ods_product", "product_id", True),
+    ("inventory_store_fk", "ods_inventory", "store_id", "ods_store", "store_id", True),
+)
+
+# (check, threshold): the reference's volume acceptance minimums
+_VOLUME = (("min_sales_volume", 5000), ("min_product_count", 1000),
+           ("min_store_count", 100), ("min_returns_months", 3),
+           ("inventory_snapshot_days", 1))
+
+_SCHEMA = "check string, value long, threshold double, passed boolean"
 
 
-def _anti_count(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
-                broadcast_dim: bool = True) -> int:
-    """J3: rows of ``fact`` whose key has no match in ``dim``.
+def _fk_aggs(ods: dict[str, DataFrame]) -> tuple[dict[str, DataFrame],
+                                                  dict[str, list[Column]]]:
+    """Per fact table: the fact left-joined to the flagged distinct key set
+    of every dim it references, and one violation count per FK.
 
-    ``broadcast_dim`` must only be True for genuinely dimension-sized
-    tables; fact-to-fact checks (e.g. returns→sales) pass False so AQE
-    picks the join strategy — force-broadcasting a fact-sized key set
-    would OOM the driver at scale.
-    """
-    d = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    if broadcast_dim:
-        d = F.broadcast(d)
-    return fact.join(d, fact_key, "left_anti").count()
+    A fact key with no dim match — a NULL key included — leaves its flag
+    NULL, exactly the rows a ``left_anti`` join keeps. The dim side is
+    distinct, so the joins never multiply fact rows: the joined frame
+    still answers the table's volume aggregates."""
+    frames: dict[str, DataFrame] = {}
+    aggs: dict[str, list[Column]] = {}
+    for check, fact, fact_key, dim, dim_key, broadcast in _FK:
+        if fact not in frames:
+            frames[fact] = ods[fact]
+            if fact == "ods_sales":
+                frames[fact] = frames[fact].withColumn(
+                    "date_id", date_id_from_parts("transaction_date"))
+        flag = f"_{check}"
+        keys = (ods[dim].select(F.col(dim_key).alias(fact_key)).distinct()
+                .withColumn(flag, F.lit(True)))
+        frames[fact] = frames[fact].join(
+            F.broadcast(keys) if broadcast else keys, fact_key, "left")
+        aggs.setdefault(fact, []).append(
+            F.count_if(F.col(flag).isNull()).alias(check))
+    return frames, aggs
+
+
+def _volume_aggs() -> dict[str, list[Column]]:
+    """Per source table: the aggregates the volume minimums compare."""
+    def months(c: Column) -> Column:
+        return F.year(c) * 12 + F.month(c)
+
+    n = F.count(F.lit(1))
+    return {
+        "ods_sales": [n.alias("min_sales_volume")],
+        "ods_product": [n.alias("min_product_count")],
+        "ods_store": [n.alias("min_store_count")],
+        "ods_returns": [(months(F.max("return_date")) - months(F.min("return_date")))
+                        .alias("min_returns_months")],
+        "ods_inventory": [F.countDistinct("inventory_date")
+                          .alias("inventory_snapshot_days")],
+    }
+
+
+def _measure(ods: dict[str, DataFrame], frames: dict[str, DataFrame],
+             *groups: dict[str, list[Column]]) -> dict:
+    """Every aggregate of ``groups`` in ONE Spark action: one aggregate per
+    source table (over its FK-joined frame in ``frames``, if any), the
+    single-row results cross-joined and collected once."""
+    aggs: dict[str, list[Column]] = {}
+    for group in groups:
+        for table, cols in group.items():
+            aggs.setdefault(table, []).extend(cols)
+    row = None
+    for table, cols in aggs.items():
+        one = frames.get(table, ods[table]).agg(*cols)
+        row = one if row is None else row.crossJoin(one)
+    return row.collect()[0].asDict()
+
+
+def _fk_rows(m: dict) -> list[tuple]:
+    """One row per reference FK check; inventory's product and store
+    checks gate together, as in the reference."""
+    value = {c[0]: m[c[0]] for c in _FK if not c[0].startswith("inventory_")}
+    value["inventory_product_store_fk"] = (m["inventory_product_fk"]
+                                           + m["inventory_store_fk"])
+    return [(n, v, 0.0, v == 0) for n, v in value.items()]
+
+
+def _volume_rows(m: dict) -> list[tuple]:
+    rows = []
+    for name, threshold in _VOLUME:
+        value = m[name] or 0   # no returns: the month span is NULL
+        rows.append((name, value, float(threshold), value >= threshold))
+    return rows
 
 
 def fk_checks(spark: SparkSession, ods: dict[str, DataFrame]) -> DataFrame:
-    """The reference's 8 referential-integrity anti-join checks
+    """The reference's 8 referential-integrity checks
     (``etl_ods_loader.py:904-982``), as hard zero-violation gates."""
-    sales, returns, inv = ods["ods_sales"], ods["ods_returns"], ods["ods_inventory"]
-    checks = [
-        ("sales_product_fk",
-         _anti_count(sales, ods["ods_product"], "product_id", "product_id")),
-        ("sales_store_fk",
-         _anti_count(sales, ods["ods_store"], "store_id", "store_id")),
-        ("sales_customer_fk",
-         _anti_count(sales, ods["ods_customer"], "customer_id", "customer_id")),
-        # date check via reconstructed YYYYMMDD id (reference :928-936, F29)
-        ("sales_date_fk",
-         _anti_count(sales.withColumn("date_id", date_id_from_parts("transaction_date")),
-                     ods["ods_date"], "date_id", "date_id")),
-        ("product_supplier_fk",
-         _anti_count(ods["ods_product"], ods["ods_supplier"],
-                     "supplier_id", "supplier_id")),
-        ("returns_sale_fk",  # fact-to-fact: sale_id set is fact-sized, no broadcast
-         _anti_count(returns, sales, "original_sale_id", "sale_id",
-                     broadcast_dim=False)),
-        ("returns_reason_fk",
-         _anti_count(returns, ods["ods_return_reason"], "reason_code", "reason_code")),
-        ("inventory_product_store_fk",
-         _anti_count(inv, ods["ods_product"], "product_id", "product_id")
-         + _anti_count(inv, ods["ods_store"], "store_id", "store_id")),
-    ]
-    out = None
-    for name, violations in checks:
-        row = _check(spark, name, violations, 0, violations == 0)
-        out = row if out is None else out.unionByName(row)
-    return out
+    frames, aggs = _fk_aggs(ods)
+    return spark.createDataFrame(_fk_rows(_measure(ods, frames, aggs)), _SCHEMA)
 
 
 def volume_checks(spark: SparkSession, ods: dict[str, DataFrame]) -> DataFrame:
     """Volume acceptance minimums (reference ``etl_ods_loader.py:984-1018``):
     ≥5,000 sales, ≥1,000 products, ≥100 stores, ≥3 months of returns,
     daily inventory snapshots present."""
-    n_sales = ods["ods_sales"].count()
-    n_products = ods["ods_product"].count()
-    n_stores = ods["ods_store"].count()
-    months = (ods["ods_returns"]
-              .agg(((F.year(F.max("return_date")) * 12 + F.month(F.max("return_date")))
-                    - (F.year(F.min("return_date")) * 12 + F.month(F.min("return_date"))))
-                   .alias("m")).collect()[0]["m"]) or 0
-    snapshot_days = (ods["ods_inventory"]
-                     .agg(F.countDistinct("inventory_date").alias("d"))
-                     .collect()[0]["d"])
-    rows = [
-        ("min_sales_volume", n_sales, 5000, n_sales >= 5000),
-        ("min_product_count", n_products, 1000, n_products >= 1000),
-        ("min_store_count", n_stores, 100, n_stores >= 100),
-        ("min_returns_months", months, 3, months >= 3),
-        ("inventory_snapshot_days", snapshot_days, 1, snapshot_days >= 1),
-    ]
-    out = None
-    for name, value, thr, ok in rows:
-        row = _check(spark, name, value, thr, ok)
-        out = row if out is None else out.unionByName(row)
-    return out
+    return spark.createDataFrame(
+        _volume_rows(_measure(ods, {}, _volume_aggs())), _SCHEMA)
 
 
 def ratio_checks(stg: dict[str, DataFrame]) -> DataFrame:
@@ -127,10 +164,11 @@ def ratio_checks(stg: dict[str, DataFrame]) -> DataFrame:
 
 
 def assert_quality(spark: SparkSession, ods: dict[str, DataFrame]) -> None:
-    """Hard gate: raise if any FK or volume check fails."""
-    failed = [r["check"]
-              for r in fk_checks(spark, ods).unionByName(
-                  volume_checks(spark, ods)).collect()
-              if not r["passed"]]
+    """Hard gate: raise if any FK or volume check fails. Both check sets
+    are measured by one Spark action."""
+    frames, fk = _fk_aggs(ods)
+    m = _measure(ods, frames, fk, _volume_aggs())
+    failed = [name for name, _, _, passed in _fk_rows(m) + _volume_rows(m)
+              if not passed]
     if failed:
         raise AssertionError(f"quality checks failed: {failed}")

@@ -642,7 +642,7 @@ def pipe_tgt_scd2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT count(DISTINCT product_name) FROM src) >= 1000
                AS product_volume_ok""")
 def pipe_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 + A4: the 8 anti-join FK checks and volume gates, all green on the
+    """J3 + A4: the 8 FK checks and volume gates, all green on the
     reference CSV (reference ``etl_ods_loader.py:904-1018``)."""
     from walmart_project_etl_spark.quality import fk_checks, volume_checks
     ods = {name: _wt(spark, name) for name in (

@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 TESTDATA_TABLES = ("region", "nation", "customer", "supplier", "part",
                    "orders", "lineitem", "events", "documents", "embeddings")
@@ -24,6 +25,42 @@ def load_testdata(spark: SparkSession, sf_dir: str,
                   tables: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
     """Load the driver's parquet tables from an sf directory."""
     return {t: spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) for t in tables}
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — what Spark's
+    file-source schema inference makes of a footer schema."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of the first top-level part
+    file under ``path``, read on the driver; None when there is no such
+    file (missing or empty directory, partition subdirectories) or its
+    footer carries no Spark schema."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    try:
+        parts = sorted(n for n in os.listdir(path)
+                       if n.startswith("part-") and n.endswith(".parquet"))
+    except OSError:
+        return None
+    if not parts:
+        return None
+    meta = pq.read_metadata(os.path.join(path, parts[0])).metadata or {}
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        return None
+    return _as_nullable(StructType.fromJson(json.loads(raw)))
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
@@ -189,7 +226,15 @@ class Warehouse:
         return n
 
     def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, table))
+        """Plain read. The schema comes from the Spark schema in the first
+        top-level part file's footer (:func:`_footer_schema`), so no Spark
+        job runs to infer it; a directory without a top-level part file
+        is left to Spark's own inference, with its errors and partition
+        discovery."""
+        path = self.path(layer, table)
+        schema = _footer_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def read_evolved(self, layer: str, table: str) -> DataFrame:
         """Read a table whose files span schema versions (columns added
