@@ -12,3 +12,25 @@ def spark():
     s = get_spark("wpe-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _leak_census(request):
+    """After every test: no cached plan may outlive the test that made
+    it. A pin that an engine call forgot to release (or a ``.cache()``
+    nobody owns) would give every later test and query in the session a
+    warm cache. Checks only a session that is already running — it
+    never starts one — and clears the cache either way, so one leak
+    fails only its own test."""
+    yield
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    try:
+        empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert empty, \
+            f"{request.node.nodeid} left cached plans in the CacheManager"
+    finally:
+        spark.catalog.clearCache()

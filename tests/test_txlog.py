@@ -1167,6 +1167,40 @@ def test_read_where_composes_all_pruning_tiers(spark, orders, tmp_path):
     assert _rows(part_key, cols) == _rows(expected, cols)
     assert _rows(part_key_stats, cols) == \
         _rows(expected.where(F.col("o_custkey") <= ck), cols)
+
+    # the one-tier readers are read_where with that one tier: the same
+    # files and the same rows — on the table above and on one whose
+    # first files predate both its stats column and its partitioning
+    t3 = TxTable(spark, str(tmp_path / "cw3"))
+    t3.create(orders.where(F.col("o_orderkey") <= mid), "o_orderkey",
+              n_files=2)
+    meta = t3._state()[0]
+    assert t3._commit([{"op": "evolve"},
+                       {"meta": {**meta, "stats_cols": ["o_custkey"]}}], 1)
+    t3.alter_partitioning("o_orderstatus")
+    t3.append(orders.where(F.col("o_orderkey") > mid))
+    legacy = [a["path"] for a in t3._state()[1].values() if "pby" not in a]
+    assert len(legacy) == 2
+    for tbl in (t, t3):
+        for one, composed in (
+                (tbl.read_keys(lo, mid),
+                 tbl.read_where(key_lo=lo, key_hi=mid)),
+                (tbl.read_keys(hi=mid), tbl.read_where(key_hi=mid)),
+                (tbl.read_stats_range(None, ck, col="o_custkey"),
+                 tbl.read_where(stats={"o_custkey": (None, ck)})),
+                (tbl.read_stats_range(ck),
+                 tbl.read_where(stats={"o_custkey": (ck, None)})),
+                (tbl.read_partitions(["F"]),
+                 tbl.read_where(partitions=["F"]))):
+            assert set(one.inputFiles()) == set(composed.inputFiles())
+            assert _rows(one, cols) == _rows(composed, cols)
+    # without stats or a layout stamp, the first files are always read
+    for df in (t3.read_stats_range(None, ck), t3.read_partitions(["F"])):
+        assert all(any(f.endswith(p) for f in df.inputFiles())
+                   for p in legacy)
+    assert _rows(t3.read_partitions(["F"]), cols) == \
+        _rows(orders.where("o_orderstatus = 'F'"), cols)
+
     # unknown stats column / partitions on an unpartitioned table
     with pytest.raises(ValueError, match="carry no stats"):
         t.read_where(stats={"o_totalprice": (0, 1)})
@@ -2902,3 +2936,94 @@ def test_in_commit_timestamps_monotone_under_clock_skew(
     # the skewed commit resolves AFTER its predecessor for AS OF reads
     assert t.version_at(stamps[1]) == 1
     assert t.version_at(stamps[2]) == 2
+
+
+# ------------------------------------------- per-commit pins, validation
+
+
+def test_merge_paths_release_pinned_frames(spark, tmp_path):
+    """merge/apply/delete/append pin their source frame per commit and
+    MUST release it on every exit path — a leak here grows the block
+    manager by one cached plan per commit forever (the suite's leak
+    census fails the test if one is left behind)."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    tt = TxTable(spark, str(tmp_path / "tt"))
+    tt.create(df, "k", n_files=2, change_feed=True)
+
+    tt.append(spark.range(200, 260).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")))
+    tt.merge_upsert(spark.range(0, 40).select(
+        F.col("id").alias("k"), (F.col("id") * 7).alias("v")))
+    tt.merge_when(
+        spark.range(20, 60).select(F.col("id").alias("k"),
+                                   (F.col("id") * 9).alias("v")),
+        update_cond="src.v > tgt.v")
+    tt.delete_keys(spark.range(0, 10).select(F.col("id").alias("k")))
+    tt.delete_keys_dv(spark.range(10, 15).select(F.col("id").alias("k")))
+    tt.apply_changes(
+        spark.range(15, 25).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v"),
+            F.lit("insert").alias("_change_type")))
+
+    want = {k: 3 * k if k < 25 else 9 * k if k < 60 else 2 * k
+            for k in range(15, 260)}
+    assert {r["k"]: r["v"] for r in tt.snapshot().collect()} == want
+
+
+def test_refresh_agg_mv_releases_pins(spark, tmp_path):
+    from walmart_project_etl_spark.operators.matview import refresh_agg_mv
+
+    root = str(tmp_path / "tt")
+    df = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("g"),
+        (F.col("id") * 1.5).alias("v"))
+    src = TxTable(spark, root)
+    src.create(df, "k", n_files=2, change_feed=True)
+    mv = refresh_agg_mv(spark, src, root + "_mv", ["g"], "v")
+    assert mv.snapshot().count() == 3
+
+
+def test_validation_single_pass_same_messages(spark, tmp_path):
+    """The one-job validation must raise the FIRST violated check in
+    declaration order with the same message as the per-check jobs."""
+    df = spark.range(0, 50).select(
+        F.col("id").alias("k"), (F.col("id") + 1).alias("v"))
+    tt = TxTable(spark, str(tmp_path / "tt"))
+    tt.create(df, "k", n_files=1)
+    tt.add_constraint("v_pos", "v > 0")
+    tt.add_constraint("v_cap", "v < 1000")
+    # violates BOTH → the first declared one raises
+    bad = spark.range(50, 52).select(
+        F.col("id").alias("k"), F.lit(-5).cast("long").alias("v"))
+    with pytest.raises(ValueError, match="CHECK constraint 'v_pos'"):
+        tt.append(bad)
+    # clean rows still pass
+    tt.append(spark.range(52, 54).select(
+        F.col("id").alias("k"), (F.col("id") + 1).alias("v")))
+
+
+def test_key_bloom_bits_exact_vs_spec(spark, tmp_path):
+    """The exploded (file, word) bit_or fold must log bit-identical
+    blooms to the spec: bit ``pmod(xxhash64(key, i), _BLOOM_BITS)`` set
+    for every key in the file and every probe i < _BLOOM_K."""
+    from walmart_project_etl_spark.sources.txlog import _BLOOM_BITS, _BLOOM_K
+
+    df = spark.range(0, 500).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    tt = TxTable(spark, str(tmp_path / "tt"))
+    tt.create(df, "k", n_files=3)
+    _meta, live = tt._state()
+    assert len(live) == 3
+    for a in live.values():
+        rows = (spark.read.parquet(
+                    os.path.join(tt.data_dir, a["path"]))
+                .select(F.array(*[
+                    F.pmod(F.xxhash64(F.col("k"), F.lit(i)),
+                           F.lit(_BLOOM_BITS))
+                    for i in range(_BLOOM_K)]).alias("p"))).collect()
+        want = 0
+        for r in rows:
+            for p in r["p"]:
+                want |= 1 << int(p)
+        assert int(a["bloom"], 16) == want, a["path"]

@@ -130,6 +130,17 @@ def compare(name, spark_df, oracle_df):
     return problems
 
 
+def leak_census(spark) -> list[str]:
+    """A cached plan that a query leaves behind hands every later query
+    in the session a warm cache: report it as a problem and clear it,
+    so the next query runs cold."""
+    n = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    if not n:
+        return []
+    spark.catalog.clearCache()
+    return [f"LEAKED {n} cached plan(s)"]
+
+
 def main():
     only = set(sys.argv[1:])
 
@@ -153,12 +164,16 @@ def main():
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
+            leak_census(spark)
             results[name] = [f"SPARK ERROR: {type(e).__name__}: {str(e)[:300]}"]
             print(f"✗ {name}: SPARK ERROR {str(e)[:200]}")
             continue
+        leaks = leak_census(spark)
         if name not in oracles:
-            results[name] = []
-            print(f"~ {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            results[name] = leaks
+            print(f"{'✗' if leaks else '~'} {name}: rows-only ({len(sdf)} "
+                  f"rows, {time.time()-t0:.1f}s)"
+                  + "".join(f"\n    {p}" for p in leaks))
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -166,7 +181,7 @@ def main():
             results[name] = [f"ORACLE ERROR: {type(e).__name__}: {str(e)[:300]}"]
             print(f"✗ {name}: ORACLE ERROR {str(e)[:200]}")
             continue
-        probs = compare(name, sdf, odf)
+        probs = leaks + compare(name, sdf, odf)
         results[name] = probs
         real = [p for p in probs if not p.startswith("WARN")]
         mark = "✓" if not real else "✗"

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from walmart_project_etl_spark.operators.util import pins
+
 
 def connected_components(
     edges: DataFrame,
@@ -202,7 +204,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     """
     if iters < 1:
         # zero rounds would return the unrounded 1/N seed as a lazy
-        # frame over pins the ``finally`` below has already released
+        # frame over pins the ``pins()`` block below has already released
         raise ValueError(f"pagerank needs iters >= 1, got {iters}")
     # The edge table, node set and out-degree-weighted edges are read
     # EVERY round (plus the final left join): pin them once so the
@@ -212,18 +214,18 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # r16 (VERDICT r15 item 9): the LAST round's checkpoint is EAGER —
     # the whole chain executes once inside the operator, the returned
     # frame is a block scan of the final ranks (node, pagerank — small
-    # at any graph size), and the three graph pins release in the
-    # ``finally`` instead of dangling until the ContextCleaner.
-    e = edges.select(F.col(src).alias("__s"),
-                     F.col(dst).alias("__d")).distinct().persist()
-    nodes = (e.select(F.col("__s").alias("node"))
-             .unionByName(e.select(F.col("__d").alias("node")))
-             .distinct()).persist()
-    ew = None
-    try:
+    # at any graph size), and the three graph pins release when the
+    # ``pins()`` block exits instead of dangling until the
+    # ContextCleaner.
+    with pins() as pin:
+        e = pin(edges.select(F.col(src).alias("__s"),
+                             F.col(dst).alias("__d")).distinct())
+        nodes = pin(e.select(F.col("__s").alias("node"))
+                    .unionByName(e.select(F.col("__d").alias("node")))
+                    .distinct())
         n = nodes.count()
         out = e.groupBy("__s").agg(F.count("*").alias("__out"))
-        ew = e.join(out, "__s").persist()
+        ew = pin(e.join(out, "__s"))
         base = float(1.0 - damping) / n
         pr = nodes.withColumn("pagerank", F.lit(1.0 / n))
         for it in range(iters):
@@ -244,8 +246,3 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                           .cast("double").alias("pagerank")))
             pr = pr.localCheckpoint(eager=(it == iters - 1))
         return pr
-    finally:
-        e.unpersist()
-        nodes.unpersist()
-        if ew is not None:
-            ew.unpersist()

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from walmart_project_etl_spark.operators.util import pins
+
 #: txn app name under which refreshes mark their source watermark
 MV_APP = "agg_mv_refresh"
 
@@ -109,47 +111,44 @@ def refresh_agg_mv(spark: SparkSession, source, mv_root: str,
     last = mv.last_txn(MV_APP, version=base)
     if src_version <= last:
         return mv                       # already folded — no-op
-    pin = None
-    try:
-        changes = source.read_changes(since_version=last + 1,
-                                      upto=src_version)
-    except ChangeFeedRestoredError:
-        upserts = _resync_plan(mv, base, source, src_version,
-                               group_cols, sum_col, enrich)
-    else:
-        if enrich is not None:
-            changes = enrich(changes)
-        # pinned for the refresh: the delta (touched-groups-sized, tiny
-        # by construction) feeds the pruned current-state read, both
-        # sides of the fold, and — via the merge's own passes — the
-        # key pruner and the file rewrite; uncached, every one of those
-        # replays the change-feed read + the delta aggregation
-        delta = _delta(changes, group_cols, sum_col) \
-            .withColumn("mv_key", _group_key(group_cols)).persist()
-        # fold MV state AT base for ONLY the touched groups (pruned)
-        cur = mv.read_matching(delta.select("mv_key"), version=base)
-        upserts = (cur.select("mv_key", "n_rows", "total")
-                   .unionByName(delta.select("mv_key", "n_rows", "total"))
-                   .groupBy("mv_key")
-                   .agg(F.sum("n_rows").alias("n_rows"),
-                        F.sum("total").cast("decimal(28,6)")
-                         .alias("total"))
-                   .join(delta.select("mv_key", *group_cols), "mv_key")
-                   .select("mv_key",
-                           *[F.col(c).cast("string").alias(c)
-                             for c in group_cols],
-                           "n_rows", "total"))
-        pin = delta
-    try:
+    with pins() as pin:
+        try:
+            changes = source.read_changes(since_version=last + 1,
+                                          upto=src_version)
+        except ChangeFeedRestoredError:
+            upserts = _resync_plan(mv, base, source, src_version,
+                                   group_cols, sum_col, enrich)
+        else:
+            if enrich is not None:
+                changes = enrich(changes)
+            # pinned for the refresh: the delta (touched-groups-sized,
+            # tiny by construction) feeds the pruned current-state read,
+            # both sides of the fold, and — via the merge's own passes —
+            # the key pruner and the file rewrite; uncached, every one
+            # of those replays the change-feed read + the delta
+            # aggregation
+            delta = pin(_delta(changes, group_cols, sum_col)
+                        .withColumn("mv_key", _group_key(group_cols)))
+            # fold MV state AT base for ONLY the touched groups (pruned)
+            cur = mv.read_matching(delta.select("mv_key"), version=base)
+            upserts = (cur.select("mv_key", "n_rows", "total")
+                       .unionByName(delta.select("mv_key", "n_rows",
+                                                 "total"))
+                       .groupBy("mv_key")
+                       .agg(F.sum("n_rows").alias("n_rows"),
+                            F.sum("total").cast("decimal(28,6)")
+                             .alias("total"))
+                       .join(delta.select("mv_key", *group_cols), "mv_key")
+                       .select("mv_key",
+                               *[F.col(c).cast("string").alias(c)
+                                 for c in group_cols],
+                               "n_rows", "total"))
         # delete groups folding to zero; never INSERT one (a group
         # created and fully deleted inside the same window must not
         # materialize)
         mv.merge_when(upserts, delete_cond="src.n_rows = 0",
                       insert_cond="src.n_rows <> 0",
                       txn=(MV_APP, src_version))
-    finally:
-        if pin is not None:
-            pin.unpersist()
     return mv
 
 
@@ -223,8 +222,7 @@ def refresh_agg_mv_minmax(spark: SparkSession, source, mv_root: str,
     last = mv.last_txn(MV_MINMAX_APP, version=base)
     if src_version <= last:
         return mv                       # already folded — no-op
-    pins: list[DataFrame] = []
-    try:
+    with pins() as pin:
         try:
             changes = source.read_changes(since_version=last + 1,
                                           upto=src_version)
@@ -234,13 +232,10 @@ def refresh_agg_mv_minmax(spark: SparkSession, source, mv_root: str,
         else:
             upserts = _minmax_delta_plan(mv, base, source, src_version,
                                          group_cols, val_col, changes,
-                                         pins)
+                                         pin)
         mv.merge_when(upserts, delete_cond="src.n_rows = 0",
                       insert_cond="src.n_rows <> 0",
                       txn=(MV_MINMAX_APP, src_version))
-    finally:
-        for p in pins:
-            p.unpersist()
     return mv
 
 
@@ -251,22 +246,19 @@ def _minmax_agg(val_col: str):
 
 
 def _minmax_delta_plan(mv, base, source, src_version, group_cols,
-                      val_col, changes,
-                      pins: list | None = None) -> DataFrame:
+                      val_col, changes, pin) -> DataFrame:
     val = F.col(val_col).cast("double").cast("decimal(28,6)")
     is_add = F.col("_change_type").isin("insert", "update_postimage")
     # pinned like refresh_agg_mv's delta: read by the current-state
     # pruner, the fold join, and (through flagged) both merge branches
-    delta = (changes
-             .groupBy(*group_cols)
-             .agg(F.sum(F.when(is_add, 1).otherwise(-1)).alias("nd"),
-                  F.min(F.when(is_add, val)).alias("ins_min"),
-                  F.max(F.when(is_add, val)).alias("ins_max"),
-                  F.min(F.when(~is_add, val)).alias("del_min"),
-                  F.max(F.when(~is_add, val)).alias("del_max"))
-             .withColumn("mv_key", _group_key(group_cols)))
-    if pins is not None:
-        pins.append(delta.persist())
+    delta = pin(changes
+                .groupBy(*group_cols)
+                .agg(F.sum(F.when(is_add, 1).otherwise(-1)).alias("nd"),
+                     F.min(F.when(is_add, val)).alias("ins_min"),
+                     F.max(F.when(is_add, val)).alias("ins_max"),
+                     F.min(F.when(~is_add, val)).alias("del_min"),
+                     F.max(F.when(~is_add, val)).alias("del_max"))
+                .withColumn("mv_key", _group_key(group_cols)))
     cur = mv.read_matching(delta.select("mv_key"), version=base) \
             .select("mv_key", F.col("n_rows").alias("cur_n"),
                     F.col("vmin").alias("cur_min"),
@@ -282,13 +274,11 @@ def _minmax_delta_plan(mv, base, source, src_version, group_cols,
     need = (F.coalesce(F.col("del_min") <= cand_min, F.lit(False))
             | F.coalesce(F.col("del_max") >= cand_max, F.lit(False))) \
         & (new_n > 0)
-    flagged = m.select("mv_key", *group_cols, new_n,
-                       cand_min.alias("vmin"), cand_max.alias("vmax"),
-                       need.alias("__need"))
-    if pins is not None:
-        # read by rec_groups (twice — driver collect + semi join) and
-        # the plain branch; uncached each re-runs the fold join
-        pins.append(flagged.persist())
+    # read by rec_groups (twice — driver collect + semi join) and the
+    # plain branch; uncached each re-runs the fold join
+    flagged = pin(m.select("mv_key", *group_cols, new_n,
+                           cand_min.alias("vmin"), cand_max.alias("vmax"),
+                           need.alias("__need")))
     rec_groups = flagged.where("__need").select(*group_cols).distinct()
     plain = (flagged.where(~F.col("__need"))
              .select("mv_key",
@@ -391,8 +381,7 @@ def refresh_agg_mv_avg_distinct(spark: SparkSession, source, mv_root: str,
     last = mv.last_txn(MV_AVGDIST_APP, version=base)
     if src_version <= last:
         return mv                       # already folded — no-op
-    pins: list[DataFrame] = []
-    try:
+    with pins() as pin:
         try:
             changes = source.read_changes(since_version=last + 1,
                                           upto=src_version)
@@ -403,13 +392,10 @@ def refresh_agg_mv_avg_distinct(spark: SparkSession, source, mv_root: str,
         else:
             upserts = _avgdist_delta_plan(mv, base, source, src_version,
                                           group_cols, val_col,
-                                          distinct_col, changes, pins)
+                                          distinct_col, changes, pin)
         mv.merge_when(upserts, delete_cond="src.n_rows = 0",
                       insert_cond="src.n_rows <> 0",
                       txn=(MV_AVGDIST_APP, src_version))
-    finally:
-        for p in pins:
-            p.unpersist()
     return mv
 
 
@@ -429,27 +415,24 @@ def _hll_merge(a, b):
 
 
 def _avgdist_delta_plan(mv, base, source, src_version, group_cols,
-                        val_col, distinct_col, changes,
-                        pins: list | None = None) -> DataFrame:
+                        val_col, distinct_col, changes, pin) -> DataFrame:
     val = F.col(val_col).cast("double").cast("decimal(28,6)")
     is_add = F.col("_change_type").isin("insert", "update_postimage")
-    delta = (changes
-             .groupBy(*group_cols)
-             .agg(F.sum(F.when(is_add, 1).otherwise(-1)).alias("nd"),
-                  F.sum((val * F.when(is_add, 1).otherwise(-1)
-                         .cast("decimal(28,6)")))
-                   .cast("decimal(28,6)").alias("sval"),
-                  F.hll_sketch_agg(F.when(is_add, F.col(distinct_col)),
-                                   F.lit(MV_HLL_LG_K)).alias("ins_hll"),
-                  # the IVM fallback trigger: any removed row carrying a
-                  # non-NULL distinct value may strand a stale register
-                  F.max(F.when(~is_add
-                               & F.col(distinct_col).isNotNull(),
-                               True).otherwise(False)).alias("has_rm"))
-             .withColumn("mv_key", _group_key(group_cols)))
-    if pins is not None:
-        # pinned like refresh_agg_mv's delta (pruner + fold join)
-        pins.append(delta.persist())
+    # pinned like refresh_agg_mv's delta (pruner + fold join)
+    delta = pin(changes
+                .groupBy(*group_cols)
+                .agg(F.sum(F.when(is_add, 1).otherwise(-1)).alias("nd"),
+                     F.sum((val * F.when(is_add, 1).otherwise(-1)
+                            .cast("decimal(28,6)")))
+                      .cast("decimal(28,6)").alias("sval"),
+                     F.hll_sketch_agg(F.when(is_add, F.col(distinct_col)),
+                                      F.lit(MV_HLL_LG_K)).alias("ins_hll"),
+                     # the IVM fallback trigger: any removed row carrying a
+                     # non-NULL distinct value may strand a stale register
+                     F.max(F.when(~is_add
+                                  & F.col(distinct_col).isNotNull(),
+                                  True).otherwise(False)).alias("has_rm"))
+                .withColumn("mv_key", _group_key(group_cols)))
     cur = mv.read_matching(delta.select("mv_key"), version=base) \
             .select("mv_key", F.col("n_rows").alias("cur_n"),
                     F.col("total").alias("cur_total"),
@@ -461,15 +444,13 @@ def _avgdist_delta_plan(mv, base, source, src_version, group_cols,
                  + F.coalesce(F.col("sval"),
                               F.lit(0).cast("decimal(28,6)"))) \
         .cast("decimal(28,6)").alias("total")
-    flagged = m.select("mv_key", *group_cols, new_n, new_total,
-                       _hll_merge(F.col("cur_hll"),
-                                  F.col("ins_hll")).alias("hll"),
-                       (F.col("has_rm")
-                        & ((F.coalesce("cur_n", F.lit(0))
-                            + F.col("nd")) > 0)).alias("__need"))
-    if pins is not None:
-        # read by rec_groups (collect + semi join) and the plain branch
-        pins.append(flagged.persist())
+    # read by rec_groups (collect + semi join) and the plain branch
+    flagged = pin(m.select("mv_key", *group_cols, new_n, new_total,
+                           _hll_merge(F.col("cur_hll"),
+                                      F.col("ins_hll")).alias("hll"),
+                           (F.col("has_rm")
+                            & ((F.coalesce("cur_n", F.lit(0))
+                                + F.col("nd")) > 0)).alias("__need")))
     rec_groups = flagged.where("__need").select(*group_cols).distinct()
     proj = ["mv_key",
             *[F.col(c).cast("string").alias(c) for c in group_cols],

@@ -2,8 +2,35 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def pins() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Scope for frames that are read more than once inside one call.
+
+    Yields ``pin(df) -> df.persist()`` (default storage level); every
+    pinned frame is released with a non-blocking ``unpersist()`` when
+    the block exits, on the return and the exception path alike. Use it
+    only for frames whose every read happens inside the block: a
+    returned lazy plan must not be pinned (its reads come after the
+    release), see ``operators/dedup.py`` for that case.
+    """
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(df.persist())
+        return df
+
+    try:
+        yield pin
+    finally:
+        for df in pinned:
+            df.unpersist()
 
 
 def join_group_stats(df: DataFrame, stats: DataFrame,

@@ -122,10 +122,16 @@ def s08_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
    """SELECT o_orderpriority, count(*) AS n FROM orders
       WHERE o_totalprice > 200000 GROUP BY o_orderpriority""")
 def s09_temp_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9: cached temp view + spark.sql over it (reference
+    """S9: materialized temp view + spark.sql over it (reference
     temp_product_stage materialized once and reused 3×,
-    ``etl_target_loader.py:304-317`` — .cache() is the Spark equivalent)."""
-    orders = t(spark, sf_dir, "orders").cache()
+    ``etl_target_loader.py:304-317``). The view's frame is a lazy
+    ``localCheckpoint``, not ``.cache()``: the query returns a lazy plan
+    whose reads all come after it returns, so nothing could release a
+    cache entry, and a leaked one would hand every later query in the
+    session that reads ``orders`` a warm cache. The checkpoint blocks
+    are written on the first read and freed with the frame (see
+    ``operators/dedup.py:minhash_dedup``)."""
+    orders = t(spark, sf_dir, "orders").localCheckpoint(eager=False)
     orders.createOrReplaceTempView("wpe_tmp_orders")
     return spark.sql("""
         SELECT o_orderpriority, count(*) AS n FROM wpe_tmp_orders

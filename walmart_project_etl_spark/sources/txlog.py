@@ -147,6 +147,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from walmart_project_etl_spark.operators.util import pins
+
 
 _BLOOM_BITS = 4096   # ~0.5 KB hex per file in the log; <1% FP at ~1k keys
 _BLOOM_K = 4
@@ -1007,18 +1009,21 @@ class TxTable:
                 df = df.drop(fcol)
         return df
 
-    def snapshot(self, version: int | None = None) -> DataFrame:
-        # latest reads treat an undecided cross-table pending as not yet
-        # arrived ("read"); explicit-version reads must stay stable
-        # forever, so they force-resolve it first ("strict")
-        meta, live = self._state(version, self._read_mode(version))
+    def _read_state(self, version: int | None):
+        """(meta, {path: add-action}) for a reader at ``version``.
+        Latest reads treat an undecided cross-table pending as not yet
+        arrived ("read"); explicit-version reads must stay stable
+        forever, so they force-resolve it first ("strict"). Raises
+        FileNotFoundError when no table exists at the root."""
+        meta, live = self._state(version,
+                                 "read" if version is None else "strict")
         if meta is None:
             raise FileNotFoundError(f"no table at {self.root}")
-        return self._read_files(meta, live.values())
+        return meta, live
 
-    @staticmethod
-    def _read_mode(version: int | None) -> str:
-        return "read" if version is None else "strict"
+    def snapshot(self, version: int | None = None) -> DataFrame:
+        meta, live = self._read_state(version)
+        return self._read_files(meta, live.values())
 
     def version_at(self, ts: float) -> int:
         """The newest version whose commit wall-clock stamp is at or
@@ -1050,43 +1055,28 @@ class TxTable:
 
     def read_keys(self, lo=None, hi=None,
                   version: int | None = None) -> DataFrame:
-        """DATA-SKIPPING read: scan only the files whose [kmin, kmax]
-        stats intersect [lo, hi] (either bound optional), with the exact
-        predicate applied as a residual filter. A point lookup on a
-        range-partitioned dimension touches O(1) files regardless of
-        table size — the read-side payoff of the per-file stats the
-        merge already maintains."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
-        key = meta["key_col"]
-        files = [a for a in live.values()
-                 if not ((hi is not None and a["kmin"] > hi)
-                         or (lo is not None and a["kmax"] < lo))]
-        df = self._read_files(meta, files)
-        if lo is not None:
-            df = df.where(F.col(key) >= lo)
-        if hi is not None:
-            df = df.where(F.col(key) <= hi)
-        return df
+        """Key-band shorthand of :meth:`read_where`
+        (``key_lo=lo, key_hi=hi``): scan only the files whose
+        [kmin, kmax] stats intersect [lo, hi] (either bound optional),
+        with the exact predicate as a residual filter. A point lookup
+        on a range-partitioned dimension touches O(1) files regardless
+        of table size."""
+        return self.read_where(key_lo=lo, key_hi=hi, version=version)
 
     def read_stats_range(self, lo=None, hi=None,
                          version: int | None = None,
                          col: str | None = None) -> DataFrame:
-        """DATA-SKIPPING read on a declared stats column
+        """Stats-band shorthand of :meth:`read_where`
+        (``stats={col: (lo, hi)}``) on a declared stats column
         (:meth:`create` ``stats_cols``; ``col`` defaults to the first
-        declared): scan only the files whose per-file [min, max] for
-        that column intersect [lo, hi], with the exact predicate as a
-        residual filter — a BI date-band query on a date-clustered table
-        touches only the matching ingest batches' files, not the whole
-        history. Bounds must be given in the stats' serialized form: the
-        column's native type for int/string columns, a full ISO string
-        (e.g. ``"1996-01-01 00:00:00"`` for timestamps) otherwise. Files
+        declared) — a BI date-band query on a date-clustered table
+        touches only the matching ingest batches' files. Bounds must be
+        given in the stats' serialized form: the column's native type
+        for int/string columns, a full ISO string (e.g.
+        ``"1996-01-01 00:00:00"`` for timestamps) otherwise. Files
         written before the column was declared carry no stats and are
         conservatively scanned."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         declared = meta.get("stats_cols") or []
         if not declared:
             raise ValueError(f"table at {self.root} declares no stats_cols")
@@ -1095,49 +1085,18 @@ class TxTable:
         if col not in declared:
             raise ValueError(
                 f"column '{col}' carries no stats (declared: {declared})")
-
-        def may_match(a: dict) -> bool:
-            b = _cbounds(a, meta, col)
-            if b is None or b[0] is None:
-                return True                      # no stats — scan
-            return not ((hi is not None and b[0] > hi)
-                        or (lo is not None and b[1] < lo))
-
-        files = [a for a in live.values() if may_match(a)]
-        df = self._read_files(meta, files)
-        if lo is not None:
-            df = df.where(F.col(col) >= lo)
-        if hi is not None:
-            df = df.where(F.col(col) <= hi)
-        return df
+        return self._read_pruned(meta, live, stats={col: (lo, hi)})
 
     def read_partitions(self, values,
                         version: int | None = None) -> DataFrame:
-        """PARTITION-PRUNED read (requires ``create(...,
+        """Partition shorthand of :meth:`read_where`
+        (``partitions=values``; requires ``create(...,
         partition_by=)``): scan only the files whose recorded partition
         value (``pval``) is in ``values`` — pruning on the log alone,
-        no stats comparison and no file opens, the Hive/Delta partition
-        contract. Every write path keeps files partition-pure, so this
-        is exact up to the residual ``isin`` filter (kept for
-        defense-in-depth, it never drops rows on a healthy log). The
-        first-order file skip at 100 TB: a one-partition read of a
-        10k-partition table touches 1/10k of the files before any
-        stats tier runs."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
-        pcols = _meta_parts(meta)
-        if not pcols:
-            raise ValueError(
-                f"table at {self.root} is not partitioned — create it "
-                f"with partition_by=")
-        vals = _norm_pvals(values, len(pcols))
-        files = [a for a in live.values()
-                 if "pval" not in a
-                 or not _layout_matches(a, meta)
-                 or _pval_tuple(a) in vals]
-        df = self._read_files(meta, files)
-        return df.where(_pval_predicate(pcols, vals))
+        the Hive/Delta partition contract. Files whose layout predates
+        a partition evolution are conservatively scanned; the residual
+        ``isin`` filter keeps the result exact."""
+        return self.read_where(partitions=values, version=version)
 
     #: generation-expression shapes MONOTONE in their source column —
     #: the inference is only sound when src_a <= src_b implies
@@ -1168,9 +1127,7 @@ class TxTable:
         100 TB this turns every timestamp-band query into a
         partition-pruned read without the caller knowing the partition
         scheme exists. Pinned in tests/test_txlog_generated.py."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         pcols = _meta_parts(meta) or []
         gen = meta.get("generated") or {}
         target = None
@@ -1232,24 +1189,26 @@ class TxTable:
         result equals the unpruned filter at any layout. At 100 TB this
         is the difference between "query the partition's day" and
         "scan the table": tiers compose multiplicatively."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
-        files, residual = self._prune_live(meta, live, partitions,
-                                           key_lo, key_hi, stats,
-                                           not_null)
+        meta, live = self._read_state(version)
+        return self._read_pruned(meta, live, partitions=partitions,
+                                 key_lo=key_lo, key_hi=key_hi,
+                                 stats=stats, not_null=not_null)
+
+    def _read_pruned(self, meta: dict, live: dict, **tiers) -> DataFrame:
+        """The files of ``live`` surviving :meth:`_prune_live`'s tiers,
+        read with the residual filter applied."""
+        files, residual = self._prune_live(meta, live, **tiers)
         df = self._read_files(meta, files)
-        if residual is not None:
-            df = df.where(residual)
-        return df
+        return df if residual is None else df.where(residual)
 
     def _prune_live(self, meta: dict, live: dict, partitions=None,
                     key_lo=None, key_hi=None, stats: dict | None = None,
                     not_null: list[str] | None = None):
         """The composed file-skipping tiers of :meth:`read_where`,
         factored for every reader/writer that needs "which live files
-        can hold rows matching these bounds" (read_where itself, the
-        predicate UPDATE/DELETE's touched-file discovery). Returns
+        can hold rows matching these bounds" (read_where and its
+        one-tier shorthands, the predicate UPDATE/DELETE's touched-file
+        discovery). Returns
         ``(surviving add-actions, residual Column-or-None)`` — the
         residual re-applies the exact bounds so results equal the
         unpruned filter at any layout."""
@@ -1345,9 +1304,7 @@ class TxTable:
         recovery pattern). Untracked restores BEFORE ``since_version``
         are fine: a consumer whose watermark already passed the restore
         resynced then."""
-        meta, _ = self._state(upto, self._read_mode(upto))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, _ = self._read_state(upto)
         if not meta.get("change_feed"):
             raise ValueError(
                 f"table at {self.root} was created without "
@@ -2088,8 +2045,8 @@ class TxTable:
         if v_from > v_to:
             raise ValueError(f"v_from {v_from} > v_to {v_to}")
         meta_f, live_f = self._state(v_from)
-        meta_t, live_t = self._state(v_to, self._read_mode(v_to))
-        if meta_f is None or meta_t is None:
+        meta_t, live_t = self._read_state(v_to)
+        if meta_f is None:
             raise FileNotFoundError(f"no table at {self.root}")
         if (meta_f.get("column_mapping") or {}) != \
                 (meta_t.get("column_mapping") or {}):
@@ -2356,9 +2313,7 @@ class TxTable:
         O(matching files), not the table — e.g. the streaming upsert
         sink folds in current rows for just its micro-batch's users this
         way instead of scanning every live file per batch."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         key = meta["key_col"]
         keys = keys.select(key).distinct()
         prune = self._key_pruner(keys, key)
@@ -2379,9 +2334,7 @@ class TxTable:
         ``values`` is a small literal set (a point-lookup batch);
         probe positions come from one value-set-sized Spark job so the
         hashes match the write side exactly."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         if col == meta["key_col"]:
             # the key has the strictly stronger range+bloom path
             keys = self.spark.createDataFrame(
@@ -2445,63 +2398,57 @@ class TxTable:
         # constraint/generated validation job and again by the file
         # write — and a foreachBatch append's re-read replays the
         # micro-batch source
-        df = df.persist()
-        try:
-            self._append_pinned(df, meta, ident, merge_schema)
-        finally:
-            df.unpersist()
-
-    def _append_pinned(self, df: DataFrame, meta: dict, ident,
-                       merge_schema: bool) -> None:
-        if not merge_schema and not ident:
-            df = self._check_schema(df, meta)
-            adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
+        with pins() as pin:
+            df = pin(df)
+            if not merge_schema and not ident:
+                df = self._check_schema(df, meta)
+                adds = self._write_files(df, meta["key_col"],
+                                         stats_cols=meta.get("stats_cols"),
+                                         partition_by=meta.get("partition_by"),
+                                         meta=meta)
+                while True:
+                    v = self.versions()[-1] + 1
+                    if self._commit([{"op": "append"}, *adds], v):
+                        self._maybe_checkpoint(v)
+                        return
+            # evolving path: the schema action and/or the identity mark must
+            # be derived AT the pinned base, so a lost race recomputes both
             while True:
-                v = self.versions()[-1] + 1
-                if self._commit([{"op": "append"}, *adds], v):
-                    self._maybe_checkpoint(v)
+                base = self.versions()[-1]          # pinned read (see merge)
+                meta, _ = self._state(base)
+                ident = meta.get("identity")
+                dfx = df
+                if ident:
+                    # distributed assignment from the CURRENT mark; the
+                    # written files are the truth for the next mark
+                    dfx = dfx.withColumn(
+                        ident["col"],
+                        (F.lit(ident["next"]).cast("long")
+                         + F.monotonically_increasing_id()))
+                if merge_schema:
+                    meta2, dfx = self._merged_schema(meta, dfx)
+                else:
+                    meta2 = meta
+                dfx = self._check_schema(dfx, meta2)
+                adds = self._write_files(dfx, meta2["key_col"],
+                                         stats_cols=meta2.get("stats_cols"),
+                                         partition_by=meta2.get(
+                                             "partition_by"), meta=meta2)
+                if ident:
+                    meta2 = dict(meta2)
+                    meta2["identity"] = {
+                        "col": ident["col"],
+                        "next": self._identity_hwm(adds, ident["col"],
+                                                   meta2)}
+                actions: list[dict] = [{"op": "append"}]
+                if meta2 is not meta:
+                    actions.append({"meta": meta2})
+                actions += adds
+                if self._commit(actions, base + 1):
+                    self._maybe_checkpoint(base + 1)
                     return
-        # evolving path: the schema action and/or the identity mark must
-        # be derived AT the pinned base, so a lost race recomputes both
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
-            ident = meta.get("identity")
-            dfx = df
-            if ident:
-                # distributed assignment from the CURRENT mark; the
-                # written files are the truth for the next mark
-                dfx = dfx.withColumn(
-                    ident["col"],
-                    (F.lit(ident["next"]).cast("long")
-                     + F.monotonically_increasing_id()))
-            if merge_schema:
-                meta2, dfx = self._merged_schema(meta, dfx)
-            else:
-                meta2 = meta
-            dfx = self._check_schema(dfx, meta2)
-            adds = self._write_files(dfx, meta2["key_col"],
-                                     stats_cols=meta2.get("stats_cols"),
-                                     partition_by=meta2.get(
-                                         "partition_by"), meta=meta2)
-            if ident:
-                meta2 = dict(meta2)
-                meta2["identity"] = {
-                    "col": ident["col"],
-                    "next": self._identity_hwm(adds, ident["col"],
-                                               meta2)}
-            actions: list[dict] = [{"op": "append"}]
-            if meta2 is not meta:
-                actions.append({"meta": meta2})
-            actions += adds
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return
-            # lost the race: the base schema/mark may have changed —
-            # orphan the written files and recompute from scratch
+                # lost the race: the base schema/mark may have changed —
+                # orphan the written files and recompute from scratch
 
     def copied_files(self, version: int | None = None) -> set[str]:
         """The file identities (``path|size|mtime_ms``) every
@@ -2690,106 +2637,98 @@ class TxTable:
         # in a foreachBatch sink each re-read replays the micro-batch
         # source. One materialization (the pruner's own collect — no
         # extra job), every later pass scans cached blocks.
-        pinned = updates = updates.persist()
-        try:
-            return self._merge_upsert_pinned(updates, meta, key, txn,
-                                             merge_schema)
-        finally:
-            pinned.unpersist()
+        with pins() as pin:
+            updates = pin(updates)
+            if not merge_schema:
+                # validate + normalize to the table's column order so every
+                # data file carries the same physical layout
+                updates = self._check_schema(updates, meta)
+            prune = self._key_pruner(updates, key)
 
-    def _merge_upsert_pinned(self, updates: DataFrame, meta: dict,
-                             key: str, txn: tuple[str, int] | None,
-                             merge_schema: bool) -> dict:
-        if not merge_schema:
-            # validate + normalize to the table's column order so every
-            # data file carries the same physical layout
-            updates = self._check_schema(updates, meta)
-        prune = self._key_pruner(updates, key)
-
-        while True:
-            if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                return {"files_scanned": 0, "files_rewritten": 0,
-                        "files_untouched": 0, "skipped_replay": True}
-            # pin the read to a BASE version and commit at base+1: a
-            # concurrent commit landing during our (seconds-long) file
-            # writes then FAILS our commit instead of being silently
-            # built over — the lost-update half of optimistic
-            # concurrency (the os.link race alone only prevents
-            # version collisions, not stale reads)
-            base = self.versions()[-1]
-            evolved = False
-            if merge_schema:
-                # re-merge per attempt AT base so a lost race never
-                # clobbers a concurrent evolve's schema
-                meta, live = self._state(base)
-                meta2, upd = self._merged_schema(meta, updates)
-                evolved = meta2 is not meta
-                meta = meta2
-                updates = self._check_schema(upd, meta)
-            else:
-                _, live = self._state(base)
-            touched = prune(list(live.values()))
-            untouched = len(live) - len(touched)
-            if touched:
-                old = self._read_files(meta, touched)
-                keep = old.join(updates.select(key), key, "left_anti")
-                new_rows = keep.unionByName(updates)
-            else:
-                new_rows = updates
-            adds = self._write_files(new_rows, key,
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            cdf = []
-            if meta.get("change_feed"):
-                # row-level change capture over the TOUCHED files only
-                # (pruning is conservative, so they hold every existing
-                # update key) — O(touched), same as the rewrite itself
-                if touched:
-                    old_keys = old.select(key)
-                    changes = (
-                        old.join(updates.select(key), key, "semi")
-                        .withColumn("_change_type",
-                                    F.lit("update_preimage"))
-                        .unionByName(
-                            updates.join(old_keys, key, "semi")
-                            .withColumn("_change_type",
-                                        F.lit("update_postimage")))
-                        .unionByName(
-                            updates.join(old_keys, key, "left_anti")
-                            .withColumn("_change_type", F.lit("insert"))))
+            while True:
+                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
+                    return {"files_scanned": 0, "files_rewritten": 0,
+                            "files_untouched": 0, "skipped_replay": True}
+                # pin the read to a BASE version and commit at base+1: a
+                # concurrent commit landing during our (seconds-long) file
+                # writes then FAILS our commit instead of being silently
+                # built over — the lost-update half of optimistic
+                # concurrency (the os.link race alone only prevents
+                # version collisions, not stale reads)
+                base = self.versions()[-1]
+                evolved = False
+                if merge_schema:
+                    # re-merge per attempt AT base so a lost race never
+                    # clobbers a concurrent evolve's schema
+                    meta, live = self._state(base)
+                    meta2, upd = self._merged_schema(meta, updates)
+                    evolved = meta2 is not meta
+                    meta = meta2
+                    updates = self._check_schema(upd, meta)
                 else:
-                    changes = updates.withColumn("_change_type",
-                                                 F.lit("insert"))
-                cdf = self._write_cdf(changes, meta)
-            v = base + 1
-            actions = [{"op": "merge"},
-                       *([{"meta": meta}] if evolved else []),
-                       *adds, *cdf,
-                       *({"remove": {"path": a["path"]}} for a in touched)]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_scanned": len(live),
-                        "files_rewritten": len(touched),
-                        "files_untouched": untouched}
-            # lost the race. Before re-running the data plane, classify
-            # the interleaved commits (WriteSerializable): if they are
-            # all blind appends provably disjoint from our key set, the
-            # rewrite we already wrote is still exactly right — land it
-            # at the new head and skip the re-run.
-            rv = self._retry_if_disjoint(
-                base, actions, prune,
-                txn_app=txn[0] if txn is not None else None)
-            if rv is not None:
-                self._maybe_checkpoint(rv)
-                return {"files_scanned": len(live),
-                        "files_rewritten": len(touched),
-                        "files_untouched": untouched,
-                        "rerun_avoided": True}
-            # real conflict: orphan the files we just wrote (invisible —
-            # no commit references them) and retry on the new snapshot
+                    _, live = self._state(base)
+                touched = prune(list(live.values()))
+                untouched = len(live) - len(touched)
+                if touched:
+                    old = self._read_files(meta, touched)
+                    keep = old.join(updates.select(key), key, "left_anti")
+                    new_rows = keep.unionByName(updates)
+                else:
+                    new_rows = updates
+                adds = self._write_files(new_rows, key,
+                                         stats_cols=meta.get("stats_cols"),
+                                         partition_by=meta.get("partition_by"),
+                                         meta=meta)
+                cdf = []
+                if meta.get("change_feed"):
+                    # row-level change capture over the TOUCHED files only
+                    # (pruning is conservative, so they hold every existing
+                    # update key) — O(touched), same as the rewrite itself
+                    if touched:
+                        old_keys = old.select(key)
+                        changes = (
+                            old.join(updates.select(key), key, "semi")
+                            .withColumn("_change_type",
+                                        F.lit("update_preimage"))
+                            .unionByName(
+                                updates.join(old_keys, key, "semi")
+                                .withColumn("_change_type",
+                                            F.lit("update_postimage")))
+                            .unionByName(
+                                updates.join(old_keys, key, "left_anti")
+                                .withColumn("_change_type", F.lit("insert"))))
+                    else:
+                        changes = updates.withColumn("_change_type",
+                                                     F.lit("insert"))
+                    cdf = self._write_cdf(changes, meta)
+                v = base + 1
+                actions = [{"op": "merge"},
+                           *([{"meta": meta}] if evolved else []),
+                           *adds, *cdf,
+                           *({"remove": {"path": a["path"]}} for a in touched)]
+                if txn is not None:
+                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
+                if self._commit(actions, v):
+                    self._maybe_checkpoint(v)
+                    return {"files_scanned": len(live),
+                            "files_rewritten": len(touched),
+                            "files_untouched": untouched}
+                # lost the race. Before re-running the data plane, classify
+                # the interleaved commits (WriteSerializable): if they are
+                # all blind appends provably disjoint from our key set, the
+                # rewrite we already wrote is still exactly right — land it
+                # at the new head and skip the re-run.
+                rv = self._retry_if_disjoint(
+                    base, actions, prune,
+                    txn_app=txn[0] if txn is not None else None)
+                if rv is not None:
+                    self._maybe_checkpoint(rv)
+                    return {"files_scanned": len(live),
+                            "files_rewritten": len(touched),
+                            "files_untouched": untouched,
+                            "rerun_avoided": True}
+                # real conflict: orphan the files we just wrote (invisible —
+                # no commit references them) and retry on the new snapshot
 
     def merge_when(self, source: DataFrame,
                    update_cond: str | None = None,
@@ -2826,88 +2765,77 @@ class TxTable:
         # pinned for the commit's lifetime (see merge_upsert): read by
         # the pruner, both sides of the clause join's data write, the
         # constraint check, and the CDF capture
-        source = self._check_schema(source, meta,
-                                    constraints=False).persist()
-        try:
-            return self._merge_when_pinned(
-                source, meta, key, update_cond, delete_cond,
-                insert_cond, txn)
-        finally:
-            source.unpersist()
+        with pins() as pin:
+            source = pin(self._check_schema(source, meta,
+                                            constraints=False))
+            cols = source.columns
+            prune = self._key_pruner(source, key)
+            upd = F.expr(update_cond) if update_cond else F.lit(True)
+            dele = F.expr(delete_cond) if delete_cond else F.lit(False)
+            ins = F.expr(insert_cond) if insert_cond else F.lit(True)
 
-    def _merge_when_pinned(self, source: DataFrame, meta: dict,
-                           key: str, update_cond: str | None,
-                           delete_cond: str | None,
-                           insert_cond: str | None,
-                           txn: tuple[str, int] | None) -> dict:
-        cols = source.columns
-        prune = self._key_pruner(source, key)
-        upd = F.expr(update_cond) if update_cond else F.lit(True)
-        dele = F.expr(delete_cond) if delete_cond else F.lit(False)
-        ins = F.expr(insert_cond) if insert_cond else F.lit(True)
-
-        while True:
-            if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                return {"files_scanned": 0, "files_rewritten": 0,
-                        "files_untouched": 0, "skipped_replay": True}
-            base = self.versions()[-1]          # pinned read (see merge)
-            _, live = self._state(base)
-            touched = prune(list(live.values()))
-            old = self._read_files(meta, touched)
-            j = (old.select(F.struct(*cols).alias("tgt"))
-                 .join(source.select(F.struct(*cols).alias("src")),
-                       F.col(f"tgt.{key}") == F.col(f"src.{key}"),
-                       "full"))
-            matched = F.col("tgt").isNotNull() & F.col("src").isNotNull()
-            keep_row = (
-                F.when(matched & dele, F.lit(None).cast(j.schema["tgt"]
-                                                        .dataType))
-                 .when(matched & upd, F.col("src"))
-                 .when(matched, F.col("tgt"))
-                 .when(F.col("tgt").isNotNull(), F.col("tgt"))   # tgt-only
-                 .when(ins, F.col("src"))                        # src-only
-                 .otherwise(F.lit(None).cast(j.schema["tgt"].dataType)))
-            new_rows = (j.select(keep_row.alias("r"))
-                         .where(F.col("r").isNotNull())
-                         .select("r.*"))
-            # constraints on the rows this merge actually WRITES from
-            # the source (updates + inserts) — kept target rows were
-            # validated by their own writes, delete-consumed and
-            # insert-filtered source rows never land in a file
-            self._validate_constraints(
-                j.where((matched & ~dele & upd)
-                        | (F.col("tgt").isNull() & ins)).select("src.*"),
-                meta)
-            adds = self._write_files(new_rows, key,
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            cdf: list[dict] = []
-            if meta.get("change_feed"):
-                # _change_type must resolve src/tgt BEFORE flattening
-                pre = (j.where(matched & (dele | upd))
-                       .withColumn("_change_type",
-                                   F.when(dele, F.lit("delete"))
-                                    .otherwise(F.lit("update_preimage")))
-                       .select("tgt.*", "_change_type"))
-                post = (j.where(matched & ~dele & upd)
-                        .withColumn("_change_type",
-                                    F.lit("update_postimage"))
-                        .select("src.*", "_change_type"))
-                inserted = (j.where(F.col("tgt").isNull() & ins)
-                            .withColumn("_change_type", F.lit("insert"))
+            while True:
+                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
+                    return {"files_scanned": 0, "files_rewritten": 0,
+                            "files_untouched": 0, "skipped_replay": True}
+                base = self.versions()[-1]          # pinned read (see merge)
+                _, live = self._state(base)
+                touched = prune(list(live.values()))
+                old = self._read_files(meta, touched)
+                j = (old.select(F.struct(*cols).alias("tgt"))
+                     .join(source.select(F.struct(*cols).alias("src")),
+                           F.col(f"tgt.{key}") == F.col(f"src.{key}"),
+                           "full"))
+                matched = F.col("tgt").isNotNull() & F.col("src").isNotNull()
+                keep_row = (
+                    F.when(matched & dele, F.lit(None).cast(j.schema["tgt"]
+                                                            .dataType))
+                     .when(matched & upd, F.col("src"))
+                     .when(matched, F.col("tgt"))
+                     .when(F.col("tgt").isNotNull(), F.col("tgt"))   # tgt-only
+                     .when(ins, F.col("src"))                        # src-only
+                     .otherwise(F.lit(None).cast(j.schema["tgt"].dataType)))
+                new_rows = (j.select(keep_row.alias("r"))
+                             .where(F.col("r").isNotNull())
+                             .select("r.*"))
+                # constraints on the rows this merge actually WRITES from
+                # the source (updates + inserts) — kept target rows were
+                # validated by their own writes, delete-consumed and
+                # insert-filtered source rows never land in a file
+                self._validate_constraints(
+                    j.where((matched & ~dele & upd)
+                            | (F.col("tgt").isNull() & ins)).select("src.*"),
+                    meta)
+                adds = self._write_files(new_rows, key,
+                                         stats_cols=meta.get("stats_cols"),
+                                         partition_by=meta.get("partition_by"),
+                                         meta=meta)
+                cdf: list[dict] = []
+                if meta.get("change_feed"):
+                    # _change_type must resolve src/tgt BEFORE flattening
+                    pre = (j.where(matched & (dele | upd))
+                           .withColumn("_change_type",
+                                       F.when(dele, F.lit("delete"))
+                                        .otherwise(F.lit("update_preimage")))
+                           .select("tgt.*", "_change_type"))
+                    post = (j.where(matched & ~dele & upd)
+                            .withColumn("_change_type",
+                                        F.lit("update_postimage"))
                             .select("src.*", "_change_type"))
-                cdf = self._write_cdf(pre.unionByName(post)
-                                      .unionByName(inserted), meta)
-            actions = [{"op": "merge"}, *adds, *cdf,
-                       *({"remove": {"path": a["path"]}} for a in touched)]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return {"files_scanned": len(live),
-                        "files_rewritten": len(touched),
-                        "files_untouched": len(live) - len(touched)}
+                    inserted = (j.where(F.col("tgt").isNull() & ins)
+                                .withColumn("_change_type", F.lit("insert"))
+                                .select("src.*", "_change_type"))
+                    cdf = self._write_cdf(pre.unionByName(post)
+                                          .unionByName(inserted), meta)
+                actions = [{"op": "merge"}, *adds, *cdf,
+                           *({"remove": {"path": a["path"]}} for a in touched)]
+                if txn is not None:
+                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
+                if self._commit(actions, base + 1):
+                    self._maybe_checkpoint(base + 1)
+                    return {"files_scanned": len(live),
+                            "files_rewritten": len(touched),
+                            "files_untouched": len(live) - len(touched)}
 
     def apply_changes(self, changes: DataFrame,
                       txn: tuple[str, int] | None = None) -> dict:
@@ -2939,78 +2867,72 @@ class TxTable:
         # all derive from it, and each un-cached re-read would replay
         # the micro-batch source (a Python data-source scan in the
         # streaming replica) plus the netting window shuffle
-        last = (changes.where(F.col("_change_type") != "update_preimage")
+        with pins() as pin:
+            last = pin(
+                changes.where(F.col("_change_type") != "update_preimage")
                 .withColumn("__rn", F.row_number().over(
                     W.partitionBy(key).orderBy(F.desc(ord_col))))
-                .where(F.col("__rn") == 1)).persist()
-        try:
-            return self._apply_changes_pinned(last, meta, key, txn)
-        finally:
-            last.unpersist()
+                .where(F.col("__rn") == 1))
+            cols = [f["name"]
+                    for f in json.loads(meta["schema"])["fields"]]
+            ups = self._check_schema(
+                last.where(F.col("_change_type") != "delete").select(*cols),
+                meta)
+            dels = last.where(F.col("_change_type") == "delete") \
+                       .select(key).distinct()
+            all_keys = ups.select(key).unionByName(dels).distinct()
+            prune = self._key_pruner(all_keys, key)
 
-    def _apply_changes_pinned(self, last: DataFrame, meta: dict,
-                              key: str,
-                              txn: tuple[str, int] | None) -> dict:
-        cols = [f["name"]
-                for f in json.loads(meta["schema"])["fields"]]
-        ups = self._check_schema(
-            last.where(F.col("_change_type") != "delete").select(*cols),
-            meta)
-        dels = last.where(F.col("_change_type") == "delete") \
-                   .select(key).distinct()
-        all_keys = ups.select(key).unionByName(dels).distinct()
-        prune = self._key_pruner(all_keys, key)
-
-        while True:
-            if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                return {"files_scanned": 0, "files_rewritten": 0,
-                        "files_untouched": 0, "skipped_replay": True}
-            base = self.versions()[-1]          # pinned read (see merge)
-            _, live = self._state(base)
-            touched = prune(list(live.values()))
-            if touched:
-                old = self._read_files(meta, touched)
-                new_rows = old.join(all_keys, key, "left_anti") \
-                              .unionByName(ups)
-            else:
-                new_rows = ups
-            adds = self._write_files(new_rows, key,
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            cdf: list[dict] = []
-            if meta.get("change_feed"):
+            while True:
+                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
+                    return {"files_scanned": 0, "files_rewritten": 0,
+                            "files_untouched": 0, "skipped_replay": True}
+                base = self.versions()[-1]          # pinned read (see merge)
+                _, live = self._state(base)
+                touched = prune(list(live.values()))
                 if touched:
-                    old_hit = old.join(all_keys, key, "semi")
-                    old_keys = old_hit.select(key)
-                    out = (
-                        old_hit.join(ups.select(key), key, "semi")
-                        .withColumn("_change_type",
-                                    F.lit("update_preimage"))
-                        .unionByName(
-                            old_hit.join(dels, key, "semi")
-                            .withColumn("_change_type", F.lit("delete")))
-                        .unionByName(
-                            ups.join(old_keys, key, "semi")
-                            .withColumn("_change_type",
-                                        F.lit("update_postimage")))
-                        .unionByName(
-                            ups.join(old_keys, key, "left_anti")
-                            .withColumn("_change_type",
-                                        F.lit("insert"))))
+                    old = self._read_files(meta, touched)
+                    new_rows = old.join(all_keys, key, "left_anti") \
+                                  .unionByName(ups)
                 else:
-                    out = ups.withColumn("_change_type", F.lit("insert"))
-                cdf = self._write_cdf(out, meta)
-            actions = [{"op": "merge"}, *adds, *cdf,
-                       *({"remove": {"path": a["path"]}}
-                         for a in touched)]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return {"files_scanned": len(live),
-                        "files_rewritten": len(touched),
-                        "files_untouched": len(live) - len(touched)}
+                    new_rows = ups
+                adds = self._write_files(new_rows, key,
+                                         stats_cols=meta.get("stats_cols"),
+                                         partition_by=meta.get("partition_by"),
+                                         meta=meta)
+                cdf: list[dict] = []
+                if meta.get("change_feed"):
+                    if touched:
+                        old_hit = old.join(all_keys, key, "semi")
+                        old_keys = old_hit.select(key)
+                        out = (
+                            old_hit.join(ups.select(key), key, "semi")
+                            .withColumn("_change_type",
+                                        F.lit("update_preimage"))
+                            .unionByName(
+                                old_hit.join(dels, key, "semi")
+                                .withColumn("_change_type", F.lit("delete")))
+                            .unionByName(
+                                ups.join(old_keys, key, "semi")
+                                .withColumn("_change_type",
+                                            F.lit("update_postimage")))
+                            .unionByName(
+                                ups.join(old_keys, key, "left_anti")
+                                .withColumn("_change_type",
+                                            F.lit("insert"))))
+                    else:
+                        out = ups.withColumn("_change_type", F.lit("insert"))
+                    cdf = self._write_cdf(out, meta)
+                actions = [{"op": "merge"}, *adds, *cdf,
+                           *({"remove": {"path": a["path"]}}
+                             for a in touched)]
+                if txn is not None:
+                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
+                if self._commit(actions, base + 1):
+                    self._maybe_checkpoint(base + 1)
+                    return {"files_scanned": len(live),
+                            "files_rewritten": len(touched),
+                            "files_untouched": len(live) - len(touched)}
 
     def delete_keys(self, keys: DataFrame) -> dict:
         """Transactional DELETE by key: rewrite only the files that can
@@ -3020,8 +2942,8 @@ class TxTable:
         meta = self._state()[0]
         key = meta["key_col"]
         # pinned (see merge_upsert): pruner + anti-join + CDF semi-join
-        keys = keys.select(key).distinct().persist()
-        try:
+        with pins() as pin:
+            keys = pin(keys.select(key).distinct())
             prune = self._key_pruner(keys, key)
 
             while True:
@@ -3050,8 +2972,6 @@ class TxTable:
                     return {"files_scanned": len(live),
                             "files_rewritten": len(touched),
                             "files_untouched": len(live) - len(touched)}
-        finally:
-            keys.unpersist()
 
     def delete_keys_dv(self, keys: DataFrame) -> dict:
         """MERGE-ON-READ DELETE via DELETION VECTORS (Delta DVs /
@@ -3072,85 +2992,79 @@ class TxTable:
         meta = self._state()[0]
         key = meta["key_col"]
         # pinned (see merge_upsert): pruner + DV semi-join + CDF
-        keys = keys.select(key).distinct().persist()
-        try:
-            return self._delete_keys_dv_pinned(keys, meta, key)
-        finally:
-            keys.unpersist()
+        with pins() as pin:
+            keys = pin(keys.select(key).distinct())
+            prune = self._key_pruner(keys, key)
 
-    def _delete_keys_dv_pinned(self, keys: DataFrame, meta: dict,
-                               key: str) -> dict:
-        prune = self._key_pruner(keys, key)
-
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            _, live = self._state(base)
-            touched = prune(list(live.values()))
-            if not touched:
-                return {"files_tagged": 0, "rows_deleted": 0}
-            # DV-applied read (already-hidden rows are not re-recorded),
-            # file column kept so the pairs are per-file exact
-            old = self._read_files(meta, touched, keep_file_col="__file")
-            doomed = old.join(keys, key, "semi")
-            staging = os.path.join(self.data_dir,
-                                   f".stage-{uuid.uuid4().hex}")
-            # DVs are kilobytes by design, but a table-sized key set
-            # must not funnel through one writer task: hash-partition
-            # the pairs by touched FILE (~64 data files per DV file, so
-            # the small-delete case still writes one), each data file's
-            # pairs land wholly in one DV file, and the write scales
-            # out with the delete instead of coalescing to a task
-            n_dv = max(1, (len(touched) + 63) // 64)
-            doomed.select(F.col("__file"), F.col(key).alias("__key")) \
-                  .repartition(n_dv, F.col("__file")) \
-                  .write.mode("overwrite").parquet(staging)
-            dv_paths: list[str] = []
-            for part in sorted(os.listdir(staging)):
-                if part.endswith(".parquet"):
-                    dvname = f"dv-{uuid.uuid4().hex}.parquet"
-                    os.rename(os.path.join(staging, part),
-                              os.path.join(self.data_dir, dvname))
-                    dv_paths.append(dvname)
-            shutil.rmtree(staging, ignore_errors=True)
-            # one metadata-plane job: (dv file, data file) pairs + counts
-            # — one row per touched file, the same order as the merge's
-            # own stats collect
-            stats = (self.spark.read.parquet(
-                         *[os.path.join(self.data_dir, p)
-                           for p in dv_paths])
-                     .groupBy(F.element_at(
-                         F.split(F.input_file_name(), "/"), -1)
-                         .alias("__dv"), "__file")
-                     .agg(F.count(F.lit(1)).alias("n"))).collect()
-            dv_of = {r["__file"]: r["__dv"] for r in stats}
-            n_del = sum(r["n"] for r in stats)
-            # unlink DV files no pair landed in (empty hash buckets)
-            used = {r["__dv"] for r in stats}
-            for p in dv_paths:
-                if p not in used:
-                    os.unlink(os.path.join(self.data_dir, p))
-            if n_del == 0:
-                return {"files_tagged": 0, "rows_deleted": 0}
-            cdf: list[dict] = []
-            if meta.get("change_feed"):
-                cdf = self._write_cdf(
-                    doomed.drop("__file")
-                    .withColumn("_change_type", F.lit("delete")), meta)
-            v = base + 1
-            meta2, stamped = self._stamp_feature(meta, "deletion_vectors")
-            actions = [{"op": "delete_dv"},
-                       *([{"meta": meta2}] if stamped else []),
-                       *({"dv": {"path": a["path"],
-                                 "keys": dv_of[a["path"]]}}
-                         for a in touched if a["path"] in dv_of),
-                       *cdf]
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_tagged": len(dv_of),
-                        "rows_deleted": int(n_del)}
-            # lost the race: a concurrent rewrite may have replaced a
-            # tagged file — recompute against the new snapshot (the
-            # orphaned dv file is unreferenced ⇒ invisible)
+            while True:
+                base = self.versions()[-1]          # pinned read (see merge)
+                _, live = self._state(base)
+                touched = prune(list(live.values()))
+                if not touched:
+                    return {"files_tagged": 0, "rows_deleted": 0}
+                # DV-applied read (already-hidden rows are not re-recorded),
+                # file column kept so the pairs are per-file exact
+                old = self._read_files(meta, touched, keep_file_col="__file")
+                doomed = old.join(keys, key, "semi")
+                staging = os.path.join(self.data_dir,
+                                       f".stage-{uuid.uuid4().hex}")
+                # DVs are kilobytes by design, but a table-sized key set
+                # must not funnel through one writer task: hash-partition
+                # the pairs by touched FILE (~64 data files per DV file, so
+                # the small-delete case still writes one), each data file's
+                # pairs land wholly in one DV file, and the write scales
+                # out with the delete instead of coalescing to a task
+                n_dv = max(1, (len(touched) + 63) // 64)
+                doomed.select(F.col("__file"), F.col(key).alias("__key")) \
+                      .repartition(n_dv, F.col("__file")) \
+                      .write.mode("overwrite").parquet(staging)
+                dv_paths: list[str] = []
+                for part in sorted(os.listdir(staging)):
+                    if part.endswith(".parquet"):
+                        dvname = f"dv-{uuid.uuid4().hex}.parquet"
+                        os.rename(os.path.join(staging, part),
+                                  os.path.join(self.data_dir, dvname))
+                        dv_paths.append(dvname)
+                shutil.rmtree(staging, ignore_errors=True)
+                # one metadata-plane job: (dv file, data file) pairs + counts
+                # — one row per touched file, the same order as the merge's
+                # own stats collect
+                stats = (self.spark.read.parquet(
+                             *[os.path.join(self.data_dir, p)
+                               for p in dv_paths])
+                         .groupBy(F.element_at(
+                             F.split(F.input_file_name(), "/"), -1)
+                             .alias("__dv"), "__file")
+                         .agg(F.count(F.lit(1)).alias("n"))).collect()
+                dv_of = {r["__file"]: r["__dv"] for r in stats}
+                n_del = sum(r["n"] for r in stats)
+                # unlink DV files no pair landed in (empty hash buckets)
+                used = {r["__dv"] for r in stats}
+                for p in dv_paths:
+                    if p not in used:
+                        os.unlink(os.path.join(self.data_dir, p))
+                if n_del == 0:
+                    return {"files_tagged": 0, "rows_deleted": 0}
+                cdf: list[dict] = []
+                if meta.get("change_feed"):
+                    cdf = self._write_cdf(
+                        doomed.drop("__file")
+                        .withColumn("_change_type", F.lit("delete")), meta)
+                v = base + 1
+                meta2, stamped = self._stamp_feature(meta, "deletion_vectors")
+                actions = [{"op": "delete_dv"},
+                           *([{"meta": meta2}] if stamped else []),
+                           *({"dv": {"path": a["path"],
+                                     "keys": dv_of[a["path"]]}}
+                             for a in touched if a["path"] in dv_of),
+                           *cdf]
+                if self._commit(actions, v):
+                    self._maybe_checkpoint(v)
+                    return {"files_tagged": len(dv_of),
+                            "rows_deleted": int(n_del)}
+                # lost the race: a concurrent rewrite may have replaced a
+                # tagged file — recompute against the new snapshot (the
+                # orphaned dv file is unreferenced ⇒ invisible)
 
     def update_where(self, set_exprs: dict[str, str], where: str,
                      partitions=None, key_lo=None, key_hi=None,
@@ -3231,69 +3145,56 @@ class TxTable:
             # the constraint check and (with CDF on) the pre/post-image
             # branches each re-scan it otherwise — same per-commit
             # source-pinning contract as merge_upsert/apply_changes.
-            old = self._read_files(meta, touched).persist()
-            try:
-                result = self._dml_where_pinned(
-                    kind, old, pred, set_exprs, meta, schema, key,
-                    base, candidates, touched, live, n_matched)
-            finally:
-                old.unpersist()
-            if result is not None:
-                return result
+            with pins() as pin:
+                old = pin(self._read_files(meta, touched))
+                matched = old.where(pred)
+                kept = old.where(~pred.eqNullSafe(F.lit(True)))
+                if kind == "update":
+                    updated = matched.select(
+                        *[F.expr(set_exprs[f.name]).cast(f.dataType)
+                           .alias(f.name) if f.name in set_exprs
+                          else F.col(f.name) for f in schema.fields])
+                    # GENERATED columns recompute on the updated rows —
+                    # a SET on one of their source columns must never
+                    # leave the derived value stale
+                    for c, expr in (meta.get("generated") or {}).items():
+                        updated = updated.withColumn(
+                            c, F.expr(expr).cast(schema[c].dataType))
+                    # constraints on the rows actually written (the kept
+                    # rows were validated by their own writes)
+                    self._validate_constraints(updated, meta)
+                    new_rows = kept.unionByName(updated)
+                else:
+                    new_rows = kept
+                adds = self._write_files(new_rows, key,
+                                         stats_cols=meta.get("stats_cols"),
+                                         partition_by=meta.get("partition_by"),
+                                         meta=meta)
+                cdf: list[dict] = []
+                if meta.get("change_feed"):
+                    if kind == "update":
+                        changes = (matched.withColumn(
+                                       "_change_type",
+                                       F.lit("update_preimage"))
+                                   .unionByName(updated.withColumn(
+                                       "_change_type",
+                                       F.lit("update_postimage"))))
+                    else:
+                        changes = matched.withColumn("_change_type",
+                                                     F.lit("delete"))
+                    cdf = self._write_cdf(changes, meta)
+                op = "update" if kind == "update" else "delete"
+                actions = [{"op": op}, *adds, *cdf,
+                           *({"remove": {"path": a["path"]}}
+                             for a in touched)]
+                if self._commit(actions, base + 1):
+                    self._maybe_checkpoint(base + 1)
+                    return {"files_scanned": len(candidates),
+                            "files_rewritten": len(touched),
+                            "files_untouched": len(live) - len(touched),
+                            "rows_matched": int(n_matched)}
             # lost the race: orphan the written files and recompute
             # against the new snapshot
-
-    def _dml_where_pinned(self, kind: str, old: DataFrame, pred,
-                          set_exprs, meta: dict, schema: StructType,
-                          key: str, base: int, candidates, touched,
-                          live, n_matched) -> dict | None:
-        matched = old.where(pred)
-        kept = old.where(~pred.eqNullSafe(F.lit(True)))
-        if kind == "update":
-            updated = matched.select(
-                *[F.expr(set_exprs[f.name]).cast(f.dataType)
-                   .alias(f.name) if f.name in set_exprs
-                  else F.col(f.name) for f in schema.fields])
-            # GENERATED columns recompute on the updated rows —
-            # a SET on one of their source columns must never
-            # leave the derived value stale
-            for c, expr in (meta.get("generated") or {}).items():
-                updated = updated.withColumn(
-                    c, F.expr(expr).cast(schema[c].dataType))
-            # constraints on the rows actually written (the kept
-            # rows were validated by their own writes)
-            self._validate_constraints(updated, meta)
-            new_rows = kept.unionByName(updated)
-        else:
-            new_rows = kept
-        adds = self._write_files(new_rows, key,
-                                 stats_cols=meta.get("stats_cols"),
-                                 partition_by=meta.get("partition_by"),
-                                 meta=meta)
-        cdf: list[dict] = []
-        if meta.get("change_feed"):
-            if kind == "update":
-                changes = (matched.withColumn(
-                               "_change_type",
-                               F.lit("update_preimage"))
-                           .unionByName(updated.withColumn(
-                               "_change_type",
-                               F.lit("update_postimage"))))
-            else:
-                changes = matched.withColumn("_change_type",
-                                             F.lit("delete"))
-            cdf = self._write_cdf(changes, meta)
-        op = "update" if kind == "update" else "delete"
-        actions = [{"op": op}, *adds, *cdf,
-                   *({"remove": {"path": a["path"]}}
-                     for a in touched)]
-        if self._commit(actions, base + 1):
-            self._maybe_checkpoint(base + 1)
-            return {"files_scanned": len(candidates),
-                    "files_rewritten": len(touched),
-                    "files_untouched": len(live) - len(touched),
-                    "rows_matched": int(n_matched)}
-        return None     # lost the race — caller retries
 
     def purge_deletes(self) -> dict:
         """Materialize outstanding deletion vectors: rewrite ONLY the
@@ -3623,9 +3524,7 @@ class TxTable:
         names to an external reader — export after renames hands them
         the mapping problem, so prefer exporting tables without active
         mapping (documented trade of the interop seam)."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         dv = [a["path"] for a in live.values() if a.get("_dvs")]
         if dv:
             raise ValueError(
@@ -3741,9 +3640,7 @@ class TxTable:
         "files_read"}`` — min/max in the log's serialized domain (ISO
         strings for date/timestamp), matching :meth:`read_where` stats
         predicates. Pinned in tests/test_txlog.py."""
-        meta, live = self._state(version, self._read_mode(version))
-        if meta is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        meta, live = self._read_state(version)
         key = meta["key_col"]
 
         def col_dtype(c: str) -> str:

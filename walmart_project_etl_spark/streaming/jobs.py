@@ -21,6 +21,8 @@ from pyspark.sql.window import Window
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
+from walmart_project_etl_spark.operators.util import pins
+
 EVENTS_SCHEMA = StructType([
     StructField("event_id", LongType()),
     StructField("ts", TimestampType()),
@@ -307,9 +309,8 @@ def stream_upsert_tx(spark: SparkSession, events_path: str,
         # pinned per batch: read by the current-rows lookup (pruner or
         # semi-join) and again by the upsert fold — uncached each pass
         # replays the batch read + the latest-per-key window
-        batch_latest = latest_event_per_key(batch_df,
-                                            ["user_id"]).persist()
-        try:
+        with pins() as pin:
+            batch_latest = pin(latest_event_per_key(batch_df, ["user_id"]))
             # merge must keep the OLDER stored row when the batch's row
             # is not actually newer — fold in current rows for these
             # users. Cost-based read: the bloom/range-pruned key-set
@@ -325,8 +326,6 @@ def stream_upsert_tx(spark: SparkSession, events_path: str,
                 cur.unionByName(batch_latest), ["user_id"])
             t.merge_upsert(upserts,
                            txn=("stream_upsert_tx", int(batch_id)))
-        finally:
-            batch_latest.unpersist()
 
     ev = (spark.readStream
           .schema(EVENTS_SCHEMA)
@@ -377,14 +376,12 @@ def stream_partition_ingest(spark: SparkSession, events_path: str,
         # pinned per batch: the merge and the touched-partition probe
         # both read it — uncached, each replays the batch read + the
         # dropDuplicates shuffle
-        batch = batch_df.dropDuplicates(["event_id"]).persist()
-        try:
+        with pins() as pin:
+            batch = pin(batch_df.dropDuplicates(["event_id"]))
             t.merge_upsert(batch, txn=("stream_partition_ingest",
                                        int(batch_id)))
             touched = [r["event_type"] for r in
                        batch.select("event_type").distinct().collect()]
-        finally:
-            batch.unpersist()
         if touched:
             t.compact_partitions(touched, target_rows=compact_target_rows)
 
@@ -630,9 +627,9 @@ def stream_scd2_history(spark: SparkSession, source_root: str,
         # pinned per batch: the windowed events feed the affected-key
         # collect, the open-rows branch, and the close join — uncached
         # each pass replays the micro-batch source read + the window
-        evs = evs.withColumn("__next",
-                             F.lead("_commit_version").over(w)).persist()
-        try:
+        with pins() as pin:
+            evs = pin(evs.withColumn("__next",
+                                     F.lead("_commit_version").over(w)))
             opens = (evs.where(F.col("_change_type") != "delete")
                      .select(F.col(key), *[F.col(a) for a in attrs],
                              F.col("_commit_version").cast("long")
@@ -667,8 +664,6 @@ def stream_scd2_history(spark: SparkSession, source_root: str,
                 upserts.select("hk", key, *attrs, "eff_from", "eff_to",
                                "is_current"),
                 txn=(f"scd2:{source_root}", int(batch_id)))
-        finally:
-            evs.unpersist()
 
     q = (feed.writeStream
          .foreachBatch(apply)
