@@ -3,6 +3,7 @@ and the file-pruned copy-on-write MERGE."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -3003,27 +3004,225 @@ def test_validation_single_pass_same_messages(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") + 1).alias("v")))
 
 
-def test_key_bloom_bits_exact_vs_spec(spark, tmp_path):
-    """The exploded (file, word) bit_or fold must log bit-identical
-    blooms to the spec: bit ``pmod(xxhash64(key, i), _BLOOM_BITS)`` set
-    for every key in the file and every probe i < _BLOOM_K."""
-    from walmart_project_etl_spark.sources.txlog import _BLOOM_BITS, _BLOOM_K
+def _spec_bloom(spark, path: str, col: str, bits: int) -> int:
+    """The bloom spec over every row of one file, NULL rows included:
+    bit ``pmod(xxhash64(v, i), bits)`` set for every probe i."""
+    from walmart_project_etl_spark.sources.txlog import _BLOOM_K
 
-    df = spark.range(0, 500).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    tt = TxTable(spark, str(tmp_path / "tt"))
-    tt.create(df, "k", n_files=3)
-    _meta, live = tt._state()
-    assert len(live) == 3
-    for a in live.values():
-        rows = (spark.read.parquet(
-                    os.path.join(tt.data_dir, a["path"]))
-                .select(F.array(*[
-                    F.pmod(F.xxhash64(F.col("k"), F.lit(i)),
-                           F.lit(_BLOOM_BITS))
-                    for i in range(_BLOOM_K)]).alias("p"))).collect()
-        want = 0
-        for r in rows:
-            for p in r["p"]:
-                want |= 1 << int(p)
-        assert int(a["bloom"], 16) == want, a["path"]
+    want = 0
+    for r in spark.read.parquet(path).select(F.array(*[
+            F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(bits))
+            for i in range(_BLOOM_K)]).alias("p")).collect():
+        for p in r["p"]:
+            want |= 1 << int(p)
+    return want
+
+
+def test_key_bloom_bits_exact_vs_spec(spark, tmp_path):
+    """The one tagged (file, tag, word) bit_or fold must log blooms
+    bit-identical to the spec, for the key and for every ``bloom_cols``
+    column (NULLs included), on plain and partitioned tables."""
+    from walmart_project_etl_spark.sources.txlog import _BLOOM_BITS
+
+    ids = spark.range(0, 500)
+    tables = {
+        "key_only": (ids.select(F.col("id").alias("k"),
+                                (F.col("id") * 2).alias("v")),
+                     dict(n_files=3)),
+        "two_bloom_cols": (ids.select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") % 5 != 0, (F.col("id") % 37).cast("string"))
+             .alias("s"),
+            F.when(F.col("id") % 7 != 0, F.col("id") * 3).alias("n")),
+            dict(n_files=3, bloom_cols=["s", "n"], bloom_bits=2048)),
+        "partitioned": (ids.select(F.col("id").alias("k"),
+                                   (F.col("id") % 3).cast("int").alias("g"),
+                                   (F.col("id") % 11).alias("n")),
+                        dict(partition_by="g", bloom_cols=["n"])),
+    }
+    for name, (df, kw) in tables.items():
+        tt = TxTable(spark, str(tmp_path / name))
+        tt.create(df, "k", **kw)
+        meta, live = tt._state()
+        assert len(live) == 3, name
+        for a in live.values():
+            path = os.path.join(tt.data_dir, a["path"])
+            assert int(a["bloom"], 16) == \
+                _spec_bloom(spark, path, "k", _BLOOM_BITS), (name, a)
+            for c in kw.get("bloom_cols", []):
+                assert int(a["cblooms"][c], 16) == _spec_bloom(
+                    spark, path, c, meta["bloom_bits"]), (name, c, a)
+
+
+def _file_stats(spark, path: str, key: str, stats_cols: list[str],
+                pcol: str | None) -> dict:
+    """A Spark aggregate over one data file, in add-action form: the
+    reference the footer-read stats must equal."""
+    df = spark.read.parquet(path)
+    types = dict(df.dtypes)
+
+    def v(c):
+        return F.col(c) if types[c] in ("int", "bigint", "string") \
+            else F.col(c).cast("string")
+
+    aggs = [F.count(F.lit(1)), F.min(key), F.max(key)]
+    for c in stats_cols:
+        aggs += [F.min(v(c)), F.max(v(c)),
+                 F.sum(F.col(c).isNull().cast("long"))]
+    if pcol:
+        aggs.append(F.first(pcol))
+    r = list(df.agg(*aggs).first())
+    out = {"rows": r[0], "kmin": r[1], "kmax": r[2]}
+    if stats_cols:
+        out["cstats"] = {c: [r[3 + 3 * i], r[4 + 3 * i]]
+                         for i, c in enumerate(stats_cols)}
+        out["cnulls"] = {c: r[5 + 3 * i] for i, c in enumerate(stats_cols)}
+    if pcol:
+        out["pval"] = r[-1]
+    return out
+
+
+_FOOTER_CASES = {
+    # (key type, stats columns, partition column, footer path taken)
+    "bigint_key_int_string_date": ("bigint", ["i", "s", "d"], None, True),
+    "string_key_fallback_types": ("string", ["x", "ts", "dec"], None, False),
+    "long_string": ("bigint", ["s", "long"], None, False),
+    "partitioned": ("bigint", ["i", "d"], "g", True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FOOTER_CASES))
+def test_footer_stats_equal_file_aggregate(spark, tmp_path, case):
+    """Every add action's rows, kmin/kmax, cstats, cnulls and pval equal
+    a Spark aggregate over its file, whether they came from the parquet
+    footers or (double with NaN, timestamp, decimal, a >4 KB string)
+    from the fallback aggregate. Includes NULLs, the calendar edge
+    dates, and an appended file whose stats column is all NULL."""
+    from decimal import Decimal
+
+    from walmart_project_etl_spark.sources.txlog import _footer_stats
+
+    ktype, stats_cols, pcol, footer = _FOOTER_CASES[case]
+    date = datetime.date
+    edge = [date(1, 1, 1), date(1582, 10, 4), date(9999, 12, 31)]
+    rows = [(i if ktype == "bigint" else f"k{i:04d}",
+             None if i % 4 == 0 else i * 7 - 100,
+             None if i % 5 == 0 else f"s{i % 13}",
+             edge[i] if i < 3 else date(2020, 1, 1 + i % 28),
+             float("nan") if i == 9 else None if i == 10 else i / 4,
+             datetime.datetime(2021, 3, 1, i % 24, 5),
+             Decimal(i) / 100,
+             ("z" * 5000) if i == 30 else "a",
+             i % 3)
+            for i in range(60)]
+    schema = (f"k {ktype}, i int, s string, d date, x double, "
+              f"ts timestamp, dec decimal(10,2), long string, g int")
+    df = spark.createDataFrame(rows, schema)
+    tt = TxTable(spark, str(tmp_path / "t"))
+    tt.create(df, "k", n_files=2, stats_cols=stats_cols, partition_by=pcol)
+    # a later write whose stats columns are all NULL in its file
+    nulls = df.limit(1).select(
+        *[F.lit(None).cast(t).alias(c) if c in stats_cols
+          and c != pcol else F.col(c) for c, t in df.dtypes])
+    nulls = nulls.withColumn(
+        "k", F.lit(10_000 if ktype == "bigint" else "k9999").cast(ktype))
+    tt.append(nulls)
+    _, live = tt._state()
+    assert len(live) >= 3
+    types = dict(df.dtypes)
+    need = {c: types[c] for c in ["k", *stats_cols, *filter(None, [pcol])]}
+    paths = [os.path.join(tt.data_dir, a["path"]) for a in live.values()]
+    for a, path in zip(live.values(), paths):
+        got = {f: a[f] for f in ("rows", "kmin", "kmax", "cstats",
+                                 "cnulls", "pval") if f in a}
+        assert got == _file_stats(spark, path, "k", stats_cols, pcol), a
+    assert all(_footer_stats(p, need) is not None for p in paths) == footer
+    assert any(set(a["cnulls"].values()) == {a["rows"]}
+               for a in live.values())
+    assert tt.snapshot().count() == 61
+
+
+def test_footer_stats_empty_create_commits_no_file(spark, tmp_path):
+    tt = TxTable(spark, str(tmp_path / "t"))
+    tt.create(spark.createDataFrame([], "k bigint, d date"), "k",
+              stats_cols=["d"], bloom_cols=["k"])
+    _, live = tt._state()
+    assert live == {}
+    assert tt.snapshot().count() == 0
+
+
+def test_footer_stats_combines_row_groups(tmp_path):
+    """Row groups fold: min of mins, max of maxes, summed NULL counts,
+    with all-NULL chunks contributing no bounds; a type the footer
+    cannot order like Spark (double) answers None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from walmart_project_etl_spark.sources.txlog import _footer_stats
+
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(pa.table({
+        "n": pa.array([5, None, -3, 9, None, None, 2], pa.int64()),
+        "s": pa.array(["b", "é", None, "a", None, None, "zz"]),
+        "d": pa.array([datetime.date(2000, 1, 2), None,
+                       datetime.date(1, 1, 1), None, None, None,
+                       datetime.date(9999, 12, 31)]),
+        "z": pa.array([None] * 7, pa.int32()),
+        "x": pa.array([1.0] * 7),
+    }), path, row_group_size=2)
+    assert pq.read_metadata(path).num_row_groups == 4
+    types = {"n": "bigint", "s": "string", "d": "date", "z": "int"}
+    assert _footer_stats(path, types) == (7, {
+        "n": [-3, 9, 3], "s": ["a", "é", 3],
+        "d": ["0001-01-01", "9999-12-31", 4], "z": [None, None, 7]})
+    assert _footer_stats(path, {**types, "x": "double"}) is None
+
+
+def _job_ids(spark) -> set[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution (ids are sequential; the store's
+    count stops at its retained maximum)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(max(store.executionsCount() - 1, 0), 1)
+    return last.apply(0).executionId() if last.size() else -1
+
+
+def test_read_col_in_probes_without_a_job(spark, tmp_path):
+    """The probe values plan as a local relation: building a bloom
+    lookup submits no Spark job; an empty value list reads 0 rows."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"), (F.col("id") % 17).cast("string")
+        .alias("name"))
+    tt = TxTable(spark, str(tmp_path / "t"))
+    tt.create(df, "k", n_files=2, bloom_cols=["name"])
+    before = _job_ids(spark)
+    got = tt.read_col_in("name", ["3", "5", "3"])
+    assert _job_ids(spark) == before
+    assert got.count() == 24
+    assert tt.read_col_in("name", []).count() == 0
+    assert tt.read_col_in("k", []).count() == 0
+    assert tt.read_col_in("k", [4, 4, 7]).count() == 2
+
+
+def test_merge_upsert_metadata_runs_one_query(spark, tmp_path):
+    """A merge on a table with stats and bloom columns runs 3 SQL
+    executions: the pruner's probe collect, the data write and the one
+    bloom fold (stats come from the footers; there were 5 when the
+    stats and each bloom ran their own query)."""
+    df = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") % 9).cast("int").alias("g"),
+        (F.col("id") % 23).cast("string").alias("name"))
+    tt = TxTable(spark, str(tmp_path / "t"))
+    tt.create(df, "k", n_files=3, stats_cols=["g"], bloom_cols=["name"])
+    upd = spark.range(10, 20).select(
+        F.col("id").alias("k"), F.lit(1).alias("g"),
+        F.lit("x").alias("name"))
+    before = _last_execution_id(spark)
+    tt.merge_upsert(upd)
+    assert _last_execution_id(spark) - before == 3
+    assert tt.snapshot().where("name = 'x'").count() == 10

@@ -30,9 +30,10 @@ Cloud Object Stores", VLDB 2020) directly:
   commit untouched (asserted byte-identical by path in tests). Appends
   go through ``repartitionByRange`` on the key, so files carry tight,
   disjoint ranges — at 100 TB a narrow update batch touches a handful
-  of files instead of the whole dimension. The stats pass is two small
-  Spark jobs per commit (min/max/count grouped by ``input_file_name``,
-  plus the exploded key-bloom fold).
+  of files instead of the whole dimension. The stats come from the new
+  files' parquet footers on the driver (an aggregate grouped by
+  ``input_file_name`` when a footer cannot answer exactly), and every
+  bloom of the commit from one exploded, tagged ``bit_or`` job.
 
 Beyond min/max range stats, each data file carries a small per-file
 BLOOM FILTER over its keys (``_BLOOM_BITS`` bits, k=4 xxhash-derived
@@ -136,6 +137,7 @@ the seam ``operators/merge.py`` needs, not a storage product.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -145,7 +147,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from walmart_project_etl_spark.operators.util import pins
 
@@ -160,11 +162,99 @@ _BLOOM_K = 4
 _BLOOM_PROBE_CAP = 100_000
 
 
+def _bloom_probe(col: str, i: int, bits: int):
+    """Probe ``i``'s bit position for ``col`` (xxhash64 seeded by ``i``)."""
+    return F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(bits))
+
+
 def _bloom_positions(key_col: str, bits: int = _BLOOM_BITS):
     """k probe bit-positions per key (xxhash64 seeded per probe)."""
-    return F.array(*[F.pmod(F.xxhash64(F.col(key_col), F.lit(i)),
-                            F.lit(bits))
+    return F.array(*[_bloom_probe(key_col, i, bits)
                      for i in range(_BLOOM_K)])
+
+
+#: column types whose parquet footer statistics equal Spark's per-file
+#: min/max/null-count aggregate exactly (:func:`_footer_stats`): the
+#: footer orders integers signed and strings as unsigned UTF-8 bytes,
+#: like Spark, and stores a date as its proleptic day number
+_FOOTER_TYPES = ("tinyint", "smallint", "int", "bigint", "string", "date")
+_EPOCH = datetime.date(1970, 1, 1)
+#: the day numbers of 0001-01-01 and 9999-12-31: a Python date's range
+_DAY_MIN, _DAY_MAX = -719162, 2932896
+
+
+def _stats_aggs(col: str, dtype: str, group: str, i: int) -> list:
+    """Spark's per-file ``min``/``max``/NULL count of ``col`` aliased
+    ``__<group>{min,max,null}<i>`` — the aggregate :func:`_footer_stats`
+    reproduces. Types other than integral and string take their ISO
+    string rendering (the JSON log's form, lexically ordered)."""
+    c = F.col(col)
+    v = c if dtype in ("tinyint", "smallint", "int", "bigint",
+                       "string") else c.cast("string")
+    return [F.min(v).alias(f"__{group}min{i}"),
+            F.max(v).alias(f"__{group}max{i}"),
+            F.sum(c.isNull().cast("long")).alias(f"__{group}null{i}")]
+
+
+def _footer_stats(path: str, cols: dict[str, str]) -> tuple | None:
+    """``(rows, {col: [min, max, null count]})`` of the parquet file at
+    ``path``, read from its footer on the driver with no Spark job.
+    ``cols`` maps each top-level column (by ``path_in_schema``, so the
+    physical name under column mapping) to its Spark type string.
+    Values equal Spark's ``min``/``max``/``sum(isNull)`` over the file:
+    ints for integral types, str for strings, and the ISO string —
+    ``CAST(date AS STRING)`` — for dates; min/max are None when every
+    value is NULL. Row groups combine.
+
+    None when the footer cannot answer exactly, and the caller must
+    aggregate instead: a type outside ``_FOOTER_TYPES``, a column chunk
+    without a null count, a row group holding non-NULL values but no
+    min/max (parquet-mr drops binary min/max above 4 KB), a date
+    outside 0001–9999, or dates written in Spark's legacy hybrid
+    calendar."""
+    import pyarrow.parquet as pq
+
+    if any(t not in _FOOTER_TYPES for t in cols.values()):
+        return None
+    md = pq.read_metadata(path)
+    if ("date" in cols.values()
+            and b"org.apache.spark.legacyDateTime" in (md.metadata or {})):
+        return None
+    acc = {c: [None, None, 0] for c in cols}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        chunks = {rg.column(i).path_in_schema: rg.column(i)
+                  for i in range(rg.num_columns)}
+        for c in cols:
+            st = chunks[c].statistics if c in chunks else None
+            if st is None or not st.has_null_count:
+                return None
+            a = acc[c]
+            a[2] += st.null_count
+            if st.null_count == rg.num_rows:
+                continue                 # all-NULL chunk: no min/max
+            if not st.has_min_max:
+                return None
+            lo, hi = st.min_raw, st.max_raw  # ints, or bytes for strings
+            a[0] = lo if a[0] is None else min(a[0], lo)
+            a[1] = hi if a[1] is None else max(a[1], hi)
+    for c, t in cols.items():
+        for j in (0, 1):
+            v = acc[c][j]
+            if v is None:
+                continue
+            if t == "string":
+                try:
+                    acc[c][j] = v.decode("utf-8")
+                except UnicodeDecodeError:
+                    return None
+            elif t == "date":
+                if not _DAY_MIN <= v <= _DAY_MAX:
+                    return None
+                acc[c][j] = (_EPOCH
+                             + datetime.timedelta(days=v)).isoformat()
+    return sum(md.row_group(g).num_rows
+               for g in range(md.num_row_groups)), acc
 
 
 #: default size of a per-file COLUMN bloom (``create(bloom_cols=...)``):
@@ -685,9 +775,14 @@ class TxTable:
         neither the key nor clustered (so min/max stats don't prune)
         skip every file whose bloom rejects the value
         (:meth:`read_col_in`). Same probe machinery as the key bloom:
-        k probe positions per row, exploded and distinct-folded per
-        file — the driver only ever sees cardinality-bounded position
-        sets, never row-count-sized state."""
+        the key's and every column's k probe positions per row explode
+        into ONE tagged job that folds 64-bit words per file — the
+        driver only ever sees bloom-sized state, never row-count-sized.
+
+        Per-file stats come from the new files' parquet footers with no
+        job (:func:`_footer_stats`); a write the footers cannot answer
+        exactly takes one aggregate job instead. So a write runs one
+        metadata job after the data write, two on the fallback."""
         if bloom_cols is None:
             bloom_cols = (meta or {}).get("bloom_cols")
         mp = (meta or {}).get("column_mapping")
@@ -767,103 +862,54 @@ class TxTable:
         shutil.rmtree(staging, ignore_errors=True)
         if not paths:
             return []
-        # per-file rows + key min/max + declared-column stats, keyed on
-        # the file name (the key bloom is its own small job below).
-        extra = []
-        for i, scol in enumerate(stats_cols or []):
-            sc = F.col(scol)
-            if dict(df.dtypes)[scol] not in (
-                    "tinyint", "smallint", "int", "bigint", "string"):
-                sc = sc.cast("string")       # ISO serialization for JSON
-            extra += [F.min(sc).alias(f"__cmin{i}"),
-                      F.max(sc).alias(f"__cmax{i}"),
-                      # per-file NULL count (Delta's nullCount stats):
-                      # lets IS NOT NULL reads skip all-null files
-                      F.sum(F.col(scol).isNull().cast("long"))
-                       .alias(f"__snull{i}")]
-        if pcols is not None:
-            for i, c in enumerate(pcols):
-                pc = F.col(c)
-                extra += [F.min(pc).alias(f"__pvmin{i}"),
-                          F.max(pc).alias(f"__pvmax{i}"),
-                          F.sum(pc.isNull().cast("long"))
-                           .alias(f"__pvnull{i}")]
-        # The written files' schema is known (it IS ``ranged``'s), so
-        # both post-write reads pass it explicitly — skips the per-call
-        # footer schema inference (~80ms/commit of driver I/O measured
-        # at 8 files).
+        # per-file rows, key min/max/null count, declared-column stats
+        # and partition-column purity: from the written files' parquet
+        # footers on the driver, no Spark job. When a footer cannot
+        # answer exactly (see :func:`_footer_stats`) the whole write
+        # takes ONE aggregate grouped on the file name instead; the two
+        # give the same values. A zero-row file (an empty write) gets
+        # no stats row, hence no add action, either way.
         write_schema = ranged.schema
         full_paths = [os.path.join(self.data_dir, p) for p in paths]
-        stats = (self.spark.read.schema(write_schema).parquet(*full_paths)
-                 .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1)
-                          .alias("__f"))
-                 .agg(F.count(F.lit(1)).alias("rows"),
-                      F.min(key_col).alias("kmin"),
-                      F.max(key_col).alias("kmax"),
-                      F.sum(F.col(key_col).isNull().cast("long"))
-                       .alias("nnull"),
-                      *extra)
-                 ).collect()
-        # Per-file KEY bloom as its own small job: the previous single
-        # job folded 64 ``bit_or(<4-way IF word mask>)`` aggregates into
-        # the stats agg — a ~70-aggregate / 256-IF expression tree whose
-        # Catalyst analysis alone cost ~1.1s PER COMMIT (measured; the
-        # execution was only ~0.2s). Exploding the k probe positions
-        # into (file, word) groups keeps the tree tiny and the shuffle
-        # ≤ 64 rows/file (map-side partial agg), 2.9x faster per commit
-        # including the extra job. Same bits: identical
-        # ``_bloom_positions`` probes, OR-folded driver-side.
-        kb = (self.spark.read.schema(write_schema).parquet(*full_paths)
-              .select(F.element_at(F.split(F.input_file_name(), "/"), -1)
-                       .alias("__f"),
-                      F.explode(_bloom_positions(key_col)).alias("__pos"))
-              .groupBy("__f", F.expr("CAST(__pos DIV 64 AS INT)")
-                               .alias("__w"))
-              .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), "
-                          "CAST(__pos % 64 AS INT)))").alias("__m"))
-              ).collect()
-        kbloom: dict[str, int] = {}
-        for r in kb:
-            kbloom[r["__f"]] = (kbloom.get(r["__f"], 0)
-                                | ((int(r["__m"]) & 0xFFFFFFFFFFFFFFFF)
-                                   << (64 * int(r["__w"]))))
-        # per-file COLUMN blooms (Delta's bloom filter index), sized for
-        # an unclustered column's full per-file distinct count. One
-        # distributed distinct-positions pass per indexed column over
-        # the NEW files only; each row costs O(k) probe hashes (never
-        # O(bits) like a word fold would), and the driver only ever
-        # sees ≤ k × distinct set bits per file — commit-metadata-sized.
-        cblooms_by_file: dict[str, dict[str, str]] = {}
-        if bloom_cols:
-            bbits = int((meta or {}).get("bloom_bits") or _COL_BLOOM_BITS)
-            src = self.spark.read.schema(write_schema).parquet(*full_paths)
-            for bcol in bloom_cols:
-                rows = (src.select(
-                            F.element_at(F.split(F.input_file_name(),
-                                                 "/"), -1).alias("__f"),
-                            F.explode(_bloom_positions(bcol, bbits))
-                             .alias("__pos"))
-                        .distinct()
-                        .groupBy("__f")
-                        .agg(F.collect_set("__pos").alias("ps"))
-                        .collect())
-                per_file = {}
-                for r in rows:
-                    bm = 0
-                    for p in r["ps"]:
-                        bm |= 1 << p
-                    per_file[r["__f"]] = f"{bm:x}"
-                cblooms_by_file[bcol] = per_file
+        types = {f.name: f.dataType.simpleString()
+                 for f in write_schema.fields}
+        groups = (("k", [key_col]), ("c", stats_cols or []),
+                  ("pv", pcols or []))
+        footers = [_footer_stats(fp, {c: types[c] for _, cs in groups
+                                      for c in cs})
+                   for fp in full_paths]
+        if all(f is not None for f in footers):
+            stats = []
+            for p, (n, fs) in zip(paths, footers):
+                if not n:
+                    continue
+                r = {"__f": p, "rows": n}
+                for g, cs in groups:
+                    for i, c in enumerate(cs):
+                        r[f"__{g}min{i}"], r[f"__{g}max{i}"], \
+                            r[f"__{g}null{i}"] = fs[c]
+                stats.append(r)
+        else:
+            stats = (self.spark.read.schema(write_schema)
+                     .parquet(*full_paths)
+                     .groupBy(F.element_at(
+                         F.split(F.input_file_name(), "/"), -1)
+                         .alias("__f"))
+                     .agg(F.count(F.lit(1)).alias("rows"),
+                          *[agg for g, cs in groups
+                            for i, c in enumerate(cs)
+                            for agg in _stats_aggs(c, types[c], g, i)])
+                     ).collect()
         by_name = {r["__f"]: r for r in stats}
-        if any(r["nnull"] for r in stats):
+        if any(r["__knull0"] for r in stats):
             # a NULL key writes kmin/kmax as JSON null and poisons every
             # later prune comparison — fail the WRITE, not every read
             for p in paths:
                 os.unlink(os.path.join(self.data_dir, p))
             raise ValueError(
                 f"NULL values in merge key '{key_col}' "
-                f"({sum(r['nnull'] for r in stats)} rows) — the tx table "
-                f"requires non-null keys")
+                f"({sum(r['__knull0'] for r in stats)} rows) — the tx "
+                f"table requires non-null keys")
         if pcols is not None:
             for i, c in enumerate(pcols):
                 if any(r[f"__pvnull{i}"] for r in stats):
@@ -887,25 +933,56 @@ class TxTable:
                 raise ValueError(
                     f"partitionBy produced partition-impure files "
                     f"(mixed {pcols} values within one file): {impure}")
+        if not by_name:
+            return []                     # only zero-row files written
+
+        # ALL blooms of the write in ONE job: each row explodes into
+        # (tag, position) probes — tag 0 the key at ``_BLOOM_BITS``, tag
+        # j the j-th ``bloom_cols`` column at the table's
+        # ``bloom_bits`` — folded as ``bit_or`` masks per (file, tag,
+        # 64-bit word), so the shuffle is ≤ one row per set word and the
+        # expression tree stays tiny (a 64-aggregate word fold inside
+        # the stats agg cost ~1.1 s of Catalyst analysis per commit).
+        # Every row folds, NULLs included: xxhash64(NULL, i) = i.
+        bbits = int((meta or {}).get("bloom_bits") or _COL_BLOOM_BITS)
+        specs = [(key_col, _BLOOM_BITS),
+                 *((c, bbits) for c in bloom_cols or [])]
+        probes = F.array(*[
+            F.struct(F.lit(t).alias("__t"),
+                     _bloom_probe(c, i, bits).alias("__pos"))
+            for t, (c, bits) in enumerate(specs) for i in range(_BLOOM_K)])
+        words = (self.spark.read.schema(write_schema).parquet(*full_paths)
+                 .select(F.element_at(F.split(F.input_file_name(), "/"), -1)
+                          .alias("__f"),
+                         F.inline(probes))
+                 .groupBy("__f", "__t",
+                          F.expr("CAST(__pos DIV 64 AS INT)").alias("__w"))
+                 .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), "
+                             "CAST(__pos % 64 AS INT)))").alias("__m"))
+                 ).collect()
+        blooms: dict[tuple[str, int], int] = {}
+        for r in words:
+            fk = (r["__f"], r["__t"])
+            blooms[fk] = (blooms.get(fk, 0)
+                          | ((int(r["__m"]) & 0xFFFFFFFFFFFFFFFF)
+                             << (64 * int(r["__w"]))))
 
         def add_action(p: str) -> dict:
             r = by_name[p]
-            # kbloom[p] on purpose (not .get(p, 0)): a file present in
-            # the stats result but absent from the bloom job would get
-            # bloom 0, which rejects every probe — bloom-pruned key
-            # reads would silently skip the file's rows forever. A
-            # bloom/stats job mismatch must fail the write instead.
-            a = {"path": p, "rows": r["rows"], "kmin": r["kmin"],
-                 "kmax": r["kmax"], "bloom": f"{kbloom[p]:x}"}
+            # blooms[...] on purpose (not .get): every row folds into
+            # every tag, so a file present in the stats but absent from
+            # the bloom job would get bloom 0, which rejects every
+            # probe — bloom-pruned reads would silently skip the file's
+            # rows forever. A bloom/stats mismatch must fail the write.
+            a = {"path": p, "rows": r["rows"], "kmin": r["__kmin0"],
+                 "kmax": r["__kmax0"], "bloom": f"{blooms[(p, 0)]:x}"}
             if bloom_cols:
-                # "0" for a file whose column is all-NULL: rejects every
-                # probe, which is exact (no non-null value to match)
-                a["cblooms"] = {c: cblooms_by_file[c].get(p, "0")
-                                for c in bloom_cols}
+                a["cblooms"] = {c: f"{blooms[(p, j)]:x}"
+                                for j, c in enumerate(bloom_cols, 1)}
             if stats_cols:
                 a["cstats"] = {c: [r[f"__cmin{i}"], r[f"__cmax{i}"]]
                                for i, c in enumerate(stats_cols)}
-                a["cnulls"] = {c: r[f"__snull{i}"]
+                a["cnulls"] = {c: r[f"__cnull{i}"]
                                for i, c in enumerate(stats_cols)}
             if pcols is not None:
                 # purity asserted above; scalar for one column (the
@@ -1121,9 +1198,10 @@ class TxTable:
         months [g(lo), g(hi)]. Sound only for generation expressions
         MONOTONE in the source (whitelisted shapes above; cyclic
         month()/day() never match). The bounds are evaluated through
-        THE SAME engine expression the writers used (one 2-row local
-        job), so the inferred band can never disagree with the stored
-        pvals; the exact predicate stays as a residual filter. At
+        THE SAME engine expression the writers used (over a 2-row local
+        relation, on the driver with no Spark job), so the inferred
+        band can never disagree with the stored pvals; the exact
+        predicate stays as a residual filter. At
         100 TB this turns every timestamp-band query into a
         partition-pruned read without the caller knowing the partition
         scheme exists. Pinned in tests/test_txlog_generated.py."""
@@ -1145,11 +1223,9 @@ class TxTable:
                 f"partition_by: {pcols})")
         schema = StructType.fromJson(json.loads(meta["schema"]))
         src_type = {f.name: f.dataType for f in schema.fields}[col]
-        bounds = self.spark.createDataFrame(
-            [(lo,), (hi,)], StructType([StructField(col, src_type)]))
         vals = [r["__g"] for r in
-                bounds.select(F.expr(gen[target]).alias("__g"))
-                .collect()]
+                self._values_frame(col, src_type, [lo, hi])
+                .select(F.expr(gen[target]).alias("__g")).collect()]
         g_lo, g_hi = min(vals), max(vals)
         idx = pcols.index(target)
 
@@ -2313,12 +2389,32 @@ class TxTable:
         O(matching files), not the table — e.g. the streaming upsert
         sink folds in current rows for just its micro-batch's users this
         way instead of scanning every live file per batch."""
-        meta, live = self._read_state(version)
+        return self._read_matching(*self._read_state(version), keys)
+
+    def _read_matching(self, meta: dict, live: dict,
+                       keys: DataFrame) -> DataFrame:
+        """:meth:`read_matching` over a state the caller already holds."""
         key = meta["key_col"]
         keys = keys.select(key).distinct()
         prune = self._key_pruner(keys, key)
         files = prune(list(live.values()))
         return self._read_files(meta, files).join(keys, key, "semi")
+
+    def _values_frame(self, col: str, dtype, values: list) -> DataFrame:
+        """``values`` as a one-column frame ``col`` of type ``dtype``: an
+        inline ``VALUES`` table with the values bound as parameters, so
+        it plans as a local relation and a projection over it (the
+        bloom probes, a generation expression) collects on the driver
+        with no Spark job. Empty ``values`` give an empty frame."""
+        name = "`" + col.replace("`", "``") + "`"
+        t = dtype.simpleString()
+        if not values:
+            return self.spark.sql(
+                f"SELECT CAST(NULL AS {t}) AS {name} WHERE false")
+        rows = ", ".join(f"(:v{i})" for i in range(len(values)))
+        return self.spark.sql(
+            f"SELECT CAST(c AS {t}) AS {name} FROM VALUES {rows} AS t(c)",
+            args={f"v{i}": v for i, v in enumerate(values)})
 
     def read_col_in(self, col: str, values: list,
                     version: int | None = None) -> DataFrame:
@@ -2331,34 +2427,26 @@ class TxTable:
         (where :meth:`read_stats_range`'s min/max never prune — every
         file's range spans the domain). Files written before the column
         was indexed carry no bloom and are conservatively scanned.
-        ``values`` is a small literal set (a point-lookup batch);
-        probe positions come from one value-set-sized Spark job so the
-        hashes match the write side exactly."""
+        ``values`` is a small literal set (a point-lookup batch); its
+        probe positions are the same Spark expression the write side
+        folds, evaluated over a local relation on the driver with no
+        Spark job (:meth:`_values_frame`), so the hashes match exactly."""
         meta, live = self._read_state(version)
-        if col == meta["key_col"]:
-            # the key has the strictly stronger range+bloom path
-            keys = self.spark.createDataFrame(
-                [(v,) for v in values],
-                StructType([StructField(
-                    col,
-                    StructType.fromJson(
-                        json.loads(meta["schema"]))[col].dataType,
-                    True)]))
-            return self.read_matching(keys, version=version)
         declared = meta.get("bloom_cols") or []
-        if col not in declared:
+        if col != meta["key_col"] and col not in declared:
             raise ValueError(
                 f"column '{col}' has no bloom index (declared: "
                 f"{declared}) — create(bloom_cols=[...]) to index it")
         schema = StructType.fromJson(json.loads(meta["schema"]))
+        vdf = self._values_frame(col, schema[col].dataType, values)
+        if col == meta["key_col"]:
+            # the key has the strictly stronger range+bloom path
+            return self._read_matching(meta, live, vdf)
         bbits = int(meta.get("bloom_bits") or _COL_BLOOM_BITS)
-        vdf = self.spark.createDataFrame(
-            [(v,) for v in values],
-            StructType([StructField(col, schema[col].dataType, True)]))
-        probes = [tuple(int(x) for x in r["__p"]) for r in
-                  vdf.where(F.col(col).isNotNull()).distinct()
+        probes = {tuple(int(x) for x in r["__p"]) for r in
+                  vdf.where(F.col(col).isNotNull())
                      .select(_bloom_positions(col, bbits).alias("__p"))
-                     .collect()]
+                     .collect()}
         # blooms are keyed by PHYSICAL name — pre-rename files keep
         # pruning, exactly like cstats
         pcol = (meta.get("column_mapping") or {}).get(col, col)

@@ -318,10 +318,12 @@ def stream_upsert_tx(spark: SparkSession, events_path: str,
             # to collect the probes, which only pays once the table has
             # enough files for pruning to beat a full-scan semi-join —
             # the 100 TB regime. Small tables take the scan.
+            # one log replay serves both the file count and the read
             users = batch_latest.select("user_id")
-            _, live = t._state()
-            cur = (t.read_matching(users) if len(live) > 16
-                   else t.snapshot().join(users, "user_id", "semi"))
+            meta, live = t._read_state(None)
+            cur = (t._read_matching(meta, live, users) if len(live) > 16
+                   else t._read_files(meta, live.values())
+                   .join(users, "user_id", "semi"))
             upserts = latest_event_per_key(
                 cur.unionByName(batch_latest), ["user_id"])
             t.merge_upsert(upserts,
