@@ -260,6 +260,9 @@ def rotation_round_index(repo_dir: str | None = None) -> int:
         import glob
         names = [os.path.basename(p) for p in
                  glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))]
+        print("warning: no git-tracked BENCH_r*.json; the rotation round "
+              "comes from a glob that may count this round's own file — "
+              "set SPARK_GRAFT_ROUND to fix it", file=sys.stderr)
     rounds = [int(m.group(1)) for m in
               (re.match(r"BENCH_r(\d+)", os.path.basename(n))
                for n in names) if m]

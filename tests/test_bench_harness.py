@@ -151,6 +151,21 @@ class TestRotation:
         monkeypatch.setenv("SPARK_GRAFT_ROUND", "21")
         assert bench.rotation_round_index(str(tmp_path)) == 21
 
+    def test_round_index_glob_fallback_warns(self, tmp_path, monkeypatch,
+                                             capsys):
+        """Outside git the index falls back to a glob that can count the
+        current round's own untracked file: one warning line on stderr
+        names the override, and stdout stays clean."""
+        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+        (tmp_path / "BENCH_r15.json").write_text("{}")
+        assert bench.rotation_round_index(str(tmp_path)) == 16
+        out, err = capsys.readouterr()
+        assert out == ""
+        assert len(err.splitlines()) == 1 and "SPARK_GRAFT_ROUND" in err
+        monkeypatch.setenv("SPARK_GRAFT_ROUND", "21")
+        assert bench.rotation_round_index(str(tmp_path)) == 21
+        assert capsys.readouterr().err == ""
+
     def test_line_budget_with_rotation_family(self):
         # rotation adds ONE family key however many slots rotate
         timings = {n: 99999.99 for n in bench.BENCH_QUERIES}

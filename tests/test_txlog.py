@@ -87,7 +87,7 @@ def test_crash_leaves_uncommitted_files_invisible(spark, orders, tmp_path):
     t.create(orders, "o_orderkey")
     n0 = t.snapshot().count()
     # simulate a crashed writer: data files land, no commit follows
-    t._write_files(orders.limit(10), "o_orderkey")
+    t._write_files(orders.limit(10), t._state()[0])
     assert t.snapshot().count() == n0          # invisible
     # default age bound protects files an in-flight writer may be about
     # to commit (they are final-named BEFORE the log commit)
@@ -2762,77 +2762,150 @@ def test_agg_pushdown_metadata_only_and_dv_hybrid(spark, tmp_path):
     assert r["n_rows"] == 10 and r["min"] is None and r["max"] is None
 
 
-def test_merge_lost_race_disjoint_append_avoids_rerun(spark, orders, tmp_path):
-    """WriteSerializable classification: a merge that loses its commit
-    race to a DISJOINT blind append re-commits its already-written
-    rewrite at the new head — the data plane runs exactly once."""
+#: the key-set DML ops: each prunes files by its key set, so each takes
+#: the disjoint-append re-commit on a lost race
+_KEYSET_OPS = ("merge_upsert", "merge_when", "apply_changes",
+               "delete_keys", "delete_keys_dv")
+
+
+def _keyset_op(t, op, rows):
+    """Apply key-set DML ``op`` with ``rows``: the new rows for the three
+    upserting ops, the keys to delete for the two deletes."""
+    if op == "merge_upsert":
+        return t.merge_upsert(rows)
+    if op == "merge_when":
+        return t.merge_when(rows)
+    if op == "apply_changes":
+        return t.apply_changes(
+            rows.withColumn("_change_type", F.lit("update_postimage")))
+    return getattr(t, op)(rows.select(t._state()[0]["key_col"]))
+
+
+def _race_one_append(t, other, df):
+    """Make ``t``'s next commit lose its race to ``other.append(df)``;
+    returns a dict counting the reads of touched files (one per
+    attempt of a key-set op — its data plane)."""
+    state = {"raced": False, "reads": 0}
+    real_commit, real_read = t._commit, t._read_files
+
+    def racing_commit(actions, v):
+        if not state["raced"]:
+            state["raced"] = True
+            other.append(df)               # steals version v
+        return real_commit(actions, v)
+
+    def counting_read(*a, **k):
+        state["reads"] += 1
+        return real_read(*a, **k)
+
+    t._commit, t._read_files = racing_commit, counting_read
+    return state
+
+
+@pytest.mark.parametrize("op", _KEYSET_OPS)
+def test_merge_lost_race_disjoint_append_avoids_rerun(
+        spark, orders, tmp_path, op):
+    """WriteSerializable classification: a key-set op that loses its
+    commit race to a DISJOINT blind append re-commits its already-written
+    actions at the new head — the data plane runs exactly once."""
     t = TxTable(spark, str(tmp_path / "t"))
     t.create(orders, "o_orderkey")
     other = TxTable(spark, str(tmp_path / "t"))
     far = spark.createDataFrame(
         [(10 ** 12 + i, 1, 9.9, "N") for i in range(3)], orders.schema)
-
-    state = {"raced": False, "writes": 0}
-    real_commit, real_write = t._commit, t._write_files
-
-    def racing_commit(actions, v):
-        if not state["raced"]:
-            state["raced"] = True
-            other.append(far)              # steals version v
-        return real_commit(actions, v)
-
-    def counting_write(*a, **k):
-        state["writes"] += 1
-        return real_write(*a, **k)
-
-    t._commit, t._write_files = racing_commit, counting_write
+    state = _race_one_append(t, other, far)
     updates = orders.where("o_orderkey % 100 = 7") \
                     .withColumn("o_totalprice", F.lit(2.5))
-    stats = t.merge_upsert(updates)
+    stats = _keyset_op(t, op, updates)
+    del t._commit, t._read_files
     assert stats.get("rerun_avoided") is True
-    assert state["writes"] == 1            # rewrite ran ONCE
-    got = t.snapshot()
-    expected = (orders.join(updates.select("o_orderkey"), "o_orderkey",
-                            "left_anti")
-                .unionByName(updates).unionByName(far))
+    assert state["reads"] == 1             # data plane ran ONCE
+    kept = orders.join(updates.select("o_orderkey"), "o_orderkey",
+                       "left_anti")
+    if op.startswith("delete"):
+        expected = kept.unionByName(far)
+    else:
+        expected = kept.unionByName(updates).unionByName(far)
     cols = ["o_orderkey", "o_totalprice"]
-    assert _rows(got, cols) == _rows(expected, cols)
+    assert _rows(t.snapshot(), cols) == _rows(expected, cols)
 
 
-def test_merge_lost_race_overlapping_append_reruns(spark, orders, tmp_path):
-    """A concurrent append whose file MAY contain one of the merge's
-    keys is a real conflict: the merge re-runs against the winner's
-    snapshot, so the appended duplicate key is absorbed by the rewrite
-    (update wins, no duplicate row survives)."""
+@pytest.mark.parametrize("op", _KEYSET_OPS)
+def test_merge_lost_race_overlapping_append_reruns(
+        spark, orders, tmp_path, op):
+    """A concurrent append whose file MAY contain one of the op's keys
+    is a real conflict: the op re-runs against the winner's snapshot,
+    so the raced-in row of key 107 is absorbed — updated by the upserts
+    (merge_upsert and apply_changes replace it, leaving one row;
+    merge_when updates every matched target row, so both rows of the
+    key take the source values), deleted by the deletes."""
     t = TxTable(spark, str(tmp_path / "t"))
     t.create(orders, "o_orderkey")
     other = TxTable(spark, str(tmp_path / "t"))
     dup = spark.createDataFrame([(107, 1, 0.01, "N")], orders.schema)
-
-    state = {"raced": False, "writes": 0}
-    real_commit, real_write = t._commit, t._write_files
-
-    def racing_commit(actions, v):
-        if not state["raced"]:
-            state["raced"] = True
-            other.append(dup)
-        return real_commit(actions, v)
-
-    def counting_write(*a, **k):
-        state["writes"] += 1
-        return real_write(*a, **k)
-
-    t._commit, t._write_files = racing_commit, counting_write
+    state = _race_one_append(t, other, dup)
     updates = orders.where("o_orderkey % 100 = 7") \
                     .withColumn("o_totalprice", F.lit(2.5))
-    stats = t.merge_upsert(updates)
+    stats = _keyset_op(t, op, updates)
+    del t._commit, t._read_files
     assert "rerun_avoided" not in stats
-    assert state["writes"] == 2            # conflict -> full re-run
+    assert state["reads"] == 2             # conflict -> full re-run
     got = t.snapshot()
-    # the raced-in duplicate of key 107 was absorbed by the re-run
-    assert got.where("o_orderkey = 107").count() == 1
-    assert got.where("o_orderkey = 107").collect()[0]["o_totalprice"] == 2.5
-    assert got.count() == orders.count()
+    prices = [r["o_totalprice"]
+              for r in got.where("o_orderkey = 107").collect()]
+    if op.startswith("delete"):
+        assert prices == []
+        assert got.count() == orders.count() - updates.count()
+    else:
+        assert prices == [2.5] * (2 if op == "merge_when" else 1)
+        assert got.count() == orders.count() + len(prices) - 1
+
+
+@pytest.mark.parametrize("op", ["merge_upsert", "merge_when",
+                                "apply_changes", "delete_keys_dv"])
+def test_lost_race_retry_reads_meta_at_its_base(spark, tmp_path, op):
+    """A CHECK constraint that lands while a write is in flight governs
+    the write's retry: every attempt reads the meta at its own base.
+    The upserts then reject their non-positive rows with the usual
+    error, and a DV delete that first stamps the deletion_vectors
+    feature keeps the constraint in the meta it commits."""
+    root = str(tmp_path / "t")
+    t = TxTable(spark, root)
+    t.create(spark.createDataFrame([(k, k + 1.0) for k in range(20)],
+                                   "k long, v double"), "k", n_files=2)
+    t._pre_commit_hook = lambda: TxTable(spark, root).add_constraint(
+        "v_pos", "v > 0")
+    bad = spark.createDataFrame([(1, -1.0), (25, 0.0)], "k long, v double")
+    if op == "delete_keys_dv":
+        assert t.delete_keys_dv(bad.select("k"))["rows_deleted"] == 1
+    else:
+        with pytest.raises(ValueError, match=r"CHECK constraint 'v_pos' "
+                                             r".* write rejected"):
+            _keyset_op(t, op, bad)
+    assert t.snapshot().where("v <= 0").count() == 0
+    assert t._state()[0]["constraints"] == {"v_pos": "v > 0"}
+    with pytest.raises(ValueError, match="CHECK constraint 'v_pos'"):
+        t.append(bad)
+
+
+def test_empty_writes_leave_no_orphan_file(spark, tmp_path):
+    """A write's zero-row part files get no add action and are unlinked:
+    an empty create and a delete that empties a touched file leave
+    nothing for vacuum_uncommitted to reclaim."""
+    t = TxTable(spark, str(tmp_path / "e"))
+    t.create(spark.createDataFrame([], "k long, v double"), "k")
+    assert t.snapshot().count() == 0
+    assert t.vacuum_uncommitted(older_than_s=0.0) == []
+    u = TxTable(spark, str(tmp_path / "d"))
+    u.create(spark.range(0, 20).select(F.col("id").alias("k"),
+                                       F.lit(1.0).alias("v")),
+             "k", n_files=2)
+    first = min(u._state()[1].values(), key=lambda a: a["kmin"])
+    doomed = spark.range(first["kmin"], first["kmax"] + 1) \
+                  .select(F.col("id").alias("k"))
+    assert u.delete_keys(doomed)["files_rewritten"] == 1
+    assert u.snapshot().count() == 20 - first["rows"]
+    assert u.vacuum_uncommitted(older_than_s=0.0) == []
 
 
 def test_reader_feature_fence(spark, orders, tmp_path):

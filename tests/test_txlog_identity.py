@@ -73,3 +73,24 @@ def test_identity_rename_and_concurrent_appends(spark, tmp_path):
     f = t.snapshot()
     assert f.count() == 60
     assert f.select("surrogate").distinct().count() == 60
+
+
+def test_identity_mark_from_footers_runs_no_job(spark, tmp_path):
+    """The identity high-water mark comes from the new files' footers:
+    a create with an identity column submits no more Spark jobs than
+    the same create without one, and the mark is max(id) + 1."""
+    def job_ids() -> set[int]:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(spark.sparkContext.statusTracker()
+                   .getJobIdsForGroup(None))
+
+    before = job_ids()
+    TxTable(spark, str(tmp_path / "p")).create(_src(spark), "nk",
+                                               n_files=3)
+    mid = job_ids()
+    t = TxTable(spark, str(tmp_path / "i"))
+    t.create(_src(spark), "nk", n_files=3, identity_col="sk")
+    assert len(job_ids() - mid) <= len(mid - before)
+    ids = [r["sk"] for r in t.snapshot().select("sk").collect()]
+    assert len(ids) == 100 and len(set(ids)) == 100
+    assert t._state()[0]["identity"]["next"] == max(ids) + 1

@@ -73,6 +73,24 @@ def test_stats_and_partition_rename_keep_pruning(spark, mapped):
         t.snapshot().where("bucket = 1 and category = 3").count()
 
 
+def test_partition_rename_then_readd_old_name_keeps_layout(spark, mapped):
+    """New files stamp the partition column's PHYSICAL name in ``pby``
+    even when a later column reuses the old logical name: after renaming
+    ``part`` to ``bucket`` and adding a new ``part``, an append's files
+    still match the current layout, so replace_where runs."""
+    t = mapped
+    t.rename_column("part", "bucket")
+    t.add_columns({"part": "string"})
+    t.append(_base_df(spark, 6).withColumnRenamed("part", "bucket")
+             .withColumn("k", F.col("k") + 1000)
+             .withColumn("part", F.lit("x")))
+    assert {tuple(a["pby"]) for a in t._state()[1].values()} == {("part",)}
+    n0 = t.snapshot().where("bucket = 0").count()
+    out = t.replace_where(0, t.snapshot().where("bucket = 0"))
+    assert out["files_removed"] > 0
+    assert t.snapshot().where("bucket = 0").count() == n0
+
+
 def test_drop_then_readd_never_resurrects(spark, mapped):
     t = mapped
     t.drop_column("val")

@@ -657,12 +657,17 @@ class TxTable:
         fails loudly on a table needing reader features this build
         lacks."""
         meta, live, _, _ = self._replay(upto, mode)
-        if meta is not None:
-            unknown = set(meta.get("reader_features") or ()) \
-                - SUPPORTED_READER_FEATURES
-            if unknown:
-                raise UnsupportedTableFeatureError(unknown)
+        self._fence(meta)
         return meta, live
+
+    @staticmethod
+    def _fence(meta: dict | None) -> None:
+        """Raise :class:`UnsupportedTableFeatureError` when ``meta``
+        needs reader features this build lacks."""
+        unknown = set((meta or {}).get("reader_features") or ()) \
+            - SUPPORTED_READER_FEATURES
+        if unknown:
+            raise UnsupportedTableFeatureError(unknown)
 
     def _txns(self, upto: int | None = None, mode: str = "strict") -> dict:
         """{app: highest committed batch id} at a version — the
@@ -738,54 +743,101 @@ class TxTable:
         self._last_commit_version = expected_version
         return True
 
+    def _transact(self, attempt, txn: tuple[str, int] | None = None):
+        """THE optimistic-commit loop of every read-modify-write. Each
+        attempt takes the newest version as its BASE, folds state at it
+        in one strict replay, and calls ``attempt(meta, live, base)`` —
+        so everything a write derives from the table (schema and
+        constraint checks, the key pruner, the layout) is computed at
+        the base it commits on. ``attempt`` returns ``(actions,
+        result)``, or ``(actions, result, prune)`` for key-set DML;
+        ``actions=None`` finishes with ``result`` and no commit.
+
+        The actions, plus the ``txn`` marker, publish at exactly
+        ``base + 1``, so a commit that lands during the attempt's file
+        writes fails it instead of being silently built over. On a lost
+        race, key-set DML first tries :meth:`_retry_if_disjoint` (the
+        result then carries ``rerun_avoided``); otherwise the attempt
+        re-runs at the new head, and the files it wrote stay
+        unreferenced for ``vacuum_uncommitted``.
+
+        ``txn=(app, batch)`` makes the write idempotent: when the base
+        already records ``batch`` or a later one for ``app``, the write
+        is skipped and returns the ``skipped_replay`` result."""
+        while True:
+            base = max(self.versions(), default=-1)
+            meta, live, txns, _ = self._replay(base)
+            if meta is None:
+                raise FileNotFoundError(f"no table at {self.root}")
+            self._fence(meta)
+            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
+                return {"files_scanned": 0, "files_rewritten": 0,
+                        "files_untouched": 0, "skipped_replay": True}
+            actions, result, *prune = attempt(meta, live, base)
+            if actions is None:
+                return result
+            if txn is not None:
+                actions = [*actions,
+                           {"txn": {"app": txn[0], "batch": txn[1]}}]
+            if self._commit(actions, base + 1):
+                self._maybe_checkpoint(base + 1)
+                return result
+            if prune:
+                v = self._retry_if_disjoint(
+                    base, actions, prune[0],
+                    txn_app=txn[0] if txn is not None else None)
+                if v is not None:
+                    self._maybe_checkpoint(v)
+                    return {**result, "rerun_avoided": True}
+
     # ----------------------------------------------------------- data I/O
 
-    def _write_files(self, df: DataFrame, key_col: str,
+    def _write_files(self, df: DataFrame, meta: dict,
                      n_files: int | None = None,
-                     stats_cols: list[str] | None = None,
-                     order_expr=None,
-                     partition_by=None,
-                     meta: dict | None = None,
-                     bloom_cols: list[str] | None = None) -> list[dict]:
-        """Materialize ``df`` as immutable data files with per-file key
-        stats. Range-partitioned on the key so file key ranges are tight
-        and disjoint — what makes merge-time file pruning effective.
-        ``n_files`` pins the file count (an explicit ``repartitionByRange``
-        count AQE won't coalesce); default lets AQE size the files.
-        ``stats_cols`` (from the table meta) additionally records each
-        declared column's per-file [min, max] — the BI-read data-skipping
-        columns (date/timestamp values serialize as ISO strings, whose
-        lexical order matches their temporal order).
+                     order_expr=None) -> list[dict]:
+        """Materialize ``df`` as immutable data files of the table
+        described by ``meta``, one add action per non-empty file. The
+        key, ``stats_cols``, ``partition_by`` and ``bloom_cols`` all come
+        from ``meta``, so a write always follows the layout of the meta
+        it commits with. Range-partitioned on the key so file key ranges
+        are tight and disjoint — what makes merge-time file pruning
+        effective. ``n_files`` pins the file count (an explicit
+        ``repartitionByRange`` count AQE won't coalesce); default lets
+        AQE size the files. ``order_expr`` clusters on that expression
+        instead of the key (:meth:`optimize_zorder`).
 
-        ``partition_by`` (from the table meta; a column name or a LIST
-        of them) makes every data file PARTITION-PURE: the write goes
+        Each declared ``stats_cols`` column's per-file [min, max] is
+        recorded too — the BI-read data-skipping columns (date values
+        serialize as ISO strings, whose lexical order matches their
+        temporal order).
+
+        A partitioned table's files are PARTITION-PURE: the write goes
         through Spark's ``partitionBy`` (one directory per value tuple,
         fully distributed, one job), files are flattened into the data
         dir, and each add action records the file's partition value(s)
         as ``pval`` (scalar for one column, list for composite) — the
         Hive/Delta partition-pruning contract, enforced for every write
-        path (create/append/merge/delete/compact/zorder) so partition
-        reads can skip files on the log alone, no stats comparison
-        needed.
+        path, so partition reads can skip files on the log alone.
 
-        ``bloom_cols`` (explicit at create; derived from the table meta
-        on every later write) additionally records a per-file BLOOM
-        FILTER over each declared NON-KEY column — Delta's bloom filter
-        index: point lookups on a high-cardinality column that is
-        neither the key nor clustered (so min/max stats don't prune)
-        skip every file whose bloom rejects the value
-        (:meth:`read_col_in`). Same probe machinery as the key bloom:
-        the key's and every column's k probe positions per row explode
-        into ONE tagged job that folds 64-bit words per file — the
-        driver only ever sees bloom-sized state, never row-count-sized.
+        Each ``bloom_cols`` column gets a per-file BLOOM FILTER — Delta's
+        bloom filter index: point lookups on a high-cardinality column
+        that is neither the key nor clustered skip every file whose
+        bloom rejects the value (:meth:`read_col_in`). The key's and
+        every column's k probe positions per row explode into ONE tagged
+        job that folds 64-bit words per file — the driver only ever sees
+        bloom-sized state, never row-count-sized.
 
         Per-file stats come from the new files' parquet footers with no
         job (:func:`_footer_stats`); a write the footers cannot answer
         exactly takes one aggregate job instead. So a write runs one
-        metadata job after the data write, two on the fallback."""
-        if bloom_cols is None:
-            bloom_cols = (meta or {}).get("bloom_cols")
-        mp = (meta or {}).get("column_mapping")
+        metadata job after the data write, two on the fallback. A
+        zero-row file (Spark writes one for an empty frame) gets no add
+        action and is unlinked, so an empty write leaves no file."""
+        key_col = meta["key_col"]
+        stats_cols = meta.get("stats_cols")
+        bloom_cols = meta.get("bloom_cols")
+        partition_by = meta.get("partition_by")
+        mp = meta.get("column_mapping")
         if mp:
             # COLUMN MAPPING: data files store PHYSICAL names (stable
             # across renames), the declared schema speaks logical names.
@@ -901,6 +953,11 @@ class TxTable:
                             for agg in _stats_aggs(c, types[c], g, i)])
                      ).collect()
         by_name = {r["__f"]: r for r in stats}
+        for p in paths:
+            if p not in by_name:               # zero-row file: no add
+                os.unlink(os.path.join(self.data_dir, p))
+        paths = [p for p in paths if p in by_name]
+        full_paths = [os.path.join(self.data_dir, p) for p in paths]
         if any(r["__knull0"] for r in stats):
             # a NULL key writes kmin/kmax as JSON null and poisons every
             # later prune comparison — fail the WRITE, not every read
@@ -933,7 +990,7 @@ class TxTable:
                 raise ValueError(
                     f"partitionBy produced partition-impure files "
                     f"(mixed {pcols} values within one file): {impure}")
-        if not by_name:
+        if not paths:
             return []                     # only zero-row files written
 
         # ALL blooms of the write in ONE job: each row explodes into
@@ -944,7 +1001,7 @@ class TxTable:
         # expression tree stays tiny (a 64-aggregate word fold inside
         # the stats agg cost ~1.1 s of Catalyst analysis per commit).
         # Every row folds, NULLs included: xxhash64(NULL, i) = i.
-        bbits = int((meta or {}).get("bloom_bits") or _COL_BLOOM_BITS)
+        bbits = int(meta.get("bloom_bits") or _COL_BLOOM_BITS)
         specs = [(key_col, _BLOOM_BITS),
                  *((c, bbits) for c in bloom_cols or [])]
         probes = F.array(*[
@@ -989,11 +1046,10 @@ class TxTable:
                 # pre-multi-col on-disk form), list for composite
                 vals = [r[f"__pvmin{i}"] for i in range(len(pcols))]
                 a["pval"] = vals[0] if len(pcols) == 1 else vals
-                mpw = (meta or {}).get("column_mapping") or {}
-                a["pby"] = [mpw.get(c, c) for c in pcols]
+                a["pby"] = list(pcols)
             return a
 
-        return [{"add": add_action(p)} for p in paths if p in by_name]
+        return [{"add": add_action(p)} for p in paths]
 
     def _write_cdf(self, changes: DataFrame,
                    meta: dict | None = None) -> list[dict]:
@@ -1611,8 +1667,7 @@ class TxTable:
             meta["partition_by"] = pcols[0] if len(pcols) == 1 \
                 else pcols
         self._validate_constraints(df, meta)     # provided generated cols
-        adds = self._write_files(df, key_col, n_files, cols or None,
-                                 partition_by=partition_by, meta=meta)
+        adds = self._write_files(df, meta, n_files)
         if identity_col is not None:
             # the WRITTEN files are the single truth for the mark (the
             # assignment expression is per-materialization)
@@ -1623,15 +1678,23 @@ class TxTable:
 
     def _identity_hwm(self, adds: list[dict], col: str,
                       meta: dict) -> int:
-        """max(identity) + 1 over freshly written add actions — one
-        footer-stats-sized aggregation of the new files only (which
-        store PHYSICAL names under column mapping)."""
+        """max(identity) + 1 over freshly written add actions (which
+        store PHYSICAL names under column mapping): the bigint max from
+        the new files' parquet footers (:func:`_footer_stats`, no job),
+        or one aggregate over the new files when a footer cannot
+        answer."""
         paths = [os.path.join(self.data_dir, a["add"]["path"])
                  for a in adds]
         if not paths:
             return 0
         pcol = (meta.get("column_mapping") or {}).get(col, col)
-        top = self.spark.read.parquet(*paths).agg(F.max(pcol)).first()[0]
+        footers = [_footer_stats(p, {pcol: "bigint"}) for p in paths]
+        if all(f is not None for f in footers):
+            top = max((f[1][pcol][1] for f in footers
+                       if f[1][pcol][1] is not None), default=None)
+        else:
+            top = self.spark.read.parquet(*paths) \
+                      .agg(F.max(pcol)).first()[0]
         return int(top) + 1 if top is not None else 0
 
     def add_columns(self, cols: dict[str, str]) -> None:
@@ -1650,9 +1713,8 @@ class TxTable:
         from pyspark.sql.types import StructField
         if not cols:
             raise ValueError("no columns to add")
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
+
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             dup = [c for c in cols if c in schema.fieldNames()]
             if dup:
@@ -1668,10 +1730,9 @@ class TxTable:
                 mp = dict(meta["column_mapping"])
                 mp.update({c: f"c_{uuid.uuid4().hex[:12]}" for c in cols})
                 new_meta["column_mapping"] = mp
-            v = base + 1
-            if self._commit([{"op": "evolve"}, {"meta": new_meta}], v):
-                self._maybe_checkpoint(v)
-                return
+            return [{"op": "evolve"}, {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     def widen_column(self, name: str, dtype: str) -> None:
         """Explicit TYPE WIDENING (Delta's ``ALTER TABLE ... CHANGE
@@ -1687,9 +1748,8 @@ class TxTable:
         type — a widened key would turn them into silent false
         negatives)."""
         new_t = StructType.fromDDL(f"`__w` {dtype}").fields[0].dataType
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
+
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             if name not in schema.fieldNames():
                 raise ValueError(f"no column '{name}' "
@@ -1716,12 +1776,11 @@ class TxTable:
                 [type(f)(f.name, new_t if f.name == name else f.dataType,
                          f.nullable)
                  for f in schema.fields]).json()
-            v = base + 1
             new_meta = self._stamp_feature(new_meta, "type_widening")[0]
-            if self._commit([{"op": "widen_column", "col": name,
-                              "to": dtype}, {"meta": new_meta}], v):
-                self._maybe_checkpoint(v)
-                return
+            return [{"op": "widen_column", "col": name, "to": dtype},
+                    {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     @staticmethod
     def _expr_refs(exprs: dict | None, col: str) -> list[str]:
@@ -1754,9 +1813,8 @@ class TxTable:
         SQL; drop the constraint first)."""
         if old == new:
             raise ValueError("rename to the same name is a no-op")
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
+
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             if old not in schema.fieldNames():
                 raise ValueError(f"no column '{old}' "
@@ -1810,13 +1868,11 @@ class TxTable:
             ident = meta.get("identity")
             if ident and ident["col"] == old:
                 new_meta["identity"] = dict(ident, col=new)
-            v = base + 1
             new_meta = self._stamp_feature(new_meta, "column_mapping")[0]
-            if self._commit([{"op": "rename_column",
-                              "col": old, "to": new},
-                             {"meta": new_meta}], v):
-                self._maybe_checkpoint(v)
-                return
+            return [{"op": "rename_column", "col": old, "to": new},
+                    {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     def drop_column(self, name: str) -> None:
         """Delta COLUMN MAPPING drop: remove a column from the declared
@@ -1830,9 +1886,7 @@ class TxTable:
         dropped (they are the table's layout contract); a stats column
         can (it leaves the declared skipping set); a column referenced
         by a CHECK constraint cannot (drop the constraint first)."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             if name not in schema.fieldNames():
                 raise ValueError(f"no column '{name}' "
@@ -1885,12 +1939,11 @@ class TxTable:
                     new_meta["bloom_cols"] = bcols
                 else:
                     new_meta.pop("bloom_cols", None)
-            v = base + 1
             new_meta = self._stamp_feature(new_meta, "column_mapping")[0]
-            if self._commit([{"op": "drop_column", "col": name},
-                             {"meta": new_meta}], v):
-                self._maybe_checkpoint(v)
-                return
+            return [{"op": "drop_column", "col": name},
+                    {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     def _merged_schema(self, meta: dict, df: DataFrame):
         """Delta ``mergeSchema`` semantics for a write: columns of
@@ -2055,9 +2108,7 @@ class TxTable:
         with ONE metadata commit — every later write is rejected
         pre-commit if any incoming row violates it. Constraint names are
         unique; expressions are Spark SQL over the table's columns."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
+        def attempt(meta, live, base):
             cons = dict(meta.get("constraints") or {})
             if name in cons:
                 raise ValueError(f"constraint '{name}' already exists")
@@ -2071,10 +2122,9 @@ class TxTable:
             new_meta = dict(meta)
             cons[name] = expr
             new_meta["constraints"] = cons
-            if self._commit([{"op": "add_constraint"},
-                             {"meta": new_meta}], base + 1):
-                self._maybe_checkpoint(base + 1)
-                return
+            return [{"op": "add_constraint"}, {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     def _live_set_diff(self, meta: dict, live_from: dict,
                        live_to: dict) -> DataFrame | None:
@@ -2165,11 +2215,7 @@ class TxTable:
         NOT row-track a replace (it is a declared full rewrite —
         consumers resync, the same contract as an untracked restore);
         the replace commit is marked untracked accordingly."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta_old, live_old = self._state(base)
-            if meta_old is None:
-                raise FileNotFoundError(f"no table at {self.root}")
+        def attempt(meta_old, live_old, base):
             if dict(df.dtypes)[key_col] not in (
                     "tinyint", "smallint", "int", "bigint", "string"):
                 raise ValueError(
@@ -2198,17 +2244,11 @@ class TxTable:
                             f"string, got {dict(df.dtypes)[c]}")
                 meta["partition_by"] = pcols[0] if len(pcols) == 1 \
                     else pcols
-            adds = self._write_files(df, key_col,
-                                     stats_cols=stats_cols,
-                                     partition_by=partition_by,
-                                     meta=meta)
-            actions: list[dict] = [{"op": "replace_table"},
-                                   {"meta": meta}, *adds]
-            actions.extend({"remove": {"path": p}} for p in live_old)
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return
-            # lost the race — orphan the files, re-plan on the winner
+            adds = self._write_files(df, meta)
+            return [{"op": "replace_table"}, {"meta": meta}, *adds,
+                    *({"remove": {"path": p}} for p in live_old)], None
+
+        self._transact(attempt)
 
     def restore_at(self, ts: float) -> dict:
         """RESTORE TO TIMESTAMP AS OF: restore to the newest version
@@ -2240,8 +2280,7 @@ class TxTable:
         current and target versions) — the pre-image rows then have no
         faithful representation under the restored schema, so the
         commit is marked untracked and consumers resync as before."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
+        def attempt(meta_now, live_now, base):
             meta_t, live_t = self._state(version)
             if meta_t is None:
                 raise FileNotFoundError(f"no table at {self.root}")
@@ -2252,7 +2291,6 @@ class TxTable:
                 raise ValueError(
                     f"cannot restore to version {version}: {len(gone)} "
                     f"file(s) already vacuumed (e.g. {gone[0]})")
-            meta_now, live_now = self._state(base)
             op_act: dict = {"op": "restore", "to": version}
             cdf: list[dict] = []
             if (meta_t.get("change_feed")
@@ -2272,11 +2310,11 @@ class TxTable:
                                for dvf in a.get("_dvs", []))
             actions.extend({"remove": {"path": p}} for p in live_now
                            if p not in live_t)
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return {"restored_to": version,
-                        "files_live": len(live_t),
-                        "cdf_tracked": op_act.get("tracked", False)}
+            return actions, {"restored_to": version,
+                             "files_live": len(live_t),
+                             "cdf_tracked": op_act.get("tracked", False)}
+
+        return self._transact(attempt)
 
     def clone_to(self, dest_root: str) -> "TxTable":
         """Delta-style SHALLOW CLONE, zero-copy: a NEW table whose
@@ -2489,21 +2527,16 @@ class TxTable:
         with pins() as pin:
             df = pin(df)
             if not merge_schema and not ident:
-                df = self._check_schema(df, meta)
-                adds = self._write_files(df, meta["key_col"],
-                                         stats_cols=meta.get("stats_cols"),
-                                         partition_by=meta.get("partition_by"),
-                                         meta=meta)
+                adds = self._write_files(self._check_schema(df, meta), meta)
                 while True:
                     v = self.versions()[-1] + 1
                     if self._commit([{"op": "append"}, *adds], v):
                         self._maybe_checkpoint(v)
                         return
+
             # evolving path: the schema action and/or the identity mark must
             # be derived AT the pinned base, so a lost race recomputes both
-            while True:
-                base = self.versions()[-1]          # pinned read (see merge)
-                meta, _ = self._state(base)
+            def attempt(meta, live, base):
                 ident = meta.get("identity")
                 dfx = df
                 if ident:
@@ -2517,11 +2550,8 @@ class TxTable:
                     meta2, dfx = self._merged_schema(meta, dfx)
                 else:
                     meta2 = meta
-                dfx = self._check_schema(dfx, meta2)
-                adds = self._write_files(dfx, meta2["key_col"],
-                                         stats_cols=meta2.get("stats_cols"),
-                                         partition_by=meta2.get(
-                                             "partition_by"), meta=meta2)
+                adds = self._write_files(self._check_schema(dfx, meta2),
+                                         meta2)
                 if ident:
                     meta2 = dict(meta2)
                     meta2["identity"] = {
@@ -2531,12 +2561,9 @@ class TxTable:
                 actions: list[dict] = [{"op": "append"}]
                 if meta2 is not meta:
                     actions.append({"meta": meta2})
-                actions += adds
-                if self._commit(actions, base + 1):
-                    self._maybe_checkpoint(base + 1)
-                    return
-                # lost the race: the base schema/mark may have changed —
-                # orphan the written files and recompute from scratch
+                return actions + adds, None
+
+            self._transact(attempt)
 
     def copied_files(self, version: int | None = None) -> set[str]:
         """The file identities (``path|size|mtime_ms``) every
@@ -2590,9 +2617,8 @@ class TxTable:
                    f"{int(st.st_mtime * 1000)}"
 
         idents = {p: ident_of(p) for p in cand}
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, _ = self._state(base)
+
+        def attempt(meta, live, base):
             if meta.get("identity"):
                 raise ValueError(
                     "copy_into on a table with an identity column is "
@@ -2600,8 +2626,8 @@ class TxTable:
             loaded = set() if force else self.copied_files(base)
             todo = [p for p in cand if idents[p] not in loaded]
             if not todo:
-                return {"files_loaded": 0, "files_skipped": len(cand),
-                        "rows_loaded": 0}
+                return None, {"files_loaded": 0, "files_skipped": len(cand),
+                              "rows_loaded": 0}
             schema = StructType.fromJson(json.loads(meta["schema"]))
             reader = self.spark.read.format(fmt)
             for k, v in (options or {}).items():
@@ -2609,22 +2635,15 @@ class TxTable:
             if fmt != "parquet":
                 # declared schema, not inference — one less full pass
                 reader = reader.schema(schema)
-            df = self._check_schema(reader.load(todo), meta)
-            adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            actions: list[dict] = [
-                {"op": "copy_into",
-                 "files": sorted(idents[p] for p in todo)}, *adds]
-            rows = sum(a["add"]["rows"] for a in adds)
-            if self._commit(actions, base + 1):
-                self._maybe_checkpoint(base + 1)
-                return {"files_loaded": len(todo),
-                        "files_skipped": len(cand) - len(todo),
-                        "rows_loaded": rows}
-            # lost the race: a concurrent copy_into may have loaded
-            # part of our todo set — orphan the files and re-plan
+            adds = self._write_files(
+                self._check_schema(reader.load(todo), meta), meta)
+            return [{"op": "copy_into",
+                     "files": sorted(idents[p] for p in todo)}, *adds], \
+                {"files_loaded": len(todo),
+                 "files_skipped": len(cand) - len(todo),
+                 "rows_loaded": sum(a["add"]["rows"] for a in adds)}
+
+        return self._transact(attempt)
 
     @staticmethod
     def _stamp_feature(meta: dict, *names: str) -> tuple[dict, bool]:
@@ -2647,16 +2666,20 @@ class TxTable:
                            max_attempts: int = 20) -> int | None:
         """WriteSerializable conflict classification (the Delta rule:
         ConcurrentAppendException only when an interleaved file MIGHT
-        match this command's read predicate). Called after a merge/delete
-        lost its optimistic commit at ``base+1``: examine every commit
-        that landed after ``base``; if ALL of them are blind appends
-        whose added files the key pruner rejects (their [kmin,kmax]+bloom
-        cannot contain any of our keys), our read set is untouched and
-        our rewrite is still exactly the right one — RE-COMMIT the
-        already-written actions at the new head instead of re-running
-        the whole data plane. Returns the committed version, or None on
-        a real conflict (caller re-runs against the fresh snapshot —
-        the pre-existing, always-correct path).
+        match this command's read predicate). :meth:`_transact` calls
+        it when a key-set DML attempt (``merge_upsert``, ``merge_when``,
+        ``apply_changes``, ``delete_keys``, ``delete_keys_dv``) lost its
+        optimistic commit at ``base+1``: examine every commit that
+        landed after ``base``; if ALL of them are blind appends whose
+        added files the attempt's key pruner rejects (their
+        [kmin,kmax]+bloom cannot contain any of its keys), the files the
+        op read, the rows it matched and the meta it built are
+        unchanged, so its actions are still exactly right — RE-COMMIT
+        them at the new head instead of re-running the whole data
+        plane. The one rule holds for all five ops because each one's
+        result depends only on rows holding its keys. Returns the
+        committed version, or None on a real conflict (the caller
+        re-runs the attempt at the fresh snapshot).
 
         Conservative by construction: any non-append op, schema change,
         pending (in-doubt) transaction marker, remove action, or add
@@ -2717,8 +2740,6 @@ class TxTable:
         columns extend the declared schema atomically with the merge
         (see :meth:`append`); kept target rows from pre-evolution
         files surface the new columns as NULL."""
-        meta = self._state()[0]
-        key = meta["key_col"]
         # Pin the source for the duration of the commit: the merge
         # reads it for the key pruner, the rewrite, the constraint
         # check, and (with CDF on) three change-capture branches — and
@@ -2727,96 +2748,57 @@ class TxTable:
         # extra job), every later pass scans cached blocks.
         with pins() as pin:
             updates = pin(updates)
-            if not merge_schema:
-                # validate + normalize to the table's column order so every
-                # data file carries the same physical layout
-                updates = self._check_schema(updates, meta)
-            prune = self._key_pruner(updates, key)
 
-            while True:
-                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                    return {"files_scanned": 0, "files_rewritten": 0,
-                            "files_untouched": 0, "skipped_replay": True}
-                # pin the read to a BASE version and commit at base+1: a
-                # concurrent commit landing during our (seconds-long) file
-                # writes then FAILS our commit instead of being silently
-                # built over — the lost-update half of optimistic
-                # concurrency (the os.link race alone only prevents
-                # version collisions, not stale reads)
-                base = self.versions()[-1]
-                evolved = False
-                if merge_schema:
-                    # re-merge per attempt AT base so a lost race never
-                    # clobbers a concurrent evolve's schema
-                    meta, live = self._state(base)
-                    meta2, upd = self._merged_schema(meta, updates)
-                    evolved = meta2 is not meta
-                    meta = meta2
-                    updates = self._check_schema(upd, meta)
-                else:
-                    _, live = self._state(base)
+            def attempt(meta, live, base):
+                key = meta["key_col"]
+                meta2, upd = self._merged_schema(meta, updates) \
+                    if merge_schema else (meta, updates)
+                # validate + normalize to the table's column order so
+                # every data file carries the same physical layout
+                upd = self._check_schema(upd, meta2)
+                prune = self._key_pruner(upd, key)
                 touched = prune(list(live.values()))
-                untouched = len(live) - len(touched)
                 if touched:
-                    old = self._read_files(meta, touched)
-                    keep = old.join(updates.select(key), key, "left_anti")
-                    new_rows = keep.unionByName(updates)
+                    old = self._read_files(meta2, touched)
+                    keep = old.join(upd.select(key), key, "left_anti")
+                    new_rows = keep.unionByName(upd)
                 else:
-                    new_rows = updates
-                adds = self._write_files(new_rows, key,
-                                         stats_cols=meta.get("stats_cols"),
-                                         partition_by=meta.get("partition_by"),
-                                         meta=meta)
+                    new_rows = upd
+                adds = self._write_files(new_rows, meta2)
                 cdf = []
-                if meta.get("change_feed"):
-                    # row-level change capture over the TOUCHED files only
-                    # (pruning is conservative, so they hold every existing
-                    # update key) — O(touched), same as the rewrite itself
+                if meta2.get("change_feed"):
+                    # row-level change capture over the TOUCHED files
+                    # only (pruning is conservative, so they hold every
+                    # existing update key) — O(touched), like the rewrite
                     if touched:
                         old_keys = old.select(key)
                         changes = (
-                            old.join(updates.select(key), key, "semi")
+                            old.join(upd.select(key), key, "semi")
                             .withColumn("_change_type",
                                         F.lit("update_preimage"))
                             .unionByName(
-                                updates.join(old_keys, key, "semi")
+                                upd.join(old_keys, key, "semi")
                                 .withColumn("_change_type",
                                             F.lit("update_postimage")))
                             .unionByName(
-                                updates.join(old_keys, key, "left_anti")
-                                .withColumn("_change_type", F.lit("insert"))))
+                                upd.join(old_keys, key, "left_anti")
+                                .withColumn("_change_type",
+                                            F.lit("insert"))))
                     else:
-                        changes = updates.withColumn("_change_type",
-                                                     F.lit("insert"))
-                    cdf = self._write_cdf(changes, meta)
-                v = base + 1
+                        changes = upd.withColumn("_change_type",
+                                                 F.lit("insert"))
+                    cdf = self._write_cdf(changes, meta2)
                 actions = [{"op": "merge"},
-                           *([{"meta": meta}] if evolved else []),
+                           *([{"meta": meta2}] if meta2 is not meta else []),
                            *adds, *cdf,
-                           *({"remove": {"path": a["path"]}} for a in touched)]
-                if txn is not None:
-                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-                if self._commit(actions, v):
-                    self._maybe_checkpoint(v)
-                    return {"files_scanned": len(live),
-                            "files_rewritten": len(touched),
-                            "files_untouched": untouched}
-                # lost the race. Before re-running the data plane, classify
-                # the interleaved commits (WriteSerializable): if they are
-                # all blind appends provably disjoint from our key set, the
-                # rewrite we already wrote is still exactly right — land it
-                # at the new head and skip the re-run.
-                rv = self._retry_if_disjoint(
-                    base, actions, prune,
-                    txn_app=txn[0] if txn is not None else None)
-                if rv is not None:
-                    self._maybe_checkpoint(rv)
-                    return {"files_scanned": len(live),
-                            "files_rewritten": len(touched),
-                            "files_untouched": untouched,
-                            "rerun_avoided": True}
-                # real conflict: orphan the files we just wrote (invisible —
-                # no commit references them) and retry on the new snapshot
+                           *({"remove": {"path": a["path"]}}
+                             for a in touched)]
+                return actions, {"files_scanned": len(live),
+                                 "files_rewritten": len(touched),
+                                 "files_untouched":
+                                     len(live) - len(touched)}, prune
+
+            return self._transact(attempt, txn)
 
     def merge_when(self, source: DataFrame,
                    update_cond: str | None = None,
@@ -2848,41 +2830,35 @@ class TxTable:
         semantics: a delete-only merge whose tombstone-shaped source
         rows violate a constraint is legal, because those rows are
         consumed by the delete clause and never land in a file."""
-        meta = self._state()[0]
-        key = meta["key_col"]
+        upd = F.expr(update_cond) if update_cond else F.lit(True)
+        dele = F.expr(delete_cond) if delete_cond else F.lit(False)
+        ins = F.expr(insert_cond) if insert_cond else F.lit(True)
         # pinned for the commit's lifetime (see merge_upsert): read by
         # the pruner, both sides of the clause join's data write, the
         # constraint check, and the CDF capture
         with pins() as pin:
-            source = pin(self._check_schema(source, meta,
-                                            constraints=False))
-            cols = source.columns
-            prune = self._key_pruner(source, key)
-            upd = F.expr(update_cond) if update_cond else F.lit(True)
-            dele = F.expr(delete_cond) if delete_cond else F.lit(False)
-            ins = F.expr(insert_cond) if insert_cond else F.lit(True)
 
-            while True:
-                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                    return {"files_scanned": 0, "files_rewritten": 0,
-                            "files_untouched": 0, "skipped_replay": True}
-                base = self.versions()[-1]          # pinned read (see merge)
-                _, live = self._state(base)
+            def attempt(meta, live, base):
+                key = meta["key_col"]
+                src = pin(self._check_schema(source, meta,
+                                             constraints=False))
+                cols = src.columns
+                prune = self._key_pruner(src, key)
                 touched = prune(list(live.values()))
                 old = self._read_files(meta, touched)
                 j = (old.select(F.struct(*cols).alias("tgt"))
-                     .join(source.select(F.struct(*cols).alias("src")),
+                     .join(src.select(F.struct(*cols).alias("src")),
                            F.col(f"tgt.{key}") == F.col(f"src.{key}"),
                            "full"))
                 matched = F.col("tgt").isNotNull() & F.col("src").isNotNull()
+                none = F.lit(None).cast(j.schema["tgt"].dataType)
                 keep_row = (
-                    F.when(matched & dele, F.lit(None).cast(j.schema["tgt"]
-                                                            .dataType))
+                    F.when(matched & dele, none)
                      .when(matched & upd, F.col("src"))
                      .when(matched, F.col("tgt"))
                      .when(F.col("tgt").isNotNull(), F.col("tgt"))   # tgt-only
                      .when(ins, F.col("src"))                        # src-only
-                     .otherwise(F.lit(None).cast(j.schema["tgt"].dataType)))
+                     .otherwise(none))
                 new_rows = (j.select(keep_row.alias("r"))
                              .where(F.col("r").isNotNull())
                              .select("r.*"))
@@ -2894,10 +2870,7 @@ class TxTable:
                     j.where((matched & ~dele & upd)
                             | (F.col("tgt").isNull() & ins)).select("src.*"),
                     meta)
-                adds = self._write_files(new_rows, key,
-                                         stats_cols=meta.get("stats_cols"),
-                                         partition_by=meta.get("partition_by"),
-                                         meta=meta)
+                adds = self._write_files(new_rows, meta)
                 cdf: list[dict] = []
                 if meta.get("change_feed"):
                     # _change_type must resolve src/tgt BEFORE flattening
@@ -2917,13 +2890,12 @@ class TxTable:
                                           .unionByName(inserted), meta)
                 actions = [{"op": "merge"}, *adds, *cdf,
                            *({"remove": {"path": a["path"]}} for a in touched)]
-                if txn is not None:
-                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-                if self._commit(actions, base + 1):
-                    self._maybe_checkpoint(base + 1)
-                    return {"files_scanned": len(live),
-                            "files_rewritten": len(touched),
-                            "files_untouched": len(live) - len(touched)}
+                return actions, {"files_scanned": len(live),
+                                 "files_rewritten": len(touched),
+                                 "files_untouched":
+                                     len(live) - len(touched)}, prune
+
+            return self._transact(attempt, txn)
 
     def apply_changes(self, changes: DataFrame,
                       txn: tuple[str, int] | None = None) -> dict:
@@ -2944,8 +2916,6 @@ class TxTable:
         CDF capture when enabled, so replicas can chain."""
         from pyspark.sql.window import Window as W
 
-        meta = self._state()[0]
-        key = meta["key_col"]
         if "_change_type" not in changes.columns:
             raise ValueError("changes must carry _change_type "
                              "(read_changes' shape)")
@@ -2956,27 +2926,23 @@ class TxTable:
         # the micro-batch source (a Python data-source scan in the
         # streaming replica) plus the netting window shuffle
         with pins() as pin:
-            last = pin(
-                changes.where(F.col("_change_type") != "update_preimage")
-                .withColumn("__rn", F.row_number().over(
-                    W.partitionBy(key).orderBy(F.desc(ord_col))))
-                .where(F.col("__rn") == 1))
-            cols = [f["name"]
-                    for f in json.loads(meta["schema"])["fields"]]
-            ups = self._check_schema(
-                last.where(F.col("_change_type") != "delete").select(*cols),
-                meta)
-            dels = last.where(F.col("_change_type") == "delete") \
-                       .select(key).distinct()
-            all_keys = ups.select(key).unionByName(dels).distinct()
-            prune = self._key_pruner(all_keys, key)
 
-            while True:
-                if txn is not None and self.last_txn(txn[0]) >= txn[1]:
-                    return {"files_scanned": 0, "files_rewritten": 0,
-                            "files_untouched": 0, "skipped_replay": True}
-                base = self.versions()[-1]          # pinned read (see merge)
-                _, live = self._state(base)
+            def attempt(meta, live, base):
+                key = meta["key_col"]
+                last = pin(
+                    changes.where(F.col("_change_type") != "update_preimage")
+                    .withColumn("__rn", F.row_number().over(
+                        W.partitionBy(key).orderBy(F.desc(ord_col))))
+                    .where(F.col("__rn") == 1))
+                cols = [f["name"]
+                        for f in json.loads(meta["schema"])["fields"]]
+                ups = self._check_schema(
+                    last.where(F.col("_change_type") != "delete")
+                    .select(*cols), meta)
+                dels = last.where(F.col("_change_type") == "delete") \
+                           .select(key).distinct()
+                all_keys = ups.select(key).unionByName(dels).distinct()
+                prune = self._key_pruner(all_keys, key)
                 touched = prune(list(live.values()))
                 if touched:
                     old = self._read_files(meta, touched)
@@ -2984,10 +2950,7 @@ class TxTable:
                                   .unionByName(ups)
                 else:
                     new_rows = ups
-                adds = self._write_files(new_rows, key,
-                                         stats_cols=meta.get("stats_cols"),
-                                         partition_by=meta.get("partition_by"),
-                                         meta=meta)
+                adds = self._write_files(new_rows, meta)
                 cdf: list[dict] = []
                 if meta.get("change_feed"):
                     if touched:
@@ -3014,52 +2977,46 @@ class TxTable:
                 actions = [{"op": "merge"}, *adds, *cdf,
                            *({"remove": {"path": a["path"]}}
                              for a in touched)]
-                if txn is not None:
-                    actions.append({"txn": {"app": txn[0], "batch": txn[1]}})
-                if self._commit(actions, base + 1):
-                    self._maybe_checkpoint(base + 1)
-                    return {"files_scanned": len(live),
-                            "files_rewritten": len(touched),
-                            "files_untouched": len(live) - len(touched)}
+                return actions, {"files_scanned": len(live),
+                                 "files_rewritten": len(touched),
+                                 "files_untouched":
+                                     len(live) - len(touched)}, prune
+
+            return self._transact(attempt, txn)
 
     def delete_keys(self, keys: DataFrame) -> dict:
         """Transactional DELETE by key: rewrite only the files that can
         contain a deleted key (same range+bloom pruning as the merge),
         dropping the matching rows; every other file survives untouched.
         Returns the same pruning stats as :meth:`merge_upsert`."""
-        meta = self._state()[0]
-        key = meta["key_col"]
         # pinned (see merge_upsert): pruner + anti-join + CDF semi-join
         with pins() as pin:
-            keys = pin(keys.select(key).distinct())
-            prune = self._key_pruner(keys, key)
 
-            while True:
-                base = self.versions()[-1]      # pinned read (see merge)
-                _, live = self._state(base)
+            def attempt(meta, live, base):
+                key = meta["key_col"]
+                ks = pin(keys.select(key).distinct())
+                prune = self._key_pruner(ks, key)
                 touched = prune(list(live.values()))
                 adds: list[dict] = []
                 cdf: list[dict] = []
                 if touched:
                     old = self._read_files(meta, touched)
                     adds = self._write_files(
-                        old.join(keys, key, "left_anti"), key,
-                        stats_cols=meta.get("stats_cols"),
-                        partition_by=meta.get("partition_by"), meta=meta)
+                        old.join(ks, key, "left_anti"), meta)
                     if meta.get("change_feed"):
                         cdf = self._write_cdf(
-                            old.join(keys, key, "semi")
+                            old.join(ks, key, "semi")
                             .withColumn("_change_type", F.lit("delete")),
                             meta)
-                v = base + 1
                 actions = [{"op": "delete"}, *adds, *cdf,
                            *({"remove": {"path": a["path"]}}
                              for a in touched)]
-                if self._commit(actions, v):
-                    self._maybe_checkpoint(v)
-                    return {"files_scanned": len(live),
-                            "files_rewritten": len(touched),
-                            "files_untouched": len(live) - len(touched)}
+                return actions, {"files_scanned": len(live),
+                                 "files_rewritten": len(touched),
+                                 "files_untouched":
+                                     len(live) - len(touched)}, prune
+
+            return self._transact(attempt)
 
     def delete_keys_dv(self, keys: DataFrame) -> dict:
         """MERGE-ON-READ DELETE via DELETION VECTORS (Delta DVs /
@@ -3077,23 +3034,20 @@ class TxTable:
         default. Upsert-after-delete stays correct: the merge reads
         touched files DV-applied, so a re-inserted key lands fresh in a
         DV-free file. Returns {files_tagged, rows_deleted}."""
-        meta = self._state()[0]
-        key = meta["key_col"]
         # pinned (see merge_upsert): pruner + DV semi-join + CDF
         with pins() as pin:
-            keys = pin(keys.select(key).distinct())
-            prune = self._key_pruner(keys, key)
 
-            while True:
-                base = self.versions()[-1]          # pinned read (see merge)
-                _, live = self._state(base)
+            def attempt(meta, live, base):
+                key = meta["key_col"]
+                ks = pin(keys.select(key).distinct())
+                prune = self._key_pruner(ks, key)
                 touched = prune(list(live.values()))
                 if not touched:
-                    return {"files_tagged": 0, "rows_deleted": 0}
+                    return None, {"files_tagged": 0, "rows_deleted": 0}
                 # DV-applied read (already-hidden rows are not re-recorded),
                 # file column kept so the pairs are per-file exact
                 old = self._read_files(meta, touched, keep_file_col="__file")
-                doomed = old.join(keys, key, "semi")
+                doomed = old.join(ks, key, "semi")
                 staging = os.path.join(self.data_dir,
                                        f".stage-{uuid.uuid4().hex}")
                 # DVs are kilobytes by design, but a table-sized key set
@@ -3114,9 +3068,9 @@ class TxTable:
                                   os.path.join(self.data_dir, dvname))
                         dv_paths.append(dvname)
                 shutil.rmtree(staging, ignore_errors=True)
-                # one metadata-plane job: (dv file, data file) pairs + counts
-                # — one row per touched file, the same order as the merge's
-                # own stats collect
+                # one metadata-plane job: (dv file, data file) pairs +
+                # counts — one row per touched file, the same order as
+                # the merge's own stats collect
                 stats = (self.spark.read.parquet(
                              *[os.path.join(self.data_dir, p)
                                for p in dv_paths])
@@ -3132,13 +3086,12 @@ class TxTable:
                     if p not in used:
                         os.unlink(os.path.join(self.data_dir, p))
                 if n_del == 0:
-                    return {"files_tagged": 0, "rows_deleted": 0}
+                    return None, {"files_tagged": 0, "rows_deleted": 0}
                 cdf: list[dict] = []
                 if meta.get("change_feed"):
                     cdf = self._write_cdf(
                         doomed.drop("__file")
                         .withColumn("_change_type", F.lit("delete")), meta)
-                v = base + 1
                 meta2, stamped = self._stamp_feature(meta, "deletion_vectors")
                 actions = [{"op": "delete_dv"},
                            *([{"meta": meta2}] if stamped else []),
@@ -3146,13 +3099,10 @@ class TxTable:
                                      "keys": dv_of[a["path"]]}}
                              for a in touched if a["path"] in dv_of),
                            *cdf]
-                if self._commit(actions, v):
-                    self._maybe_checkpoint(v)
-                    return {"files_tagged": len(dv_of),
-                            "rows_deleted": int(n_del)}
-                # lost the race: a concurrent rewrite may have replaced a
-                # tagged file — recompute against the new snapshot (the
-                # orphaned dv file is unreferenced ⇒ invisible)
+                return actions, {"files_tagged": len(dv_of),
+                                 "rows_deleted": int(n_del)}, prune
+
+            return self._transact(attempt)
 
     def update_where(self, set_exprs: dict[str, str], where: str,
                      partitions=None, key_lo=None, key_hi=None,
@@ -3193,10 +3143,7 @@ class TxTable:
 
     def _dml_where(self, kind: str, where: str, set_exprs,
                    partitions, key_lo, key_hi, stats) -> dict:
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
-            key = meta["key_col"]
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             if set_exprs:
                 unknown = [c for c in set_exprs
@@ -3223,10 +3170,10 @@ class TxTable:
             n_matched = sum(r["n"] for r in hits)
             touched_names = {r["__file"] for r in hits}
             if not touched_names:
-                return {"files_scanned": len(candidates),
-                        "files_rewritten": 0,
-                        "files_untouched": len(live),
-                        "rows_matched": 0}
+                return None, {"files_scanned": len(candidates),
+                              "files_rewritten": 0,
+                              "files_untouched": len(live),
+                              "rows_matched": 0}
             touched = [a for a in candidates
                        if a["path"] in touched_names]
             # Pin the touched-file read for the commit: the rewrite,
@@ -3254,10 +3201,7 @@ class TxTable:
                     new_rows = kept.unionByName(updated)
                 else:
                     new_rows = kept
-                adds = self._write_files(new_rows, key,
-                                         stats_cols=meta.get("stats_cols"),
-                                         partition_by=meta.get("partition_by"),
-                                         meta=meta)
+                adds = self._write_files(new_rows, meta)
                 cdf: list[dict] = []
                 if meta.get("change_feed"):
                     if kind == "update":
@@ -3271,18 +3215,14 @@ class TxTable:
                         changes = matched.withColumn("_change_type",
                                                      F.lit("delete"))
                     cdf = self._write_cdf(changes, meta)
-                op = "update" if kind == "update" else "delete"
-                actions = [{"op": op}, *adds, *cdf,
-                           *({"remove": {"path": a["path"]}}
-                             for a in touched)]
-                if self._commit(actions, base + 1):
-                    self._maybe_checkpoint(base + 1)
-                    return {"files_scanned": len(candidates),
-                            "files_rewritten": len(touched),
-                            "files_untouched": len(live) - len(touched),
-                            "rows_matched": int(n_matched)}
-            # lost the race: orphan the written files and recompute
-            # against the new snapshot
+            actions = [{"op": kind}, *adds, *cdf,
+                       *({"remove": {"path": a["path"]}} for a in touched)]
+            return actions, {"files_scanned": len(candidates),
+                             "files_rewritten": len(touched),
+                             "files_untouched": len(live) - len(touched),
+                             "rows_matched": int(n_matched)}
+
+        return self._transact(attempt)
 
     def purge_deletes(self) -> dict:
         """Materialize outstanding deletion vectors: rewrite ONLY the
@@ -3291,23 +3231,16 @@ class TxTable:
         of Delta's ``REORG TABLE ... APPLY (PURGE)``. Reads before and
         after see identical rows; afterwards they stop paying the
         anti-join."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
+        def attempt(meta, live, base):
             dirty = [a for a in live.values() if a.get("_dvs")]
             if not dirty:
-                return {"files_in": 0, "files_out": 0}
-            df = self._read_files(meta, dirty)
-            adds = self._write_files(df, meta["key_col"],
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            v = base + 1
-            actions = [{"op": "purge"}, *adds,
-                       *({"remove": {"path": a["path"]}} for a in dirty)]
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_in": len(dirty), "files_out": len(adds)}
+                return None, {"files_in": 0, "files_out": 0}
+            adds = self._write_files(self._read_files(meta, dirty), meta)
+            return [{"op": "purge"}, *adds,
+                    *({"remove": {"path": a["path"]}} for a in dirty)], \
+                {"files_in": len(dirty), "files_out": len(adds)}
+
+        return self._transact(attempt)
 
     def alter_partitioning(self, cols: list[str] | str | None) -> None:
         """PARTITION EVOLUTION (Iceberg's headline layout feature, the
@@ -3329,10 +3262,8 @@ class TxTable:
         """
         if cols is not None and not isinstance(cols, list):
             cols = [cols]
-        while True:
-            base = self.versions()[-1]
-            meta, _ = self._state(base)
-            from pyspark.sql.types import StructType
+
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             have = {f.name for f in schema.fields}
             missing = [c for c in (cols or []) if c not in have]
@@ -3340,7 +3271,7 @@ class TxTable:
                 raise ValueError(
                     f"partition column(s) {missing} not in schema")
             if _meta_parts(meta) == cols:
-                return                           # no-op
+                return None, None                # no-op
             new_meta = dict(meta)
             if cols is None:
                 new_meta.pop("partition_by", None)
@@ -3350,11 +3281,10 @@ class TxTable:
             new_meta["partition_evolved"] = True
             new_meta = self._stamp_feature(new_meta,
                                            "partition_evolution")[0]
-            v = base + 1
-            if self._commit([{"op": "alter_partitioning",
-                              "to": cols}, {"meta": new_meta}], v):
-                self._maybe_checkpoint(v)
-                return
+            return [{"op": "alter_partitioning", "to": cols},
+                    {"meta": new_meta}], None
+
+        self._transact(attempt)
 
     def replace_where(self, value, df: DataFrame) -> dict:
         """Atomic PARTITION OVERWRITE — Delta's ``replaceWhere``: in ONE
@@ -3373,28 +3303,13 @@ class TxTable:
         — the removes are log entries, not data reads (the change feed,
         if enabled, additionally reads the old partition to capture
         deletes). Returns {files_removed, files_added}."""
-        meta = self._state()[0]
-        pcols = _meta_parts(meta)
-        if not pcols:
-            raise ValueError(
-                f"table at {self.root} is not partitioned — "
-                f"replace_where needs create(..., partition_by=)")
-        tval = next(iter(_norm_pvals([value], len(pcols))))
-        df = self._check_schema(df, meta)
-        adds = self._write_files(df, meta["key_col"],
-                                 stats_cols=meta.get("stats_cols"),
-                                 partition_by=pcols, meta=meta)
-        stray = sorted({_pval_tuple(a["add"]) for a in adds
-                        if _pval_tuple(a["add"]) != tval})
-        if stray:
-            for a in adds:
-                os.unlink(os.path.join(self.data_dir, a["add"]["path"]))
-            raise ValueError(
-                f"replace_where({value!r}): write contains rows of "
-                f"other partitions {stray[:5]} — rejected before commit")
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            _, live = self._state(base)
+        def attempt(meta, live, base):
+            pcols = _meta_parts(meta)
+            if not pcols:
+                raise ValueError(
+                    f"table at {self.root} is not partitioned — "
+                    f"replace_where needs create(..., partition_by=)")
+            tval = next(iter(_norm_pvals([value], len(pcols))))
             foreign = [a for a in live.values()
                        if not _layout_matches(a, meta)]
             if foreign:
@@ -3408,27 +3323,31 @@ class TxTable:
                     f"file(s) predate the current partition layout "
                     f"(partition evolution) — run compact() to "
                     f"materialize the new layout first")
-            doomed = [a for a in live.values()
-                      if _pval_tuple(a) == tval]
+            new_df = self._check_schema(df, meta)
+            adds = self._write_files(new_df, meta)
+            stray = sorted({_pval_tuple(a["add"]) for a in adds
+                            if _pval_tuple(a["add"]) != tval})
+            if stray:
+                for a in adds:
+                    os.unlink(os.path.join(self.data_dir, a["add"]["path"]))
+                raise ValueError(
+                    f"replace_where({value!r}): write contains rows of "
+                    f"other partitions {stray[:5]} — rejected before commit")
+            doomed = [a for a in live.values() if _pval_tuple(a) == tval]
             cdf: list[dict] = []
             if meta.get("change_feed"):
                 old = self._read_files(meta, doomed)
                 cdf = self._write_cdf(
                     old.withColumn("_change_type", F.lit("delete"))
-                    .unionByName(df.withColumn("_change_type",
-                                               F.lit("insert"))), meta)
-            v = base + 1
-            pred = dict(zip(pcols, tval))
-            actions = [{"op": "replace_where", "pred": pred},
+                    .unionByName(new_df.withColumn("_change_type",
+                                                   F.lit("insert"))), meta)
+            actions = [{"op": "replace_where", "pred": dict(zip(pcols, tval))},
                        *adds, *cdf,
                        *({"remove": {"path": a["path"]}} for a in doomed)]
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_removed": len(doomed),
-                        "files_added": len(adds)}
-            # lost the race: the doomed set may have changed (a
-            # concurrent merge rewrote partition files) — recompute it
-            # against the new snapshot; the adds are version-independent
+            return actions, {"files_removed": len(doomed),
+                             "files_added": len(adds)}
+
+        return self._transact(attempt)
 
     def compact(self, target_rows: int = 1_000_000) -> dict:
         """OPTIMIZE: bin-pack small data files into ~``target_rows`` files
@@ -3466,31 +3385,20 @@ class TxTable:
                                                       len(pcols)))
 
     def _compact(self, target_rows: int, pvals: set | None) -> dict:
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
+        def attempt(meta, live, base):
             small = [a for a in live.values()
                      if a["rows"] < target_rows // 2
                      and (pvals is None or _pval_tuple(a) in pvals)]
             if len(small) < 2:
-                return {"files_in": 0, "files_out": 0}
+                return None, {"files_in": 0, "files_out": 0}
             total = sum(a["rows"] for a in small)
-            n_out = max(1, -(-total // target_rows))
-            df = self._read_files(meta, small)
-            adds = self._write_files(df, meta["key_col"], n_files=n_out,
-                                     stats_cols=meta.get("stats_cols"),
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            v = base + 1
-            actions = [{"op": "compact"}, *adds,
-                       *({"remove": {"path": a["path"]}} for a in small)]
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_in": len(small), "files_out": len(adds)}
-            # lost the race: a concurrent commit may have REWRITTEN one of
-            # the inputs — the staged adds would resurrect its old rows,
-            # so orphan them (unreferenced ⇒ invisible) and recompute
-            # everything against the new snapshot
+            adds = self._write_files(self._read_files(meta, small), meta,
+                                     n_files=max(1, -(-total // target_rows)))
+            return [{"op": "compact"}, *adds,
+                    *({"remove": {"path": a["path"]}} for a in small)], \
+                {"files_in": len(small), "files_out": len(adds)}
+
+        return self._transact(attempt)
 
     def optimize_zorder(self, cols: list[str],
                         n_files: int | None = None,
@@ -3517,9 +3425,8 @@ class TxTable:
         before the Z-order version still sees the old layout."""
         if not cols:
             raise ValueError("no columns to zorder on")
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
+
+        def attempt(meta, live, base):
             declared = [meta["key_col"], *(meta.get("stats_cols") or [])]
             bad = [c for c in cols if c not in declared]
             if bad:
@@ -3528,7 +3435,7 @@ class TxTable:
                     f"(declare them in create(stats_cols=...)); stats "
                     f"exist for {declared}")
             if not live:
-                return {"files_in": 0, "files_out": 0}
+                return None, {"files_in": 0, "files_out": 0}
             df = self._read_files(meta, list(live.values()))
             num = {}
             for c in cols:
@@ -3562,20 +3469,13 @@ class TxTable:
                         bit * len(cols) + i))
             total = sum(a["rows"] for a in live.values())
             n_out = n_files or max(1, -(-total // target_rows))
-            adds = self._write_files(df, meta["key_col"], n_files=n_out,
-                                     stats_cols=meta.get("stats_cols"),
-                                     order_expr=z,
-                                     partition_by=meta.get("partition_by"),
-                                     meta=meta)
-            v = base + 1
-            actions = [{"op": "zorder"}, *adds,
-                       *({"remove": {"path": a["path"]}}
-                         for a in live.values())]
-            if self._commit(actions, v):
-                self._maybe_checkpoint(v)
-                return {"files_in": len(live), "files_out": len(adds)}
-            # lost the race: recompute against the new snapshot (a
-            # concurrent merge may have rewritten an input file)
+            adds = self._write_files(df, meta, n_files=n_out, order_expr=z)
+            return [{"op": "zorder"}, *adds,
+                    *({"remove": {"path": a["path"]}}
+                      for a in live.values())], \
+                {"files_in": len(live), "files_out": len(adds)}
+
+        return self._transact(attempt)
 
     def _referenced_paths(self) -> set[str]:
         """Data files referenced by any commit that could ever be
@@ -3642,11 +3542,7 @@ class TxTable:
         the latest analyze back with a staleness indicator;
         :meth:`advise_broadcast` turns it into the classic CBO
         broadcast-vs-shuffle join-side decision."""
-        while True:
-            base = self.versions()[-1]          # pinned read (see merge)
-            meta, live = self._state(base)
-            if meta is None:
-                raise FileNotFoundError(f"no table at {self.root}")
+        def attempt(meta, live, base):
             schema = StructType.fromJson(json.loads(meta["schema"]))
             cols = columns or schema.fieldNames()
             unknown = [c for c in cols if c not in schema.fieldNames()]
@@ -3672,10 +3568,9 @@ class TxTable:
                                      "min": r[f"__min{i}"],
                                      "max": r[f"__max{i}"]}
                                  for i, c in enumerate(cols)}}
-            if self._commit([{"op": "analyze", "stats": stats}],
-                            base + 1):
-                self._maybe_checkpoint(base + 1)
-                return stats
+            return [{"op": "analyze", "stats": stats}], stats
+
+        return self._transact(attempt)
 
     def table_stats(self) -> dict | None:
         """The latest :meth:`analyze` result, or None. Metadata-plane
