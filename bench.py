@@ -327,6 +327,19 @@ def is_load_skewed(canary_secs: list[float],
     return any(t > pinned * factor for t in canary_secs)
 
 
+def census(spark, name: str, leaked: set[str]) -> None:
+    """Leak census after one run of ``name``: a query that leaves a
+    cached plan behind is added to ``leaked`` (reported in
+    BENCH_spread.json), and the cache is cleared so the next run is
+    not handed a warm cache."""
+    from walmart_project_etl_spark.operators.util import leak_census
+
+    n = leak_census(spark)
+    if n:
+        leaked.add(name)
+        print(f"# {name}: LEAKED {n} cached plan(s)", file=sys.stderr)
+
+
 def main() -> int:
     from walmart_project_etl_spark.queries import registry
     from walmart_project_etl_spark.session import get_spark
@@ -355,9 +368,11 @@ def main() -> int:
 
     sc = spark.sparkContext
     run_seq = [0]
+    leaked: set[str] = set()
 
     def run_once(name: str) -> tuple[float, int]:
         """One timed materialization; returns (seconds, failed_tasks).
+        The leak census (:func:`census`) runs after it.
 
         Failed/retried task attribution (VERDICT r8 task 2): each run gets
         a unique job group, and after the run the status tracker's stage
@@ -384,6 +399,7 @@ def main() -> int:
             dt = time.time() - t0
         finally:
             sc.setJobGroup(None, None)
+            census(spark, name, leaked)
         failed = 0
         try:
             tracker = sc.statusTracker()
@@ -462,7 +478,8 @@ def main() -> int:
                     "BENCH_spread.json"), "w") as fh:
                 json.dump({"sf": sf, "canary": canary_secs,
                            "rotation": rotated,
-                           "timings": timings, "spread": spread}, fh)
+                           "timings": timings, "spread": spread,
+                           "leaked": sorted(leaked)}, fh)
         except OSError as e:
             print(f"# spread file not written: {e}", file=sys.stderr)
     # The driver tails stdout for ONE JSON line and its capture window is

@@ -25,12 +25,11 @@ def _leak_census(request):
     yield
     from pyspark.sql import SparkSession
 
+    from walmart_project_etl_spark.operators.util import leak_census
+
     spark = SparkSession.getActiveSession()
     if spark is None:
         return
-    try:
-        empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        assert empty, \
-            f"{request.node.nodeid} left cached plans in the CacheManager"
-    finally:
-        spark.catalog.clearCache()
+    n = leak_census(spark)
+    assert not n, \
+        f"{request.node.nodeid} left {n} cached plan(s) in the CacheManager"

@@ -1,4 +1,5 @@
-"""Unit tests for bench.py's measurement plumbing (no Spark needed).
+"""Unit tests for bench.py's measurement plumbing (only the leak census
+starts Spark).
 
 The bench harness is a per-round driver artifact: its final JSON line must
 parse inside the driver's ~4 KB tail capture (BENCH_r06 and BENCH_r11 both
@@ -188,3 +189,21 @@ class TestRotation:
              "detail": "BENCH_spread.json"},
             separators=(",", ":"))
         assert len(line) <= 1800
+
+
+def test_census_marks_a_leaking_run_and_clears_the_cache(spark, capsys):
+    """The leak census after a bench run: a query that leaves a cached
+    plan behind is marked leaked for BENCH_spread.json and the cache is
+    cleared; a clean run is not marked, and stdout stays empty."""
+    leaked: set[str] = set()
+    bench.census(spark, "clean", leaked)
+    df = spark.range(10).cache()
+    df.count()
+    bench.census(spark, "leaky", leaked)
+    assert leaked == {"leaky"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    bench.census(spark, "after", leaked)
+    assert leaked == {"leaky"}
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "leaky: LEAKED 1 cached plan(s)" in out.err

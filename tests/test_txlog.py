@@ -2888,6 +2888,46 @@ def test_lost_race_retry_reads_meta_at_its_base(spark, tmp_path, op):
         t.append(bad)
 
 
+@pytest.mark.parametrize("race", ["add_constraint", "data_append"])
+def test_append_lost_race_checks_the_head_meta(spark, tmp_path, race):
+    """A plain append that loses its commit race re-checks its batch
+    only when a meta action landed after its base: a concurrent CHECK
+    constraint rejects the batch with the usual error, and a concurrent
+    data-only append lets it re-commit the files it already wrote."""
+    root = str(tmp_path / "t")
+    t = TxTable(spark, root)
+    t.create(spark.createDataFrame([(k, k + 1.0) for k in range(20)],
+                                   "k long, v double"), "k", n_files=2)
+    if race == "add_constraint":
+        t._pre_commit_hook = lambda: TxTable(spark, root).add_constraint(
+            "v_pos", "v > 0")
+    else:
+        t._pre_commit_hook = lambda: TxTable(spark, root).append(
+            spark.createDataFrame([(30, 1.0)], "k long, v double"))
+    writes = []
+    real_write = t._write_files
+
+    def counting_write(*a, **k):
+        writes.append(1)
+        return real_write(*a, **k)
+
+    t._write_files = counting_write
+    bad = spark.createDataFrame([(40, -1.0)], "k long, v double")
+    if race == "add_constraint":
+        with pytest.raises(ValueError, match=r"CHECK constraint 'v_pos' "
+                                             r".* write rejected"):
+            t.append(bad)
+        assert t.snapshot().where("v <= 0").count() == 0
+        assert t._state()[0]["constraints"] == {"v_pos": "v > 0"}
+    else:
+        t.append(bad)
+        assert len(writes) == 1
+        assert t.snapshot().count() == 22
+        assert [r["k"] for r in t.snapshot().where("v <= 0").collect()] \
+            == [40]
+        assert t.vacuum_uncommitted(older_than_s=0.0) == []
+
+
 def test_empty_writes_leave_no_orphan_file(spark, tmp_path):
     """A write's zero-row part files get no add action and are unlinked:
     an empty create and a delete that empties a touched file leave
@@ -3267,19 +3307,26 @@ def _last_execution_id(spark) -> int:
 
 def test_read_col_in_probes_without_a_job(spark, tmp_path):
     """The probe values plan as a local relation: building a bloom
-    lookup submits no Spark job; an empty value list reads 0 rows."""
+    lookup, or a lookup on the key column (its literal keys deduped and
+    range-checked on the driver), submits no Spark job; an empty value
+    list reads 0 rows."""
     df = spark.range(0, 200).select(
         F.col("id").alias("k"), (F.col("id") % 17).cast("string")
         .alias("name"))
     tt = TxTable(spark, str(tmp_path / "t"))
-    tt.create(df, "k", n_files=2, bloom_cols=["name"])
+    tt.create(df, "k", n_files=3, bloom_cols=["name"])
     before = _job_ids(spark)
     got = tt.read_col_in("name", ["3", "5", "3"])
+    keys = tt.read_col_in("k", [4, 4, 7])
+    far = tt.read_col_in("k", [1000, None])
+    empty = tt.read_col_in("k", [])
     assert _job_ids(spark) == before
     assert got.count() == 24
+    assert sorted(r["k"] for r in keys.collect()) == [4, 7]
+    assert len(keys.inputFiles()) == 1
+    assert far.inputFiles() == [] and far.count() == 0
+    assert empty.count() == 0
     assert tt.read_col_in("name", []).count() == 0
-    assert tt.read_col_in("k", []).count() == 0
-    assert tt.read_col_in("k", [4, 4, 7]).count() == 2
 
 
 def test_merge_upsert_metadata_runs_one_query(spark, tmp_path):

@@ -24,6 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from walmart_project_etl_spark.operators.util import leak_census  # noqa: E402
+
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
@@ -130,15 +132,12 @@ def compare(name, spark_df, oracle_df):
     return problems
 
 
-def leak_census(spark) -> list[str]:
-    """A cached plan that a query leaves behind hands every later query
-    in the session a warm cache: report it as a problem and clear it,
-    so the next query runs cold."""
-    n = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
-    if not n:
-        return []
-    spark.catalog.clearCache()
-    return [f"LEAKED {n} cached plan(s)"]
+def leaks(spark) -> list[str]:
+    """The query's leaked cached plans as a problem line (see
+    ``operators.util.leak_census``); the cache is cleared, so the next
+    query runs cold."""
+    n = leak_census(spark)
+    return [f"LEAKED {n} cached plan(s)"] if n else []
 
 
 def main():
@@ -164,16 +163,16 @@ def main():
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
-            leak_census(spark)
+            leaks(spark)
             results[name] = [f"SPARK ERROR: {type(e).__name__}: {str(e)[:300]}"]
             print(f"✗ {name}: SPARK ERROR {str(e)[:200]}")
             continue
-        leaks = leak_census(spark)
+        leaked = leaks(spark)
         if name not in oracles:
-            results[name] = leaks
-            print(f"{'✗' if leaks else '~'} {name}: rows-only ({len(sdf)} "
+            results[name] = leaked
+            print(f"{'✗' if leaked else '~'} {name}: rows-only ({len(sdf)} "
                   f"rows, {time.time()-t0:.1f}s)"
-                  + "".join(f"\n    {p}" for p in leaks))
+                  + "".join(f"\n    {p}" for p in leaked))
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -181,7 +180,7 @@ def main():
             results[name] = [f"ORACLE ERROR: {type(e).__name__}: {str(e)[:300]}"]
             print(f"✗ {name}: ORACLE ERROR {str(e)[:200]}")
             continue
-        probs = leaks + compare(name, sdf, odf)
+        probs = leaked + compare(name, sdf, odf)
         results[name] = probs
         real = [p for p in probs if not p.startswith("WARN")]
         mark = "✓" if not real else "✗"

@@ -33,6 +33,18 @@ def pins() -> Iterator[Callable[[DataFrame], DataFrame]]:
             df.unpersist()
 
 
+def leak_census(spark) -> int:
+    """Number of plans in the session's CacheManager, which is then
+    cleared. Run after a query that should leave nothing cached: a pin
+    it forgot to release (or a ``.cache()`` nobody owns) would hand
+    every later query in the session a warm cache. Clearing makes one
+    leak count against its own query only."""
+    n = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    if n:
+        spark.catalog.clearCache()
+    return n
+
+
 def join_group_stats(df: DataFrame, stats: DataFrame,
                      group_cols: list[str], how: str = "inner",
                      broadcast: bool = True) -> DataFrame:

@@ -119,12 +119,26 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
 
     Every stage RELOADS its inputs from the warehouse, so any stage can
     run in a fresh process — the property resume needs.
+
+    Staging and target load in two waves, dims before facts: the dims
+    are written first, read back, and the facts resolve their keys
+    against the written files. Built over the dims' lazy plans instead,
+    every fact write would re-run the dim plans inside its broadcasts
+    (the staging key-map dedups; the target SCD1 merges and SCD2
+    applies). The target dims are staged into ``<table>__new`` and the
+    facts read those; all nine target tables are committed together
+    after both waves, so the two-phase swap is unchanged. ODS loads in
+    one wave: read back from parquet its dims would be all-nullable,
+    which changes the footer schema, and so the bytes, that
+    ``ods_returns`` and ``ods_inventory`` write.
     """
     from walmart_project_etl_spark.pipeline import (TARGET_TABLES,
                                                     _parallel_writes)
     from walmart_project_etl_spark.plans.ods import build_ods
-    from walmart_project_etl_spark.plans.staging import build_staging
-    from walmart_project_etl_spark.plans.target import build_target
+    from walmart_project_etl_spark.plans.staging import (build_staging_dims,
+                                                         build_staging_facts)
+    from walmart_project_etl_spark.plans.target import (build_target_dims,
+                                                        build_target_facts)
     from walmart_project_etl_spark.quality import assert_quality
     from walmart_project_etl_spark.schemas import ODS_SCHEMAS, STG_SCHEMAS
     from walmart_project_etl_spark.sources.catalog import Warehouse
@@ -133,11 +147,14 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
     wh = Warehouse(spark, warehouse_root)
     ODS_TABLES, STG_TABLES = tuple(ODS_SCHEMAS), tuple(STG_SCHEMAS)
 
+    def write_all(write, frames: dict[str, DataFrame]) -> None:
+        _parallel_writes(
+            (lambda n=n, d=d: write(n, d)) for n, d in frames.items())
+
     def load_ods() -> None:
         src = read_source_csv(spark, csv_path)
-        ods = build_ods(spark, src, run_date=run_date, seed=seed)
-        _parallel_writes(
-            (lambda n=n, d=d: wh.write("ods", n, d)) for n, d in ods.items())
+        write_all(lambda n, d: wh.write("ods", n, d),
+                  build_ods(spark, src, run_date=run_date, seed=seed))
 
     def validate_ods() -> None:
         if enforce_quality:
@@ -145,9 +162,11 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
 
     def load_staging() -> None:
         ods = {n: wh.read("ods", n) for n in ODS_TABLES}
-        stg = build_staging(ods, batch_id=batch_id, run_date=run_date)
-        _parallel_writes(
-            (lambda n=n, d=d: wh.write("stg", n, d)) for n, d in stg.items())
+        dims = build_staging_dims(ods, batch_id, run_date)
+        write_all(lambda n, d: wh.write("stg", n, d), dims)
+        dims = {n: wh.read("stg", n) for n in dims}
+        write_all(lambda n, d: wh.write("stg", n, d),
+                  build_staging_facts(ods, dims, batch_id, run_date))
 
     def load_target() -> None:
         # a prior run may have died between stage_new and commit_staged;
@@ -163,25 +182,26 @@ def pipeline_stages(spark: SparkSession, csv_path: str, warehouse_root: str,
         # version history
         prior = ({n: wh.read("tgt", n) for n in TARGET_TABLES}
                  if all(wh.exists("tgt", n) for n in TARGET_TABLES) else None)
-        tgt = build_target(stg, prior, run_date=run_date, batch_id=batch_id)
-        # Two-phase commit via the Warehouse seam: every target plan reads
-        # the PRIOR dim/fact files (SCD merges, fact interval joins), so
-        # stage all new tables first, then swap — replacing any table in
-        # place would delete files a later plan still needs.
+        # Two-phase commit via the Warehouse seam: the dims' SCD plans
+        # read the PRIOR dim files and the fact appends the prior fact
+        # files, so stage every new table first, then swap — replacing
+        # any table in place would delete files a later plan still needs.
+        dims = build_target_dims(stg, prior, run_date)
+        write_all(lambda n, d: wh.stage_new("tgt", n, d), dims)
+        staged = {n: wh.read("tgt", f"{n}__new") for n in dims}
 
-        def write_new(name: str, df: DataFrame) -> None:
-            if name.startswith("tgt_fact_") and prior is not None:
+        def write_fact(name: str, df: DataFrame) -> None:
+            if prior is not None:
                 # D3 fact append, made idempotent: drop this batch's prior
                 # rows first (overwrite-by-batch beats the reference's
                 # duplicate-on-rerun, etl_target_loader.py:1023-1030)
-                existing = wh.read("tgt", name) \
-                             .where(f"etl_batch_id <> '{batch_id}'")
+                existing = prior[name].where(f"etl_batch_id <> '{batch_id}'")
                 df = existing.unionByName(df)
             wh.stage_new("tgt", name, df)
 
-        _parallel_writes(
-            (lambda n=n, d=d: write_new(n, d)) for n, d in tgt.items())
-        wh.commit_staged("tgt", tgt.keys())
+        facts = build_target_facts(stg, staged, run_date, batch_id)
+        write_all(write_fact, facts)
+        wh.commit_staged("tgt", [*dims, *facts])
 
     def clear_stg() -> None:
         if clear_staging:

@@ -320,26 +320,42 @@ def build_stg_inventory(ods_inventory: DataFrame, stg_date: DataFrame,
     ), batch_id, ts)
 
 
-def build_staging(ods: dict[str, DataFrame], batch_id: str, run_date: str) -> dict[str, DataFrame]:
-    """Full ODS → Staging plan (reference ``load_staging_layer``, :1385-1415)."""
+def build_staging_dims(ods: dict[str, DataFrame], batch_id: str,
+                       run_date: str) -> dict[str, DataFrame]:
+    """The six staging dimensions, built from ODS alone."""
     ts = F.lit(run_date).cast("timestamp")
-    stg_date = build_stg_date(ods["ods_date"], batch_id, ts)
-    stg_customer = build_stg_customer(ods["ods_customer"], batch_id, ts)
-    stg_product = build_stg_product(ods["ods_product"], ods["ods_supplier"], batch_id, ts)
-    stg_store = build_stg_store(ods["ods_store"], batch_id, ts)
-    stg_supplier = build_stg_supplier(ods["ods_supplier"], batch_id, ts)
-    stg_reason = build_stg_return_reason(ods["ods_return_reason"], batch_id, ts)
     return {
-        "stg_date": stg_date,
-        "stg_customer": stg_customer,
-        "stg_product": stg_product,
-        "stg_store": stg_store,
-        "stg_supplier": stg_supplier,
-        "stg_return_reason": stg_reason,
-        "stg_sales": build_stg_sales(ods["ods_sales"], stg_date, stg_customer,
-                                     stg_product, stg_store, batch_id, ts),
-        "stg_returns": build_stg_returns(ods["ods_returns"], stg_date, stg_product,
-                                         stg_store, stg_reason, batch_id, ts),
-        "stg_inventory": build_stg_inventory(ods["ods_inventory"], stg_date,
-                                             stg_product, stg_store, batch_id, ts),
+        "stg_date": build_stg_date(ods["ods_date"], batch_id, ts),
+        "stg_customer": build_stg_customer(ods["ods_customer"], batch_id, ts),
+        "stg_product": build_stg_product(ods["ods_product"], ods["ods_supplier"],
+                                          batch_id, ts),
+        "stg_store": build_stg_store(ods["ods_store"], batch_id, ts),
+        "stg_supplier": build_stg_supplier(ods["ods_supplier"], batch_id, ts),
+        "stg_return_reason": build_stg_return_reason(ods["ods_return_reason"],
+                                                     batch_id, ts),
     }
+
+
+def build_staging_facts(ods: dict[str, DataFrame], dims: dict[str, DataFrame],
+                        batch_id: str, run_date: str) -> dict[str, DataFrame]:
+    """The three staging facts, their keys resolved against ``dims`` —
+    :func:`build_staging_dims`' frames, or those tables as written, so
+    the key-map dedup runs over files instead of re-running the dim
+    plans inside every fact."""
+    ts = F.lit(run_date).cast("timestamp")
+    date, product, store = dims["stg_date"], dims["stg_product"], dims["stg_store"]
+    return {
+        "stg_sales": build_stg_sales(ods["ods_sales"], date, dims["stg_customer"],
+                                     product, store, batch_id, ts),
+        "stg_returns": build_stg_returns(ods["ods_returns"], date, product, store,
+                                         dims["stg_return_reason"], batch_id, ts),
+        "stg_inventory": build_stg_inventory(ods["ods_inventory"], date,
+                                             product, store, batch_id, ts),
+    }
+
+
+def build_staging(ods: dict[str, DataFrame], batch_id: str, run_date: str) -> dict[str, DataFrame]:
+    """Full ODS → Staging plan (reference ``load_staging_layer``, :1385-1415):
+    the dims, then the facts over the dims' lazy plans."""
+    dims = build_staging_dims(ods, batch_id, run_date)
+    return {**dims, **build_staging_facts(ods, dims, batch_id, run_date)}

@@ -12,6 +12,13 @@ reference ``etl_target_loader.py``.
   join (J9, ``operators.interval_join``; reference :711-776, :831-880,
   :935-993).
 
+Dims before facts: :func:`build_target` composes the two builders over
+lazy dim plans, which makes every fact re-run the SCD merges inside its
+broadcasts. The daily load (``orchestrate.pipeline_stages``) instead
+stages the dims first (``Warehouse.stage_new`` into ``<table>__new``),
+reads them back and builds the facts over the written ``__new`` files,
+so each SCD plan runs once; all nine tables then swap in together.
+
 Scale: dims broadcast into the fact joins (dimension-sized by
 construction); the interval join shuffles only on the natural equi key with
 the validity range as residual filter. Fact identity is the hash key, so
@@ -263,15 +270,30 @@ def build_fact_inventory(stg: dict[str, DataFrame], tgt: dict[str, DataFrame],
             & F.col("store_key").isNotNull())
 
 
+def build_target_dims(stg: dict[str, DataFrame],
+                      prior: dict[str, DataFrame] | None,
+                      run_date: str) -> dict[str, DataFrame]:
+    """The six target dims: SCD1 merges and SCD2 applies over ``prior``."""
+    now_ts = F.lit(run_date).cast("timestamp")
+    return {**build_scd1_dims(stg, prior, now_ts),
+            **build_scd2_dims(stg, prior, run_date, now_ts)}
+
+
+def build_target_facts(stg: dict[str, DataFrame], dims: dict[str, DataFrame],
+                       run_date: str, batch_id: str) -> dict[str, DataFrame]:
+    """The three target facts, their keys resolved against ``dims``
+    (see the module docstring for why the load passes the staged dims)."""
+    now_ts = F.lit(run_date).cast("timestamp")
+    return {
+        "tgt_fact_sales": build_fact_sales(stg, dims, batch_id, now_ts),
+        "tgt_fact_returns": build_fact_returns(stg, dims, batch_id, now_ts),
+        "tgt_fact_inventory": build_fact_inventory(stg, dims, batch_id, now_ts),
+    }
+
+
 def build_target(stg: dict[str, DataFrame], prior: dict[str, DataFrame] | None,
                  run_date: str, batch_id: str) -> dict[str, DataFrame]:
     """Full Staging → Target plan (reference ``etl_target_loader.main``,
-    :999-1036). Order is load-bearing: dims before facts."""
-    now_ts = F.lit(run_date).cast("timestamp")
-    tgt: dict[str, DataFrame] = {}
-    tgt.update(build_scd1_dims(stg, prior, now_ts))
-    tgt.update(build_scd2_dims(stg, prior, run_date, now_ts))
-    tgt["tgt_fact_sales"] = build_fact_sales(stg, tgt, batch_id, now_ts)
-    tgt["tgt_fact_returns"] = build_fact_returns(stg, tgt, batch_id, now_ts)
-    tgt["tgt_fact_inventory"] = build_fact_inventory(stg, tgt, batch_id, now_ts)
-    return tgt
+    :999-1036): the dims, then the facts over the dims' lazy plans."""
+    dims = build_target_dims(stg, prior, run_date)
+    return {**dims, **build_target_facts(stg, dims, run_date, batch_id)}

@@ -23,6 +23,18 @@ def get_spark(app_name: str = "walmart-project-etl-spark",
       Python hop in the engine; everything else is JVM Column expressions).
     - ``spark.sql.session.timeZone=UTC`` so date/timestamp semantics are
       deterministic and match the DuckDB oracle.
+    - Python call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+      PySpark wraps every Column and DataFrame API call so the Python
+      line can appear in error messages, and each wrapped call costs
+      about 10 extra py4j round trips: ``F.col("a")`` takes 13 instead
+      of 3, and building one day's load plans takes about 27k round
+      trips instead of 13k. The cost of turning it off: an analysis or
+      runtime error no longer names the Python file and line in its
+      DataFrame query context; the error class, the message and the
+      offending column or expression are unchanged. PySpark reads the
+      setting once per process, from the first active session, so it
+      is set here, when the session is built.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -37,6 +49,7 @@ def get_spark(app_name: str = "walmart-project-etl-spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

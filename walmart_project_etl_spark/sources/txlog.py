@@ -183,6 +183,31 @@ _EPOCH = datetime.date(1970, 1, 1)
 _DAY_MIN, _DAY_MAX = -719162, 2932896
 
 
+def _local_key_prune(rows):
+    """Driver-side pruner for a small key set: ``rows`` hold each
+    distinct non-NULL key ``__k`` with its bloom positions ``__p``
+    (:func:`_bloom_positions`). Returns ``prune(add-actions) ->`` the
+    files whose [kmin, kmax] holds some key (bisect over the sorted
+    keys, so a key set clustered at both ends of the key space does not
+    match every file in between) and whose key bloom may hold it."""
+    import bisect
+    ks = sorted(r["__k"] for r in rows)
+    probe_list = [tuple(int(x) for x in r["__p"]) for r in rows]
+
+    def may_contain(a: dict) -> bool:
+        i = bisect.bisect_left(ks, a["kmin"])
+        if i >= len(ks) or ks[i] > a["kmax"]:
+            return False
+        bloom_hex = a.get("bloom")
+        if bloom_hex is None:
+            return True                  # format-v1 file
+        bm = int(bloom_hex, 16)
+        return any(all((bm >> p) & 1 for p in probe)
+                   for probe in probe_list)
+
+    return lambda actions: [a for a in actions if may_contain(a)]
+
+
 def _stats_aggs(col: str, dtype: str, group: str, i: int) -> list:
     """Spark's per-file ``min``/``max``/NULL count of ``col`` aliased
     ``__<group>{min,max,null}<i>`` — the aggregate :func:`_footer_stats`
@@ -2374,27 +2399,7 @@ class TxTable:
         # real per-micro-batch latency in streaming sinks)
         rows = probed.limit(_BLOOM_PROBE_CAP + 1).collect()
         if len(rows) <= _BLOOM_PROBE_CAP:
-            import bisect
-            ks = sorted(r["__k"] for r in rows)
-            probe_list = [tuple(int(x) for x in r["__p"]) for r in rows]
-
-            def may_contain(a: dict) -> bool:
-                # PER-KEY range intersection (any key inside the file's
-                # [kmin, kmax], found by bisect in O(log n)) — strictly
-                # stronger than the global-bounds check it replaces: a
-                # key set clustered at both ends of the key space no
-                # longer matches every file in between
-                i = bisect.bisect_left(ks, a["kmin"])
-                if i >= len(ks) or ks[i] > a["kmax"]:
-                    return False
-                bloom_hex = a.get("bloom")
-                if bloom_hex is None:
-                    return True                  # format-v1 file
-                bm = int(bloom_hex, 16)
-                return any(all((bm >> p) & 1 for p in probe)
-                           for probe in probe_list)
-
-            return lambda actions: [a for a in actions if may_contain(a)]
+            return _local_key_prune(rows)
 
         ktype = dict(keys.dtypes)[key]
 
@@ -2478,8 +2483,17 @@ class TxTable:
         schema = StructType.fromJson(json.loads(meta["schema"]))
         vdf = self._values_frame(col, schema[col].dataType, values)
         if col == meta["key_col"]:
-            # the key has the strictly stronger range+bloom path
-            return self._read_matching(meta, live, vdf)
+            # the key has the strictly stronger range+bloom path, here
+            # with the literal keys deduped and range-checked on the
+            # driver instead of by the pruner's distinct-keys job
+            rows = {r["__k"]: r for r in
+                    vdf.where(F.col(col).isNotNull())
+                       .select(F.col(col).alias("__k"),
+                               _bloom_positions(col).alias("__p"))
+                       .collect()}
+            prune = _local_key_prune(list(rows.values()))
+            return self._read_files(meta, prune(list(live.values()))) \
+                       .where(F.col(col).isin(list(rows)))
         bbits = int(meta.get("bloom_bits") or _COL_BLOOM_BITS)
         probes = {tuple(int(x) for x in r["__p"]) for r in
                   vdf.where(F.col(col).isNotNull())
@@ -2502,42 +2516,39 @@ class TxTable:
                    .where(F.col(col).isin(list(values)))
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> None:
-        """ACID append: new files + one log commit; retries the commit
-        (not the file writes — they are version-independent) on a lost
-        optimistic race.
+        """ACID append: new files + one log commit.
 
         ``merge_schema=True`` is Delta's ``mergeSchema`` write option:
         new columns in ``df`` extend the declared schema ATOMICALLY in
         the same commit as the data (old files surface them as NULL;
         declared columns missing from ``df`` fill as NULLs) — the
-        drifting-upstream ingest case. The evolving path pins its base
-        version and rewrites on a lost race (the schema action must
-        not clobber a concurrent evolve); the default path keeps the
-        cheap commit-only retry."""
-        meta, _ = self._state()
-        ident = meta.get("identity")
-        if ident and ident["col"] in df.columns:
-            raise ValueError(
-                f"identity column '{ident['col']}' is GENERATED ALWAYS "
-                f"— it must not be provided on append")
+        drifting-upstream ingest case. The evolving path (schema merge
+        or identity column) derives its schema action and identity mark
+        at the base it commits on, so a lost race rewrites. The default
+        path's files depend only on the meta: a race lost to a
+        data-only commit re-commits the same files, and only a race
+        lost to a meta change (a new constraint, a schema change)
+        re-checks and rewrites the batch against the new meta."""
         # pinned (see merge_upsert): the batch is read by the
         # constraint/generated validation job and again by the file
         # write — and a foreachBatch append's re-read replays the
         # micro-batch source
         with pins() as pin:
             df = pin(df)
-            if not merge_schema and not ident:
-                adds = self._write_files(self._check_schema(df, meta), meta)
-                while True:
-                    v = self.versions()[-1] + 1
-                    if self._commit([{"op": "append"}, *adds], v):
-                        self._maybe_checkpoint(v)
-                        return
+            written: dict = {}
 
-            # evolving path: the schema action and/or the identity mark must
-            # be derived AT the pinned base, so a lost race recomputes both
             def attempt(meta, live, base):
                 ident = meta.get("identity")
+                if ident and ident["col"] in df.columns:
+                    raise ValueError(
+                        f"identity column '{ident['col']}' is GENERATED "
+                        f"ALWAYS — it must not be provided on append")
+                if not merge_schema and not ident:
+                    if written.get("meta") != meta:
+                        written["meta"] = meta
+                        written["adds"] = self._write_files(
+                            self._check_schema(df, meta), meta)
+                    return [{"op": "append"}, *written["adds"]], None
                 dfx = df
                 if ident:
                     # distributed assignment from the CURRENT mark; the
