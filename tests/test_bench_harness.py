@@ -10,7 +10,9 @@ unchanged code and only a judge re-run could tell).
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
 
 import bench
 
@@ -189,6 +191,29 @@ class TestRotation:
              "detail": "BENCH_spread.json"},
             separators=(",", ":"))
         assert len(line) <= 1800
+
+
+def test_ab_bench_alternates_which_tree_runs_first(monkeypatch, capsys):
+    """tools/ab_bench.py runs A first on even rounds and B first on odd
+    ones (A,B,B,A,...), and reports how many round pairs B won."""
+    spec = importlib.util.spec_from_file_location(
+        "ab_bench", os.path.join(os.path.dirname(bench.__file__), "tools",
+                                 "ab_bench.py"))
+    ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab)
+    calls: list[str] = []
+    secs = {"A": iter([2.0, 2.0, 2.0, 2.0]), "B": iter([1.0, 3.0, 1.0, 1.0])}
+
+    def fake_run_subset(tree, queries, sf_dir, cpus):
+        calls.append(tree)
+        return {q: next(secs[tree]) for q in queries}
+
+    monkeypatch.setattr(ab, "run_subset", fake_run_subset)
+    assert ab.main(["--a", "A", "--b", "B", "--rounds", "4", "q1"]) == 0
+    assert calls == ["A", "B", "B", "A", "A", "B", "B", "A"]
+    out = capsys.readouterr().out.splitlines()
+    assert "B won 3/4 pairs" in out[-2]
+    assert json.loads(out[-1])["q1"]["b_wins"] == 3
 
 
 def test_census_marks_a_leaking_run_and_clears_the_cache(spark, capsys):

@@ -3329,20 +3329,35 @@ def test_read_col_in_probes_without_a_job(spark, tmp_path):
     assert tt.read_col_in("name", []).count() == 0
 
 
-def test_merge_upsert_metadata_runs_one_query(spark, tmp_path):
-    """A merge on a table with stats and bloom columns runs 3 SQL
-    executions: the pruner's probe collect, the data write and the one
-    bloom fold (stats come from the footers; there were 5 when the
-    stats and each bloom ran their own query)."""
+@pytest.mark.parametrize("change_feed", [False, True],
+                         ids=["cdf_off", "cdf_on"])
+@pytest.mark.parametrize("op", ["merge_upsert", "merge_when",
+                                "apply_changes", "delete_keys"])
+def test_merge_upsert_metadata_runs_one_query(spark, tmp_path, op,
+                                              change_feed):
+    """A key-set DML commit on a table with stats and bloom columns runs
+    3 SQL executions: the pruner's probe collect, the data write and the
+    one bloom fold (stats come from the footers; there were 5 when the
+    stats and each bloom ran their own query). The change feed adds its
+    one write. Every key-set op shares the count."""
     df = spark.range(0, 300).select(
         F.col("id").alias("k"), (F.col("id") % 9).cast("int").alias("g"),
         (F.col("id") % 23).cast("string").alias("name"))
     tt = TxTable(spark, str(tmp_path / "t"))
-    tt.create(df, "k", n_files=3, stats_cols=["g"], bloom_cols=["name"])
+    tt.create(df, "k", n_files=3, stats_cols=["g"], bloom_cols=["name"],
+              change_feed=change_feed)
     upd = spark.range(10, 20).select(
         F.col("id").alias("k"), F.lit(1).alias("g"),
         F.lit("x").alias("name"))
+    run = {"merge_upsert": lambda: tt.merge_upsert(upd),
+           "merge_when": lambda: tt.merge_when(upd),
+           "apply_changes": lambda: tt.apply_changes(
+               upd.withColumn("_change_type", F.lit("insert"))),
+           "delete_keys": lambda: tt.delete_keys(upd.select("k"))}[op]
     before = _last_execution_id(spark)
-    tt.merge_upsert(upd)
-    assert _last_execution_id(spark) - before == 3
-    assert tt.snapshot().where("name = 'x'").count() == 10
+    run()
+    assert _last_execution_id(spark) - before == 3 + change_feed
+    if op == "delete_keys":
+        assert tt.snapshot().where("k BETWEEN 10 AND 19").count() == 0
+    else:
+        assert tt.snapshot().where("name = 'x'").count() == 10

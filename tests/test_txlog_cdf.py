@@ -67,6 +67,23 @@ def test_merge_and_delete_change_capture(spark, orders, tmp_path):
         {"delete"}
     assert only_del.count() == dels.count()
 
+    # the same two commits through apply_changes — upserts only, then
+    # deletes only — give the same snapshots and feed rows; only the
+    # delete's op name differs
+    t2 = TxTable(spark, str(tmp_path / "t2"))
+    t2.create(orders, "o_orderkey", n_files=8, change_feed=True)
+    t2.apply_changes(updates.withColumn("_change_type",
+                                        F.lit("update_postimage")))
+    t2.apply_changes(orders.where("o_orderkey % 50 = 11")
+                     .withColumn("_change_type", F.lit("delete")))
+    for v in (1, 2):
+        assert _rows(t2.snapshot(v), orders.columns) == \
+            _rows(t.snapshot(v), orders.columns)
+    assert _rows(t2.read_changes(since_version=1), ALL) == \
+        _rows(expected, ALL)
+    assert [h["op"] for h in t.history()] == ["create", "merge", "delete"]
+    assert [h["op"] for h in t2.history()] == ["create", "merge", "merge"]
+
 
 def test_create_and_append_inserts_are_derived(spark, orders, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))

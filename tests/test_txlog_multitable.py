@@ -304,3 +304,29 @@ def test_rename_table_metadata_only(spark, tmp_path):
     # drop-purge of the renamed table removes its REAL directory
     cat.drop_table("orders_v3", purge=True)
     assert not os.path.isdir(str(tmp_path / "cat" / "tables" / "orders"))
+
+
+def test_drop_racing_a_rename_keeps_the_renamed_table(spark, tmp_path):
+    """A rename that lands between ``drop_table``'s name check and its
+    commit: the drop re-checks the name at the version it commits on
+    and raises KeyError, so the renamed table keeps its entry, its
+    directory and its rows (the drop used to commit over the vanished
+    name and purge the renamed table's directory)."""
+    root = str(tmp_path / "cat")
+    cat = TxCatalog(spark, root)
+    df = spark.createDataFrame([(k, float(k)) for k in range(20)],
+                               "k long, v double")
+    cat.create_table("orders", df, "k", n_files=2)
+    commit = cat._commit
+
+    def racing_commit(action, v):
+        cat._commit = commit                         # race once
+        TxCatalog(spark, root).rename_table("orders", "orders_v2")
+        return commit(action, v)
+
+    cat._commit = racing_commit
+    with pytest.raises(KeyError):
+        cat.drop_table("orders", purge=True)
+    assert cat.list_tables() == ["orders_v2"]
+    assert os.path.isdir(os.path.join(root, "tables", "orders"))
+    assert cat.table("orders_v2").snapshot().count() == 20

@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Alternating A/B bench between two checkouts (the r15-proven
 interleaved protocol): run ``bench.py <queries>`` (subset mode — no
-BENCH_spread.json write) alternately in tree A and tree B for N rounds,
-parse the per-query medians from stderr, and print per-tree medians +
-ratios. Interleaving cancels slow host drift; medians cancel run noise.
+BENCH_spread.json write) in tree A and tree B for N rounds, A first on
+even rounds and B first on odd ones, parse the per-query medians from
+stderr, and print per-tree medians, ratios and how many of the round
+pairs B won. Interleaving cancels slow host drift and alternating the
+first side cancels a run-order effect; medians cancel run noise.
 
 Usage:
     python tools/ab_bench.py --a /root/wt_old --b /root/repo \
@@ -40,7 +42,7 @@ def run_subset(tree: str, queries: list[str], sf_dir: str,
     return out
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--a", required=True, help="tree A (baseline/old)")
     ap.add_argument("--b", required=True, help="tree B (candidate/new)")
@@ -51,13 +53,14 @@ def main() -> int:
     ap.add_argument("--cpus",
                     default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("queries", nargs="+")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     results: dict[str, dict[str, list[float]]] = {
         "a": {q: [] for q in args.queries},
         "b": {q: [] for q in args.queries}}
+    sides = (("a", args.a), ("b", args.b))
     for r in range(args.rounds):
-        for label, tree in (("a", args.a), ("b", args.b)):
+        for label, tree in (sides if r % 2 == 0 else sides[::-1]):
             t = run_subset(tree, args.queries, args.sf_dir, args.cpus)
             for q, s in t.items():
                 results[label][q].append(s)
@@ -68,11 +71,13 @@ def main() -> int:
     for q in args.queries:
         ma = statistics.median(results["a"][q])
         mb = statistics.median(results["b"][q])
+        b_wins = sum(b < a for a, b in zip(results["a"][q],
+                                           results["b"][q]))
         summary[q] = {"a_median": round(ma, 3), "b_median": round(mb, 3),
-                      "b_over_a": round(mb / ma, 3),
+                      "b_over_a": round(mb / ma, 3), "b_wins": b_wins,
                       "a_runs": results["a"][q], "b_runs": results["b"][q]}
         print(f"{q}: A med {ma:.2f}s  B med {mb:.2f}s  "
-              f"ratio B/A {mb/ma:.3f}")
+              f"ratio B/A {mb/ma:.3f}  B won {b_wins}/{args.rounds} pairs")
     print(json.dumps(summary))
     return 0
 

@@ -138,6 +138,7 @@ the seam ``operators/merge.py`` needs, not a storage product.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
 import re
@@ -885,7 +886,6 @@ class TxTable:
                     else [mp.get(c, c) for c in partition_by]
         pcols = ([partition_by] if isinstance(partition_by, str)
                  else list(partition_by)) if partition_by else None
-        staging = os.path.join(self.data_dir, f".stage-{uuid.uuid4().hex}")
         if order_expr is not None:
             # Z-ORDER rewrite path (:meth:`optimize_zorder`): cluster
             # files on the interleaved-bit value instead of the key, so
@@ -911,32 +911,19 @@ class TxTable:
             # skip ROW GROUPS inside the files the log-level stats
             # couldn't prune — the second pruning tier, free at write
             ranged = ranged.sortWithinPartitions(key_col)
-        paths = []
         if pcols is not None:
             # ``__pvN`` are consumed by the directory layout, so the real
             # partition columns stay IN the file (snapshot reads need them)
             out = ranged
             for i, c in enumerate(pcols):
                 out = out.withColumn(f"__pv{i}", F.col(c))
-            (out.write.mode("overwrite")
+            paths = self._publish_staged(
+                out.write.mode("overwrite")
                 .partitionBy(*[f"__pv{i}" for i in range(len(pcols))])
-                .parquet(staging))
-            for dirpath, _, names in sorted(os.walk(staging)):
-                for name in sorted(names):
-                    if name.endswith(".parquet"):
-                        final = f"{uuid.uuid4().hex}.parquet"
-                        os.rename(os.path.join(dirpath, name),
-                                  os.path.join(self.data_dir, final))
-                        paths.append(final)
+                .parquet)
         else:
-            ranged.write.mode("overwrite").parquet(staging)
-            for name in sorted(os.listdir(staging)):
-                if name.endswith(".parquet"):
-                    final = f"{uuid.uuid4().hex}.parquet"
-                    os.rename(os.path.join(staging, name),
-                              os.path.join(self.data_dir, final))
-                    paths.append(final)
-        shutil.rmtree(staging, ignore_errors=True)
+            paths = self._publish_staged(
+                ranged.write.mode("overwrite").parquet)
         if not paths:
             return []
         # per-file rows, key min/max/null count, declared-column stats
@@ -1091,17 +1078,29 @@ class TxTable:
         if mp:
             changes = changes.select(
                 [F.col(c).alias(mp.get(c, c)) for c in changes.columns])
+        return [{"cdf": {"path": p}} for p in self._publish_staged(
+            changes.write.mode("overwrite").parquet, "cdf-")]
+
+    def _publish_staged(self, write, prefix: str = "") -> list[str]:
+        """THE staged publish of every file a write makes: ``write(dir)``
+        fills a private ``.stage-<uuid>`` directory under the data dir
+        (flat, or one sub-directory per partition tuple), then each
+        parquet part is renamed into the data dir as
+        ``<prefix><uuid>.parquet`` and the staging directory removed.
+        Returns the published names in staging order. The files are
+        invisible until a commit references them."""
         staging = os.path.join(self.data_dir, f".stage-{uuid.uuid4().hex}")
-        changes.write.mode("overwrite").parquet(staging)
-        actions = []
-        for name in sorted(os.listdir(staging)):
-            if name.endswith(".parquet"):
-                final = f"cdf-{uuid.uuid4().hex}.parquet"
-                os.rename(os.path.join(staging, name),
-                          os.path.join(self.data_dir, final))
-                actions.append({"cdf": {"path": final}})
+        write(staging)
+        names = []
+        for dirpath, _, parts in sorted(os.walk(staging)):
+            for part in sorted(parts):
+                if part.endswith(".parquet"):
+                    final = f"{prefix}{uuid.uuid4().hex}.parquet"
+                    os.rename(os.path.join(dirpath, part),
+                              os.path.join(self.data_dir, final))
+                    names.append(final)
         shutil.rmtree(staging, ignore_errors=True)
-        return actions
+        return names
 
     # ------------------------------------------------------------- reads
 
@@ -2726,6 +2725,63 @@ class TxTable:
                 return latest + 1
         return None
 
+    def _rewrite_keys(self, op: str, meta: dict, live: dict,
+                      ups: DataFrame | None, dels: DataFrame | None):
+        """THE copy-on-write key-set rewrite behind :meth:`merge_upsert`,
+        :meth:`apply_changes` and :meth:`delete_keys`: ``ups`` are
+        schema-checked rows to upsert and ``dels`` distinct keys to
+        delete, either may be None. Only the files whose range+bloom
+        stats can hold one of their keys are touched: those files' rows
+        minus the keys, plus ``ups``, are written as new files and the
+        touched files removed. Returns ``(actions, result, prune)`` for
+        :meth:`_transact`."""
+        key = meta["key_col"]
+        if dels is None:
+            keys = ups
+        elif ups is None:
+            keys = dels
+        else:
+            keys = ups.select(key).unionByName(dels).distinct()
+        prune = self._key_pruner(keys, key)
+        touched = prune(list(live.values()))
+        adds: list[dict] = []
+        if touched:
+            old = self._read_files(meta, touched)
+            keep = old.join(ups.select(key) if dels is None else keys,
+                            key, "left_anti")
+            adds = self._write_files(
+                keep if ups is None else keep.unionByName(ups), meta)
+        elif ups is not None:
+            adds = self._write_files(ups, meta)
+        cdf: list[dict] = []
+        if meta.get("change_feed"):
+            # row-level change capture over the TOUCHED files only
+            # (pruning is conservative, so they hold every existing
+            # affected key) — O(touched), like the rewrite
+            tagged = []                  # (rows, _change_type), feed order
+            if touched and ups is not None:
+                tagged.append((old.join(ups.select(key), key, "semi"),
+                               "update_preimage"))
+            if touched and dels is not None:
+                tagged.append((old.join(dels, key, "semi"), "delete"))
+            if touched and ups is not None:
+                old_keys = old.select(key)
+                tagged += [(ups.join(old_keys, key, "semi"),
+                            "update_postimage"),
+                           (ups.join(old_keys, key, "left_anti"), "insert")]
+            elif ups is not None:
+                tagged.append((ups, "insert"))
+            if tagged:
+                cdf = self._write_cdf(functools.reduce(
+                    DataFrame.unionByName,
+                    [rows.withColumn("_change_type", F.lit(kind))
+                     for rows, kind in tagged]), meta)
+        actions = [{"op": op}, *adds, *cdf,
+                   *({"remove": {"path": a["path"]}} for a in touched)]
+        return actions, {"files_scanned": len(live),
+                         "files_rewritten": len(touched),
+                         "files_untouched": len(live) - len(touched)}, prune
+
     def merge_upsert(self, updates: DataFrame,
                      txn: tuple[str, int] | None = None,
                      merge_schema: bool = False) -> dict:
@@ -2761,53 +2817,16 @@ class TxTable:
             updates = pin(updates)
 
             def attempt(meta, live, base):
-                key = meta["key_col"]
                 meta2, upd = self._merged_schema(meta, updates) \
                     if merge_schema else (meta, updates)
                 # validate + normalize to the table's column order so
                 # every data file carries the same physical layout
-                upd = self._check_schema(upd, meta2)
-                prune = self._key_pruner(upd, key)
-                touched = prune(list(live.values()))
-                if touched:
-                    old = self._read_files(meta2, touched)
-                    keep = old.join(upd.select(key), key, "left_anti")
-                    new_rows = keep.unionByName(upd)
-                else:
-                    new_rows = upd
-                adds = self._write_files(new_rows, meta2)
-                cdf = []
-                if meta2.get("change_feed"):
-                    # row-level change capture over the TOUCHED files
-                    # only (pruning is conservative, so they hold every
-                    # existing update key) — O(touched), like the rewrite
-                    if touched:
-                        old_keys = old.select(key)
-                        changes = (
-                            old.join(upd.select(key), key, "semi")
-                            .withColumn("_change_type",
-                                        F.lit("update_preimage"))
-                            .unionByName(
-                                upd.join(old_keys, key, "semi")
-                                .withColumn("_change_type",
-                                            F.lit("update_postimage")))
-                            .unionByName(
-                                upd.join(old_keys, key, "left_anti")
-                                .withColumn("_change_type",
-                                            F.lit("insert"))))
-                    else:
-                        changes = upd.withColumn("_change_type",
-                                                 F.lit("insert"))
-                    cdf = self._write_cdf(changes, meta2)
-                actions = [{"op": "merge"},
-                           *([{"meta": meta2}] if meta2 is not meta else []),
-                           *adds, *cdf,
-                           *({"remove": {"path": a["path"]}}
-                             for a in touched)]
-                return actions, {"files_scanned": len(live),
-                                 "files_rewritten": len(touched),
-                                 "files_untouched":
-                                     len(live) - len(touched)}, prune
+                actions, result, prune = self._rewrite_keys(
+                    "merge", meta2, live, self._check_schema(upd, meta2),
+                    None)
+                if meta2 is not meta:
+                    actions.insert(1, {"meta": meta2})
+                return actions, result, prune
 
             return self._transact(attempt, txn)
 
@@ -2932,10 +2951,10 @@ class TxTable:
                              "(read_changes' shape)")
         ord_col = F.col("_commit_version") \
             if "_commit_version" in changes.columns else F.lit(0)
-        # pin the NETTED batch (see merge_upsert): ups/dels/all_keys
-        # all derive from it, and each un-cached re-read would replay
-        # the micro-batch source (a Python data-source scan in the
-        # streaming replica) plus the netting window shuffle
+        # pin the NETTED batch (see merge_upsert): ups, dels and their
+        # key union all derive from it, and each un-cached re-read would
+        # replay the micro-batch source (a Python data-source scan in
+        # the streaming replica) plus the netting window shuffle
         with pins() as pin:
 
             def attempt(meta, live, base):
@@ -2952,46 +2971,7 @@ class TxTable:
                     .select(*cols), meta)
                 dels = last.where(F.col("_change_type") == "delete") \
                            .select(key).distinct()
-                all_keys = ups.select(key).unionByName(dels).distinct()
-                prune = self._key_pruner(all_keys, key)
-                touched = prune(list(live.values()))
-                if touched:
-                    old = self._read_files(meta, touched)
-                    new_rows = old.join(all_keys, key, "left_anti") \
-                                  .unionByName(ups)
-                else:
-                    new_rows = ups
-                adds = self._write_files(new_rows, meta)
-                cdf: list[dict] = []
-                if meta.get("change_feed"):
-                    if touched:
-                        old_hit = old.join(all_keys, key, "semi")
-                        old_keys = old_hit.select(key)
-                        out = (
-                            old_hit.join(ups.select(key), key, "semi")
-                            .withColumn("_change_type",
-                                        F.lit("update_preimage"))
-                            .unionByName(
-                                old_hit.join(dels, key, "semi")
-                                .withColumn("_change_type", F.lit("delete")))
-                            .unionByName(
-                                ups.join(old_keys, key, "semi")
-                                .withColumn("_change_type",
-                                            F.lit("update_postimage")))
-                            .unionByName(
-                                ups.join(old_keys, key, "left_anti")
-                                .withColumn("_change_type",
-                                            F.lit("insert"))))
-                    else:
-                        out = ups.withColumn("_change_type", F.lit("insert"))
-                    cdf = self._write_cdf(out, meta)
-                actions = [{"op": "merge"}, *adds, *cdf,
-                           *({"remove": {"path": a["path"]}}
-                             for a in touched)]
-                return actions, {"files_scanned": len(live),
-                                 "files_rewritten": len(touched),
-                                 "files_untouched":
-                                     len(live) - len(touched)}, prune
+                return self._rewrite_keys("merge", meta, live, ups, dels)
 
             return self._transact(attempt, txn)
 
@@ -3004,28 +2984,9 @@ class TxTable:
         with pins() as pin:
 
             def attempt(meta, live, base):
-                key = meta["key_col"]
-                ks = pin(keys.select(key).distinct())
-                prune = self._key_pruner(ks, key)
-                touched = prune(list(live.values()))
-                adds: list[dict] = []
-                cdf: list[dict] = []
-                if touched:
-                    old = self._read_files(meta, touched)
-                    adds = self._write_files(
-                        old.join(ks, key, "left_anti"), meta)
-                    if meta.get("change_feed"):
-                        cdf = self._write_cdf(
-                            old.join(ks, key, "semi")
-                            .withColumn("_change_type", F.lit("delete")),
-                            meta)
-                actions = [{"op": "delete"}, *adds, *cdf,
-                           *({"remove": {"path": a["path"]}}
-                             for a in touched)]
-                return actions, {"files_scanned": len(live),
-                                 "files_rewritten": len(touched),
-                                 "files_untouched":
-                                     len(live) - len(touched)}, prune
+                return self._rewrite_keys(
+                    "delete", meta, live, None,
+                    pin(keys.select(meta["key_col"]).distinct()))
 
             return self._transact(attempt)
 
@@ -3059,8 +3020,6 @@ class TxTable:
                 # file column kept so the pairs are per-file exact
                 old = self._read_files(meta, touched, keep_file_col="__file")
                 doomed = old.join(ks, key, "semi")
-                staging = os.path.join(self.data_dir,
-                                       f".stage-{uuid.uuid4().hex}")
                 # DVs are kilobytes by design, but a table-sized key set
                 # must not funnel through one writer task: hash-partition
                 # the pairs by touched FILE (~64 data files per DV file, so
@@ -3068,17 +3027,10 @@ class TxTable:
                 # pairs land wholly in one DV file, and the write scales
                 # out with the delete instead of coalescing to a task
                 n_dv = max(1, (len(touched) + 63) // 64)
-                doomed.select(F.col("__file"), F.col(key).alias("__key")) \
-                      .repartition(n_dv, F.col("__file")) \
-                      .write.mode("overwrite").parquet(staging)
-                dv_paths: list[str] = []
-                for part in sorted(os.listdir(staging)):
-                    if part.endswith(".parquet"):
-                        dvname = f"dv-{uuid.uuid4().hex}.parquet"
-                        os.rename(os.path.join(staging, part),
-                                  os.path.join(self.data_dir, dvname))
-                        dv_paths.append(dvname)
-                shutil.rmtree(staging, ignore_errors=True)
+                dv_paths = self._publish_staged(
+                    doomed.select(F.col("__file"), F.col(key).alias("__key"))
+                    .repartition(n_dv, F.col("__file"))
+                    .write.mode("overwrite").parquet, "dv-")
                 # one metadata-plane job: (dv file, data file) pairs +
                 # counts — one row per touched file, the same order as
                 # the merge's own stats collect
@@ -3867,6 +3819,20 @@ class TxCatalog:
         return _put_if_absent(os.path.join(self.log_dir, f"{v:08d}.json"),
                               json.dumps(action) + "\n")
 
+    def _transact(self, attempt) -> dict[str, dict]:
+        """THE catalog's optimistic-commit loop: each attempt takes the
+        newest catalog version as its BASE and calls ``attempt(entries)``
+        with the live tables at it; the returned action publishes at
+        exactly ``base + 1``. A lost race re-runs the attempt at the new
+        head, so every name check (exists, already exists) holds at the
+        version the commit lands on. Returns the entries of that base."""
+        while True:
+            base = max(self._versions(), default=-1)
+            entries = self._entries(base)
+            if self._commit(attempt(entries), base + 1):
+                self._maybe_checkpoint(base + 1)
+                return entries
+
     def _replay(self, upto: int | None = None) \
             -> tuple[dict[str, dict], dict[str, int], set[str]]:
         """``({name: create-action} of the LIVE tables, {table: pinned
@@ -3956,15 +3922,15 @@ class TxCatalog:
         t = TxTable(self.spark, path)
         t.create(df, key_col, n_files,
                  change_feed=change_feed)           # settles name races
-        while True:
-            v = (self._versions() or [-1])[-1] + 1
-            action = {"op": "create_table", "name": name,
-                      "key_col": key_col}
-            if dirname != name:
-                action["dir"] = dirname
-            if self._commit(action, v):
-                self._maybe_checkpoint(v)
-                return t
+
+        def attempt(entries):
+            if name in entries:
+                raise ValueError(f"table {name!r} already exists")
+            return {"op": "create_table", "name": name, "key_col": key_col,
+                    **({"dir": dirname} if dirname != name else {})}
+
+        self._transact(attempt)
+        return t
 
     def table(self, name: str) -> TxTable:
         entries = self._entries()
@@ -3981,30 +3947,30 @@ class TxCatalog:
         follow the new name; the old name frees immediately."""
         if not self._NAME_OK.match(new):
             raise ValueError(f"bad table name {new!r}")
-        while True:
-            v = self._versions()[-1] + 1
-            entries = self._entries(v - 1)
+
+        def attempt(entries):
             if old not in entries:
                 raise KeyError(f"no such table {old!r}")
             if new in entries:
                 raise ValueError(f"table {new!r} already exists")
-            if self._commit({"op": "rename_table", "from": old,
-                             "to": new}, v):
-                self._maybe_checkpoint(v)
-                return
+            return {"op": "rename_table", "from": old, "to": new}
+
+        self._transact(attempt)
 
     def drop_table(self, name: str, purge: bool = False) -> None:
-        entries = self._entries()
-        if name not in entries:
-            raise KeyError(f"no such table {name!r}")
-        dirname = entries[name].get("dir", name)
-        while True:
-            v = self._versions()[-1] + 1
-            if self._commit({"op": "drop_table", "name": name}, v):
-                self._maybe_checkpoint(v)
-                break
+        """Drop ``name`` from the catalog; ``purge=True`` also removes
+        the directory of the entry the commit actually dropped (a
+        renamed table keeps its original directory)."""
+
+        def attempt(entries):
+            if name not in entries:
+                raise KeyError(f"no such table {name!r}")
+            return {"op": "drop_table", "name": name}
+
+        entries = self._transact(attempt)
         if purge:
-            shutil.rmtree(os.path.join(self.tables_dir, dirname),
+            shutil.rmtree(os.path.join(self.tables_dir,
+                                       entries[name].get("dir", name)),
                           ignore_errors=True)
 
     # ----------------------------------------- cross-table transactions
@@ -4020,12 +3986,8 @@ class TxCatalog:
         """Append the pin entry for a COMMITTED transaction (the
         decision file already made it durable — this only advances the
         catalog's consistent-cut watermark)."""
-        while True:
-            v = (self._versions() or [-1])[-1] + 1
-            if self._commit({"op": "publish", "txn": txn_id,
-                             "tables": tables}, v):
-                self._maybe_checkpoint(v)
-                return
+        self._transact(lambda entries: {"op": "publish", "txn": txn_id,
+                                        "tables": tables})
 
     def read(self, name: str, catalog_version: int | None = None) \
             -> DataFrame:
